@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -370,84 +371,76 @@ def _table_inventory(spark: SparkSession, catalog: Catalog | None) -> list[tuple
     return out
 
 
-# Bare view names bound by bind_catalog_tables (vs user/session temp views):
-# these must be RE-replaced on re-registration so a table swap (REFRESH
-# MATERIALIZED VIEW, replace_table) re-points them at the new location —
-# and DROPPED when their table leaves the catalog (DROP TABLE, ROLLBACK),
-# otherwise the stale view keeps serving the deleted table's cached listing.
+# Bare view names the binder created (vs user/session temp views): a bare
+# `<table>` is bound when free or already the binder's, so a table swap
+# re-points it and a dropped table's bare view goes with it.
 _BOUND_BARE_NAMES: set[str] = set()
-_BOUND_QUALIFIED: set[str] = set()
 
 
-def bind_catalog_tables(spark: SparkSession, catalog: Catalog | None) -> None:
-    """Make every catalog table resolvable by name (the reference's B3 role:
-    schema.table -> engine-readable relation, query_remapper_table.go:93-110).
-    Registers `<schema>_<table>` always, and bare `<table>` when free or
-    previously bound by us; unbinds views for tables no longer present."""
-    if catalog is None:
-        return
-    existing = {
-        t.viewName for t in spark.sql("SHOW VIEWS").collect() if t.isTemporary
-    }
-    live_qualified: set[str] = set()
-    live_bare: set[str] = set()
-    for key, entry in catalog.tables().items():
-        schema, table = key.split(".", 1)
-        live_qualified.add(f"{schema}_{table}")
-        live_bare.add(table)
-        try:
-            df = spark.read.parquet(entry["location"])
-        except Exception:  # location vanished (dropped mid-flight)
-            continue
-        df.createOrReplaceTempView(f"{schema}_{table}")
-        if table not in existing or table in _BOUND_BARE_NAMES:
-            df.createOrReplaceTempView(table)
-            _BOUND_BARE_NAMES.add(table)
-    # plain (non-materialized) views: re-executed plans over the live tables,
-    # registered in dependency order (views over views retry next pass)
+def bind_catalog_table(spark: SparkSession, key: str, entry: dict | None) -> bool:
+    """Make one catalog table resolvable by name at the snapshot ``entry``
+    points at (the reference's B3 role: schema.table -> engine-readable
+    relation, query_remapper_table.go:93-110): `<schema>_<table>` always,
+    bare `<table>` when free or bound by the binder. ``entry`` None (the
+    table left the catalog) unbinds both. False when the location is gone
+    (dropped mid-flight)."""
+    schema, table = key.split(".", 1)
+    if entry is None:
+        spark.catalog.dropTempView(f"{schema}_{table}")
+        if table in _BOUND_BARE_NAMES:
+            spark.catalog.dropTempView(table)
+        return True
+    try:
+        df = spark.read.parquet(entry["location"])
+    except Exception:  # noqa: BLE001 — location vanished
+        return False
+    df.createOrReplaceTempView(f"{schema}_{table}")
+    if table in _BOUND_BARE_NAMES or not any(
+        v.isTemporary and v.viewName == table
+        for v in spark.sql(f"SHOW VIEWS LIKE '{table}'").collect()
+    ):
+        df.createOrReplaceTempView(table)
+        _BOUND_BARE_NAMES.add(table)
+    return True
+
+
+def bind_catalog_views(
+    spark: SparkSession, views: dict[str, dict], bound: set[str],
+    qualify: Callable[[str], str],
+) -> set[str]:
+    """Bind every plain (non-materialized) catalog view as `<schema>_<name>`
+    and `<name>`: each is re-planned over the currently bound tables, in
+    dependency order (views over views retry next pass); ``qualify`` maps
+    `schema.table` references to the bound names. Names in ``bound`` (the
+    previous call's result) whose view left the catalog are dropped.
+    Returns the names bound now."""
     from bemidb_spark.pgcompat.transpiler import transpile
 
-    qual_keys = [k for k in list(catalog.tables()) + list(catalog.views())
-                 if "." in k]
-    qual_re = (
-        re.compile(r"\b(" + "|".join(re.escape(k) for k in sorted(qual_keys)) + r")\b")
-        if qual_keys else None
-    )
-
-    def _qualify(sql: str) -> str:
-        if qual_re is None or "." not in sql:
-            return sql
-        return qual_re.sub(lambda m: m.group(1).replace(".", "_"), sql)
-
-    pending = list(catalog.views().items())
+    live: set[str] = set()
+    pending = list(views.items())
     for _ in range(len(pending) + 1):
         still = []
         for key, entry in pending:
             schema, name = key.split(".", 1)
-            live_qualified.add(f"{schema}_{name}")
-            live_bare.add(name)
             try:
-                df = spark.sql(transpile(_qualify(entry["definition"])))
+                df = spark.sql(transpile(qualify(entry["definition"])))
             except Exception:
                 still.append((key, entry))
                 continue
-            df.createOrReplaceTempView(f"{schema}_{name}")
-            df.createOrReplaceTempView(name)
+            for view in (f"{schema}_{name}", name):
+                df.createOrReplaceTempView(view)
+                live.add(view)
             _BOUND_BARE_NAMES.add(name)
         if not still:
             break
         pending = still
-    for name in _BOUND_QUALIFIED - live_qualified:
+    for name in bound - live:
         spark.catalog.dropTempView(name)
-    for name in _BOUND_BARE_NAMES - live_bare:
-        spark.catalog.dropTempView(name)
-    _BOUND_QUALIFIED.clear()
-    _BOUND_QUALIFIED.update(live_qualified)
-    _BOUND_BARE_NAMES.intersection_update(live_bare)
+    return live
 
 
 # Every session-independent emulation view _register_emulation_views
-# creates, by name (bind_catalog_tables' data views are NOT here — their
+# creates, by name (bound catalog tables and views are NOT here — their
 # bind/unbind semantics are per-session). Used to capture analyzed plans
 # for the fast re-registration path; test_pgcompat's
 # test_pg_catalog_fast_registration_matches_slow guards against drift.
@@ -466,7 +459,7 @@ _STATIC_VIEW_NAMES = [
 ] + list(_EMPTY_TABLES)
 
 # The inventory/catalog-derived subset of _STATIC_VIEW_NAMES — rebuilt on
-# every catalog-version bump; everything else is session-independent and
+# every schema_version bump; everything else is session-independent and
 # skipped once registered (static_done).
 _DYNAMIC_VIEW_NAMES = [
     "pg_namespace", "pg_class", "pg_attribute", "pg_matviews", "pg_views",
@@ -476,7 +469,7 @@ _DYNAMIC_VIEW_NAMES = [
 ]
 
 # (key, {view name -> analyzed logical plan}). The emulation views are fully
-# determined by (catalog identity+version, table inventory), so their
+# determined by (catalog root + schema_version, table inventory), so their
 # ANALYZED plans — all rooted in LocalRelations — are session-portable:
 # re-registering ~45 views in a fresh per-connection SparkSession drops from
 # ~1.4 s of parse/analysis to ~0.1 s of plan wrapping. This is the dominant
@@ -485,82 +478,21 @@ _DYNAMIC_VIEW_NAMES = [
 # snapshot (no lock needed: replacement is a single assignment).
 _PLAN_CACHE: list = [None]  # [(key, {name: plan})] or [None]
 
-# Per-SparkSession registration memo: id(session) -> the key of the views it
-# last registered. register_pg_catalog is on every connection's setup path
-# AND re-runs after every DML (~0.5-1.3 s of py4j view re-creation each
-# time); when the key is unchanged the session's views are already exactly
-# right, so the whole rebuild is skipped. id() reuse after a session is
-# GC'd is guarded by checking one sentinel view still exists.
-_SESSION_KEYS: dict[int, tuple] = {}
-# Sessions whose SESSION-INDEPENDENT views (fixed-content catalogs, empty
-# tables) are already registered: on a catalog-version bump only the
-# inventory-derived views need rebuilding — the static set is identical.
-_STATIC_DONE: set[int] = set()
-# id(session) -> (id(catalog), version) last BOUND into the session's view
-# namespace. Binding (bind_catalog_tables: table locations -> temp views)
-# must track catalog identity/version — two catalogs with identical
-# inventories still point at different data. The emulation VIEWS above it do
-# not: they derive purely from (inventory, matview/view definitions), so
-# their memo (_SESSION_KEYS/_PLAN_CACHE) is keyed on that content alone
-# (r10: every fresh scratch catalog and every same-shape DML version bump
-# was a spurious ~0.3-0.4 s re-capture of the dynamic views under the old
-# identity+version key).
-_SESSION_BOUND: dict[int, tuple] = {}
-
-
-def forget_session(spark: SparkSession) -> None:
-    """Drop a session's registration-memo entries (connection teardown).
-
-    Without this every isolated per-connection fork leaves one _SESSION_KEYS
-    entry (holding the full (schema, table, columns) inventory tuple) plus a
-    _STATIC_DONE id for the server's lifetime — an unbounded slow leak
-    proportional to connection count x catalog size (ADVICE r9)."""
-    sid = id(spark)
-    _SESSION_KEYS.pop(sid, None)
-    _STATIC_DONE.discard(sid)
-    _SESSION_BOUND.pop(sid, None)
-
-
-def _catalog_view_state(catalog: Catalog | None) -> tuple:
-    """Everything beyond the table inventory that the dynamic emulation
-    views read: matview/view definitions (pg_matviews, pg_views,
-    information_schema_views render them). repr of the whole entry is
-    deliberately conservative — any entry change rebuilds, which is always
-    safe and matches the old version-keyed behavior's rebuild frequency."""
-    if catalog is None:
-        return ((), ())
-    try:
-        return (
-            tuple(sorted((k, repr(e)) for k, e in catalog.matviews().items())),
-            tuple(sorted((k, repr(e)) for k, e in catalog.views().items())),
-        )
-    except Exception:  # noqa: BLE001 — unreadable catalog: never memo-hit
-        return (("unreadable", id(catalog)),)
-
-
 def register_pg_catalog(spark: SparkSession, catalog: Catalog | None = None) -> None:
-    """(Re)build every emulation view from current catalog + session state."""
-    sid = id(spark)
-    bind_key = (id(catalog), catalog.version() if catalog is not None else -1)
-    if _SESSION_BOUND.get(sid) != bind_key:
-        bind_catalog_tables(spark, catalog)
-        _SESSION_BOUND[sid] = bind_key
-    # inventory computed post-bind: bind drops stale views for tables that
-    # left the catalog, which a pre-bind inventory would still list
+    """(Re)build every emulation view from the current catalog + session
+    state. Callers decide when: PgSession registers on first use and again
+    only when the catalog's schema_version moves. Catalog tables are bound
+    separately (bind_catalog_table); the inventory lists them from the
+    catalog itself."""
+    # schema_version read BEFORE the inventory: a DDL racing this call can
+    # only make the cache key older than the content, never newer
+    schema_version = catalog.schema_version() if catalog is not None else -1
     inventory = _table_inventory(spark, catalog)
     key = (
+        catalog.root if catalog is not None else None,
+        schema_version,
         tuple((s, t, tuple(map(tuple, cols))) for s, t, cols in inventory),
-        _catalog_view_state(catalog),
     )
-    if _SESSION_KEYS.get(sid) == key:
-        try:
-            if spark.catalog.tableExists("pg_keywords_view"):  # id-reuse guard
-                return
-        except Exception:  # noqa: BLE001 — fall through to a full rebuild
-            pass
-        _SESSION_KEYS.pop(sid, None)
-        _STATIC_DONE.discard(sid)
-    _SESSION_KEYS.pop(sid, None)
     snapshot = _PLAN_CACHE[0]
     if snapshot is not None and snapshot[0] == key:
         try:
@@ -568,28 +500,22 @@ def register_pg_catalog(spark: SparkSession, catalog: Catalog | None = None) -> 
             ofrows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
             for name, plan in snapshot[1].items():
                 ofrows(jspark, plan).createOrReplaceTempView(name)
-            _SESSION_KEYS[sid] = key
-            _STATIC_DONE.add(sid)
             return
         except Exception:  # noqa: BLE001 — internal API drift: rebuild fully
             pass
-    static_done = False
-    if sid in _STATIC_DONE:
-        try:
-            static_done = spark.catalog.tableExists("pg_keywords_view")
-        except Exception:  # noqa: BLE001 — rebuild the static set too
-            static_done = False
-    # When the static set was skipped, its plans are unchanged — reuse them
-    # from the previous snapshot and re-capture only the inventory-derived
-    # views (~10 instead of ~80; the full per-view capture was 0.36 s of
-    # py4j on every post-DML re-registration).
+    # A session that already holds the static set rebuilds only the
+    # inventory-derived views and reuses the static plans from the previous
+    # snapshot (~10 views instead of ~80).
+    try:
+        static_done = spark.catalog.tableExists("pg_keywords_view")
+    except Exception:  # noqa: BLE001 — rebuild the static set too
+        static_done = False
     prior = snapshot[1] if (static_done and snapshot is not None) else None
     if prior is not None and not all(n in prior for n in _STATIC_VIEW_NAMES):
         prior = None
     if prior is None:
         static_done = False
     _register_emulation_views(spark, catalog, inventory, static_done=static_done)
-    _STATIC_DONE.add(sid)
     try:
         capture = _DYNAMIC_VIEW_NAMES if prior is not None else _STATIC_VIEW_NAMES
         plans = dict(prior) if prior is not None else {}
@@ -600,7 +526,6 @@ def register_pg_catalog(spark: SparkSession, catalog: Catalog | None = None) -> 
         _PLAN_CACHE[0] = (key, plans)
     except Exception:  # noqa: BLE001 — capture failure only disables the cache
         _PLAN_CACHE[0] = None
-    _SESSION_KEYS[sid] = key
 
 
 # pg attlen per type name (fixed byte widths; -1 = varlena)

@@ -63,6 +63,11 @@ _DELETE_RE = re.compile(
     r"^\s*DELETE\s+FROM\s+([A-Za-z_][\w.\"]*)(?:\s+WHERE\s+(.+?))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+# `INSERT INTO t AS alias …`: pg's target alias (AS is mandatory there)
+_INSERT_ALIAS_RE = re.compile(
+    r"^(\s*INSERT\s+INTO\s+[A-Za-z_][\w.\"]*)\s+AS\s+([A-Za-z_]\w*)",
+    re.IGNORECASE,
+)
 _EXCLUDED_SET_RE = re.compile(
     r'^\s*"?([\w]+)"?\s*=\s*EXCLUDED\s*\.\s*"?([\w]+)"?\s*$', re.IGNORECASE
 )
@@ -332,10 +337,13 @@ def _merge_conflict_updates(
     keys: list[str],
     sets: list[str],
     where: str | None = None,
+    target_names: tuple[str, ...] = (),
 ) -> tuple[DataFrame, int | None, DataFrame]:
     """Evaluate ON CONFLICT SET expressions with pg scoping: for rows whose
-    key already exists, bare columns bind to the OLD row and ``EXCLUDED.col``
-    to the proposed row; unmatched rows insert as proposed. One join on the
+    key already exists, bare and target-qualified columns (``kv.n``,
+    ``public.kv.n``, or ``t.n`` under ``INSERT INTO kv AS t`` — one of
+    ``target_names``) bind to the OLD row and ``EXCLUDED.col`` to the
+    proposed row; unmatched rows insert as proposed. One join on the
     conflict key (the proposed side is client-literal-sized, so Catalyst
     broadcasts it); the result feeds the partition-pruned upsert.
 
@@ -349,13 +357,27 @@ def _merge_conflict_updates(
     from bemidb_spark.pgcompat.transpiler import _shield_strings, _unshield
 
     fields = {f.name: f for f in target.schema.fields}
+    q = r"[`\"]?"  # transpile turns "ident" into `ident`
+    target_ref = re.compile(
+        r"(?<![\w.`\"])(?:" + "|".join(
+            r"\s*\.\s*".join(q + re.escape(part) + q for part in name.split("."))
+            for name in target_names
+        ) + r")\s*\.\s*" + q + r"(\w+)" + q,
+        re.IGNORECASE,
+    ) if target_names else None
+
+    def _old_ref(m: re.Match) -> str:
+        col = next((c for c in fields if c.lower() == m.group(1).lower()), None)
+        return f"__old_{col}" if col else m.group(0)
 
     def _scope(expr_sql: str) -> str:
         shielded, lits = _shield_strings(transpile(expr_sql.strip()))
         shielded = re.sub(
-            r"\bEXCLUDED\s*\.\s*\"?(\w+)\"?", r"__new_\1", shielded,
+            r"\bEXCLUDED\s*\.\s*" + q + r"(\w+)" + q, r"__new_\1", shielded,
             flags=re.IGNORECASE,
         )
+        if target_ref is not None:
+            shielded = target_ref.sub(_old_ref, shielded)
         for c in fields:  # bare refs -> the old (target) row
             shielded = re.sub(
                 rf'(?<![\w."])({re.escape(c)})\b(?!\s*\()', f"__old_{c}",
@@ -409,6 +431,7 @@ def _run_insert(
     returning: str | None,
     values_sql: str | None = None,
     source_sql: str | None = None,
+    alias: str | None = None,
 ) -> tuple[str, int, DataFrame | None]:
     """Shared INSERT executor for VALUES and SELECT sources, with the full ON
     CONFLICT surface on either. An ``INSERT … SELECT`` source is an arbitrary
@@ -466,8 +489,10 @@ def _run_insert(
     if full_row:
         effective, n_eff, ret_rows = typed, None, typed
     else:
+        # pg: an alias hides the table's own name
+        names = (alias,) if alias else (table, f"{schema}.{table}")
         effective, n_eff, ret_rows = _merge_conflict_updates(
-            spark, target, typed, conflict_keys, sets, where
+            spark, target, typed, conflict_keys, sets, where, names
         )
     n = n_eff if n_eff is not None else typed.count()
     ret = _project_returning(spark, ret_rows, returning)
@@ -1174,14 +1199,21 @@ def handle_dml(
         return _run_insert(spark, catalog, m, returning, source_sql=source)
 
     if head == "INSERT":
+        alias = None
+        am = _INSERT_ALIAS_RE.match(sql)
+        if am:
+            alias = am.group(2)
+            sql = am.group(1) + sql[am.end():]
         m = _INSERT_RE.match(sql)
         if m:
-            return _run_insert(spark, catalog, m, returning, values_sql=m.group(3))
+            return _run_insert(spark, catalog, m, returning,
+                               values_sql=m.group(3), alias=alias)
         m = _INSERT_SELECT_RE.match(sql)
         if not m:
             raise DmlError(
                 "unsupported INSERT form (expected INSERT … VALUES / SELECT …)")
-        return _run_insert(spark, catalog, m, returning, source_sql=m.group(3))
+        return _run_insert(spark, catalog, m, returning,
+                           source_sql=m.group(3), alias=alias)
 
     if head == "DELETE":
         m = _DELETE_USING_RE.match(sql)

@@ -22,11 +22,17 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from bemidb_spark.pgcompat.catalog_views import PG_DATABASE, PG_USER, register_pg_catalog
+from bemidb_spark.pgcompat.catalog_views import (
+    PG_DATABASE,
+    PG_USER,
+    bind_catalog_table,
+    bind_catalog_views,
+    register_pg_catalog,
+)
 from bemidb_spark.pgcompat.permissions import extract_permissions, shadowed_permissions
 from bemidb_spark.pgcompat.transpiler import transpile
 from bemidb_spark.sources import matview
-from bemidb_spark.sources.catalog import Catalog
+from bemidb_spark.sources.catalog import Catalog, versions
 
 # Byte-for-byte the reference's version() banner
 # (query_remapper_function.go:37) — clients parse this string, and a drop-in
@@ -82,6 +88,10 @@ def _pg_default_names(df: DataFrame) -> DataFrame:
 _PG_CATALOG_HINT_RE = re.compile(
     r"(?i)\bpg_|information_schema|::\s*regclass|\bregclass\b"
 )
+
+# A temp-view reference in an analyzed plan's tree string — subquery plans
+# and views over views print too, so these are every view a plan expands.
+_VIEW_NODE_RE = re.compile(r"View \(`([^`]+)`")
 
 _AVG_VEC_ERR_RE = re.compile(
     r'Cannot resolve "avg\((.+?)\)" due to data type mismatch.*?'
@@ -311,6 +321,9 @@ class PgSession:
         # pg server's prepared-statement cache buys — at SF0.1 that fixed
         # per-query planning cost dominates the suite (see bench.py).
         self._plan_cache: dict[str, DataFrame] = {}
+        # statement text -> the catalog tables its cached plan reads; a data
+        # commit evicts only the plans whose set holds the written table
+        self._plan_deps: dict[str, frozenset[str]] = {}
         self._sql_prepared: dict[str, str] = {}  # SQL-level PREPARE bodies
         self._cursors: dict[str, _Cursor] = {}  # DECLARE'd server-side cursors
         self._ivf_indexes: dict[str, tuple[str, str]] = {}  # ivfflat: name -> (table, col)
@@ -319,9 +332,16 @@ class PgSession:
         self._txn_local_restore: dict[str, str | None] = {}  # SET LOCAL undo
         self._holds_txn_lock = False  # this session owns _TXN_WRITE_LOCK
         self._savepoints: dict[str, dict] = {}  # insertion-ordered pins
-        self._catalog_version = catalog.version() if catalog is not None else 0
+        # Catalog binding (_sync_catalog): the state as of the last sync,
+        # each bound table's key -> the table version bound, the plain-view
+        # names bound, and the name maps of the synced schema_version.
+        self._state: dict = {"tables": {}}
+        self._versions: dict = versions(self._state)
+        self._schema_version: int | None = None
+        self._bound: dict[str, int] = {}
+        self._bound_views: set[str] = set()
+        self._names: dict[str, str] = {}  # bindable name -> catalog key
         self._qualify_re: re.Pattern | None = None
-        self._qualify_re_version: int | None = None
         # Advertised pg version. Default 17.0 (the surface this engine
         # emulates), but configurable: pg_dump refuses any server NEWER than
         # itself, so a deployment whose tooling is e.g. pg 15 advertises
@@ -339,21 +359,144 @@ class PgSession:
             # forwards its engine's setting of the same name)
             "default_null_order": "nulls_last",
         }
-        # pg_catalog emulation views: EAGER on a shared session (embedder/
-        # gate paths may read them without going through execute()), LAZY on
-        # an isolated fork — the per-connection replay of ~40 views costs
-        # ~0.7 s of py4j roundtrips on the wire handshake critical path, and
-        # most statements (all of TPC-H) never touch pg_catalog. The first
-        # statement that needs the views triggers registration via the
-        # analysis-retry funnel in _sql_vector_aware; every DDL arm that
-        # rebuilds the views marks the session ready as a side effect.
+        # Catalog tables and the pg_catalog emulation views: EAGER on a
+        # shared session (embedder/gate paths may read them without going
+        # through execute()), LAZY on an isolated fork — the per-connection
+        # replay of ~40 views costs ~0.7 s of py4j roundtrips on the wire
+        # handshake critical path, and most statements (all of TPC-H) never
+        # touch pg_catalog or a catalog table. A fork binds a table when a
+        # statement names it and registers the views when one references
+        # them (_bind_statement, with _sql_vector_aware's analysis retry as
+        # the safety net).
         self._pg_catalog_ready = False
+        self._sync_catalog()
         if not isolate:
             self._register_catalog_views()
 
     def _register_catalog_views(self) -> None:
+        """Register the pg_catalog emulation views. pg_class lists the plain
+        catalog views from the session's namespace, so those bind first."""
+        if self._state.get("views") or self._bound_views:
+            self._bind_views()
         register_pg_catalog(self.spark, self.catalog)
         self._pg_catalog_ready = True
+
+    # ------------------------------------------------------ catalog binding
+    def _sync_catalog(self) -> None:
+        """Catch up with the catalog, reading its state once.
+
+        A data commit moves one table's version: the session rebinds that
+        table if it bound it and evicts only the cached plans that read it —
+        a session that never read the table pays nothing. A schema_version
+        move (DDL) also drops every plan, re-derives the name maps and, in a
+        session that registered them, rebuilds the pg_catalog views."""
+        if self.catalog is None:
+            return
+        state = self.catalog.snapshot_state()
+        self._state, self._versions = state, versions(state)
+        moved = {k for k, v in self._bound.items()
+                 if self._versions["tables"].get(k) != v}
+        ddl = self._versions["schema"] != self._schema_version
+        if ddl:
+            if self._schema_version is not None:
+                self.invalidate_plans()
+            self._schema_version = self._versions["schema"]
+            self._index_names()
+        if moved:
+            self._bind(moved)
+            self._evict(moved)
+        if not self._isolated:
+            self._bind(set(state["tables"]) - set(self._bound))
+        if ddl and self._pg_catalog_ready:
+            self._register_catalog_views()
+        elif (moved or ddl) and self._bound_views:
+            self._bind_views()
+
+    def _index_names(self) -> None:
+        """Name maps for the synced schema: every name a catalog table or
+        view binds under -> its key, and the schema.table qualifier regex."""
+        keys = sorted(k for k in list(self._state["tables"])
+                      + list(self._state.get("views", {})) if "." in k)
+        self._names = {}
+        # both spellings: schema.table and "schema"."table" (clients
+        # double-quote fully-qualified refs, incl. 3-part column refs)
+        alts = []
+        for k in keys:
+            schema, table = k.split(".", 1)
+            self._names[f"{schema}_{table}".lower()] = k
+            self._names.setdefault(table.lower(), k)
+            alts.append(re.escape(k))
+            alts.append(re.escape(f'"{schema}"."{table}"'))
+        self._qualify_re = (
+            re.compile(r'(?:\b|(?="))(' + "|".join(alts) + r")(?![\w\"])")
+            if keys else None
+        )
+
+    def _bind(self, keys: set[str]) -> None:
+        """(Re)bind catalog tables at their synced version; a table that
+        left the catalog is unbound."""
+        for key in keys:
+            entry = self._state["tables"].get(key)
+            if bind_catalog_table(self.spark, key, entry) and entry is not None:
+                self._bound[key] = self._versions["tables"].get(key, 0)
+            else:
+                self._bound.pop(key, None)
+
+    def _bind_views(self) -> None:
+        """Bind every plain catalog view — over all catalog tables, since a
+        view may read any of them."""
+        self._bind(set(self._state["tables"]) - set(self._bound))
+        self._bound_views = bind_catalog_views(
+            self.spark, self._state.get("views", {}), self._bound_views,
+            self._qualify_catalog_tables)
+
+    def _bind_named(self, words: set[str]) -> bool:
+        """Bind the catalog tables and views these names refer to that the
+        session has not bound yet; True when anything was bound."""
+        keys = {self._names[w] for w in words if w in self._names}
+        views = self._state.get("views", {})
+        if not self._bound_views and any(k in views for k in keys):
+            self._bind_views()
+            return True
+        todo = {k for k in keys if k not in views and k not in self._bound}
+        self._bind(todo)
+        return bool(todo)
+
+    def _bind_statement(self, text: str) -> None:
+        """Make what a statement names resolvable before it is analyzed: the
+        pg_catalog views (a fork registers them on first reference) and the
+        catalog tables and views it names. The analysis retry in
+        _sql_vector_aware catches references this scan cannot see."""
+        if not self._pg_catalog_ready and _PG_CATALOG_HINT_RE.search(text):
+            self._register_catalog_views()
+        if self._names:
+            self._bind_named(set(re.findall(r"\w+", text.lower())))
+
+    def _plan_reads(self, df: DataFrame) -> frozenset[str]:
+        """The bound catalog tables an analyzed plan reads, from the views
+        its tree expands."""
+        if not self._bound:
+            return frozenset()
+        tree = df._jdf.queryExecution().analyzed().treeString()
+        keys = {self._names.get(n.lower()) for n in _VIEW_NODE_RE.findall(tree)}
+        return frozenset(k for k in keys if k in self._bound)
+
+    def _cache_plan(self, text: str, df: DataFrame) -> None:
+        if len(self._plan_cache) >= self.PLAN_CACHE_MAX:
+            oldest = next(iter(self._plan_cache))
+            del self._plan_cache[oldest]
+            self._plan_deps.pop(oldest, None)
+        self._plan_cache[text] = df
+        reads = self._plan_reads(df)
+        if reads:
+            self._plan_deps[text] = reads
+
+    def _evict(self, keys: set[str]) -> None:
+        """Drop the cached plans that read any of these catalog tables
+        (pg's relcache invalidation: per relation, not per database)."""
+        for text in [t for t, reads in self._plan_deps.items() if reads & keys]:
+            del self._plan_deps[text]
+            self._plan_cache.pop(text, None)
 
     def _bridge_parent_views(self, parent: SparkSession) -> None:
         """Alias the embedder's global temp views into this forked session.
@@ -469,25 +612,25 @@ class PgSession:
         )
         if m:
             name = m.group(1).split(".")[-1]
+            definition = transpile(m.group(2))
+            self._bind_statement(definition)
             matview.create_materialized_view(
-                self.spark, self.catalog, name, transpile(m.group(2)),
+                self.spark, self.catalog, name, definition,
                 with_data=m.group(3) is None,
             )
-            self._register_catalog_views()
             return self._ok("CREATE MATERIALIZED VIEW")
         m = re.match(
             r"\s*REFRESH\s+MATERIALIZED\s+VIEW\s+(CONCURRENTLY\s+)?([\w.]+)\s*;?\s*$",
             sql, re.IGNORECASE,
         )
         if m:
+            name = m.group(2).split(".")[-1]
+            self._bind_statement(self.catalog.matview_definition(
+                matview.MATVIEW_SCHEMA, name))
             matview.refresh_materialized_view(
-                self.spark, self.catalog, m.group(2).split(".")[-1],
+                self.spark, self.catalog, name,
                 concurrently=m.group(1) is not None,
             )
-            # The refresh swapped the matview to a new location: re-point the
-            # shared temp views at it (otherwise they still reference the
-            # deleted directory) just like the CREATE/DROP branches do.
-            self._register_catalog_views()
             return self._ok("REFRESH MATERIALIZED VIEW")
         m = re.match(
             r"\s*DROP\s+MATERIALIZED\s+VIEW\s+(?:IF\s+EXISTS\s+)?([\w.]+)\s*;?\s*$",
@@ -495,7 +638,6 @@ class PgSession:
         )
         if m:
             matview.drop_materialized_view(self.catalog, m.group(1).split(".")[-1])
-            self._register_catalog_views()
             return self._ok("DROP MATERIALIZED VIEW")
         m = re.match(
             r"\s*ALTER\s+MATERIALIZED\s+VIEW\s+([\w.]+)\s+RENAME\s+TO\s+([\w.]+)\s*;?\s*$",
@@ -505,7 +647,6 @@ class PgSession:
             matview.rename_materialized_view(
                 self.catalog, m.group(1).split(".")[-1], m.group(2).split(".")[-1]
             )
-            self._register_catalog_views()
             return self._ok("ALTER MATERIALIZED VIEW")
         return None
 
@@ -769,8 +910,8 @@ class PgSession:
                 fs.rmdir_if_empty(fs.join(loc, rel))
             if changed:
                 self.spark.catalog.refreshByPath(loc)
-        self._register_catalog_views()
-        self.invalidate_plans()
+        # the restore advanced every table's version: rebind and evict
+        self._sync_catalog()
 
     def _release_txn_lock(self) -> None:
         if self._holds_txn_lock:
@@ -786,11 +927,6 @@ class PgSession:
         """
         import contextlib
 
-        if not self._pg_catalog_ready:
-            # Mutating arms (DML/DDL/COPY) read and re-bind catalog table
-            # views outside the analysis-retry funnel — on a lazily
-            # initialized fork, bind them before any write path runs.
-            self._register_catalog_views()
         if self._holds_txn_lock or self.catalog is None:
             return contextlib.nullcontext()
 
@@ -829,14 +965,6 @@ class PgSession:
         finally:
             self._release_txn_lock()
             self._cursors.clear()
-            # drop this fork's registration-memo entries — otherwise each
-            # closed connection leaks one inventory-sized tuple for the
-            # server's lifetime (ADVICE r9). Isolated forks only: a shared
-            # session outlives this PgSession and keeps its memo.
-            if self._isolated:
-                from bemidb_spark.pgcompat.catalog_views import forget_session
-
-                forget_session(self.spark)
 
     def _handle_savepoint(self, sql: str, upper: str) -> DataFrame | None:
         """SAVEPOINT / ROLLBACK TO [SAVEPOINT] / RELEASE — nested pins inside
@@ -1073,8 +1201,7 @@ class PgSession:
                 compact_table(self.spark, self.catalog, schema, table)
             expire_snapshots(self.catalog, schema, table, keep=0)
         if full:
-            self._register_catalog_views()
-            self.invalidate_plans()
+            self._sync_catalog()
         return self._ok("VACUUM")
 
     # ------------------------------------------------- session-value folding
@@ -1218,12 +1345,14 @@ class PgSession:
             out = self._handle_cursor(stripped, upper)
             if out is not None:
                 return out
+        # every arm below reads the catalog: catch up with other sessions'
+        # commits first (each writing arm syncs again after its commit)
+        self._sync_catalog()
         if upper.startswith(("CREATE VIEW", "CREATE OR REPLACE VIEW", "DROP VIEW")):
             with self._write_guard():
                 out = self._handle_plain_view(stripped, upper)
             if out is not None:
-                self._register_catalog_views()
-                self.invalidate_plans()
+                self._sync_catalog()
                 return out
         # DDL-verb anchored: a SELECT whose text merely CONTAINS the phrase
         # (psql \dt's relkind CASE spells out 'materialized view') must NOT
@@ -1234,9 +1363,7 @@ class PgSession:
             with self._write_guard():
                 out = self._handle_matview(sql)
             if out is not None:
-                # DDL re-registered catalog views / moved table locations:
-                # every cached plan may now point at stale files.
-                self.invalidate_plans()
+                self._sync_catalog()
                 return out
         if upper.startswith(("VACUUM", "ANALYZE")):
             with self._write_guard():
@@ -1258,6 +1385,7 @@ class PgSession:
                 "", stripped, flags=re.IGNORECASE,
             )
             folded = self._qualify_catalog_tables(self._fold_session_functions(inner))
+            self._bind_statement(folded)
             df = self._sql_vector_aware(transpile(folded))
             plan = df._jdf.queryExecution().explainString(
                 self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -1276,15 +1404,13 @@ class PgSession:
             with self._write_guard():
                 out = self._handle_table_ddl(stripped, upper)
             if out is not None:
-                self._register_catalog_views()
-                self.invalidate_plans()
+                self._sync_catalog()
                 return out
         if upper.startswith(("ALTER TABLE", "TRUNCATE")):
             with self._write_guard():
                 out = self._handle_alter_table(stripped, upper)
             if out is not None:
-                self._register_catalog_views()
-                self.invalidate_plans()
+                self._sync_catalog()
                 return out
         if upper.startswith(("CREATE EXTENSION", "DROP EXTENSION")):
             # served-natively extensions: pgvector's operator/type surface is
@@ -1341,6 +1467,7 @@ class PgSession:
         if is_dml:
             from bemidb_spark.pgcompat.dml import DmlError, handle_dml
 
+            self._bind_statement(stripped)
             try:
                 with self._write_guard():
                     res = handle_dml(self.spark, self.catalog, stripped)
@@ -1350,10 +1477,9 @@ class PgSession:
                 raise err from exc
             if res is not None:
                 head, n, returning = res
-                # Table files / locations changed: re-bind the shared views
-                # and drop plans that captured the old file listing.
-                self._register_catalog_views()
-                self.invalidate_plans()
+                # the write committed a new version of its table: rebind it
+                # and evict only the plans that read it
+                self._sync_catalog()
                 tag = f"INSERT 0 {n}" if head == "INSERT" else f"{head} {n}"
                 if returning is not None:
                     returning._pg_tag = tag
@@ -1364,29 +1490,11 @@ class PgSession:
                 return df
         if upper.startswith(("SELECT", "WITH", "VALUES", "TABLE ", "(")):
             record_statement_stats(stripped)
-            if not self._pg_catalog_ready and _PG_CATALOG_HINT_RE.search(
-                stripped
-            ):
-                # Proactive arm of the lazy pg_catalog registration: a
-                # statement that plainly references the emulation surface
-                # registers up front, skipping the failed-analysis detour
-                # the _sql_vector_aware retry would otherwise pay. The
-                # retry stays as the safety net for references this regex
-                # can't see (e.g. views resolved through session functions).
-                self._register_catalog_views()
             ivf_df = self._maybe_ivf_orderby(stripped)
             if ivf_df is not None:
                 return ivf_df
             if "pg_stat_statements" in stripped.lower():
                 self._register_stat_statements()
-            if self.catalog is not None:
-                version = self.catalog.version()
-                if version != self._catalog_version:
-                    self.invalidate_plans()
-                    # re-bind catalog views on THIS session: another
-                    # session's DDL only touched its own view namespace
-                    self._register_catalog_views()
-                    self._catalog_version = version
             cacheable = perms is None and "pg_stat_statements" not in stripped.lower()
             cached = self._plan_cache.get(stripped) if cacheable else None
             if cached is not None:
@@ -1404,6 +1512,7 @@ class PgSession:
                 return cached
             folded = self._qualify_catalog_tables(
                 self._fold_session_functions(stripped))
+            self._bind_statement(folded)
             if perms is None and re.search(
                 r"\b(ROLLUP|CUBE|GROUPING\s+SETS)\s*\(", folded, re.IGNORECASE
             ):
@@ -1426,9 +1535,7 @@ class PgSession:
                         df = _pg_default_names(
                             self._sql_vector_aware(transpile(comp)))
                         if cacheable:
-                            if len(self._plan_cache) >= self.PLAN_CACHE_MAX:
-                                self._plan_cache.pop(next(iter(self._plan_cache)))
-                            self._plan_cache[stripped] = df
+                            self._cache_plan(stripped, df)
                         return df
                     except Exception:  # noqa: BLE001 — un-analyzable rewrite
                         pass
@@ -1440,9 +1547,7 @@ class PgSession:
             else:
                 df = _pg_default_names(self._sql_vector_aware(transpile(folded)))
             if cacheable:
-                if len(self._plan_cache) >= self.PLAN_CACHE_MAX:
-                    self._plan_cache.pop(next(iter(self._plan_cache)))
-                self._plan_cache[stripped] = df
+                self._cache_plan(stripped, df)
             return df
         raise UnsupportedQueryError(f"unsupported query type: {stripped.split()[0]}")
 
@@ -1482,35 +1587,22 @@ class PgSession:
         except Exception:  # noqa: BLE001 — e.g. select list needs columns
             return None  # the cells view lacks (label, …): exact path
 
-    def _registration_could_resolve(self, err_text: str) -> bool:
-        """True when the missing relation named in an analyzer error is one
-        the lazy pg_catalog registration (emulation views or catalog-table
-        binding) would actually provide. The retry gate must not pay the
-        ~0.7 s view replay for a genuine typo: the r9 gate's
-        `or catalog is not None` arm made the name check a no-op whenever a
-        catalog was bound, so ANY first unresolved relation (including the
-        bench soak's deliberate error probe) triggered it (ADVICE r9)."""
-        if re.search(r"`pg_\w+`|information_schema", err_text):
+    def _resolve_missing(self, err_text: str) -> bool:
+        """Lazy binding's safety net: when the relation an analyzer error
+        names is one the pg_catalog emulation or an unbound catalog table or
+        view provides, bind it and return True (the caller retries). A
+        genuine typo pays nothing — no ~0.7 s view replay for a name the
+        registration would not provide (the bench's deliberate-error soak
+        measured that as ~1.3 s per fresh connection)."""
+        if not self._pg_catalog_ready and re.search(
+            r"`pg_\w+`|information_schema", err_text
+        ):
+            self._register_catalog_views()
             return True
-        if self.catalog is None:
-            return False
-        names = {n.lower() for n in re.findall(r"`([\w.]+)`", err_text)}
-        if not names:
-            return False
-        provided: set[str] = set()
-        try:
-            inventory = list(self.catalog.tables()) + list(self.catalog.views())
-        except Exception:  # noqa: BLE001 — unreadable catalog: don't retry
-            return False
-        for k in inventory:
-            kl = k.lower()
-            provided.add(kl)
-            if "." in kl:
-                schema, table = kl.split(".", 1)
-                # clients reference schema.table, bare table, or the bound
-                # schema_table view spelling
-                provided.update({schema, table, kl.replace(".", "_")})
-        return not names.isdisjoint(provided)
+        return self._bind_named({
+            w.lower() for q in re.findall(r"`([\w.]+)`", err_text)
+            for w in q.split(".")
+        })
 
     def _sql_vector_aware(self, text: str) -> DataFrame:
         """spark.sql with the pgvector avg(vector) retry: when analysis
@@ -1522,21 +1614,8 @@ class PgSession:
                 return self.spark.sql(text)
             except Exception as exc:  # noqa: BLE001 — analyzer error probe
                 s = str(exc)
-                if (
-                    not self._pg_catalog_ready
-                    and ("TABLE_OR_VIEW_NOT_FOUND" in s
-                         or "UnresolvedRelation" in s)
-                    and self._registration_could_resolve(s)
-                ):
-                    # Lazy pg_catalog (isolated forks defer the ~0.7 s view
-                    # replay off the connection handshake): a MISSING
-                    # RELATION the emulation surface (or the bound catalog)
-                    # would provide registers the views and retries. Gated
-                    # on the error class + name: any other failure (e.g. a
-                    # bad column) must NOT pay a registration — the bench's
-                    # deliberate-error soak measured that as ~1.3 s per
-                    # fresh connection. Runs at most once per session.
-                    self._register_catalog_views()
+                if ("TABLE_OR_VIEW_NOT_FOUND" in s
+                        or "UnresolvedRelation" in s) and self._resolve_missing(s):
                     continue
                 m = _AVG_VEC_ERR_RE.search(s)
                 if m is None:
@@ -1548,37 +1627,18 @@ class PgSession:
         return self.spark.sql(text)
 
     def invalidate_plans(self) -> None:
-        """Drop cached prepared plans (DDL, table swap, or setting change)."""
+        """Drop every cached prepared plan (DDL or a setting change; a data
+        commit evicts per table instead, see _evict)."""
         self._plan_cache.clear()
+        self._plan_deps.clear()
 
     def _qualify_catalog_tables(self, sql: str) -> str:
         """schema.table -> schema_table view names for catalog tables (B3).
 
         One combined regex pass (not one per table): the alternation is built
-        from the catalog once per catalog version, and queries that reference
+        once per schema_version (_index_names), and queries that reference
         no qualified name skip the substitution entirely.
         """
-        if self.catalog is None:
-            return sql
-        version = self.catalog.version()
-        if self._qualify_re_version != version:
-            keys = [
-                k
-                for k in list(self.catalog.tables()) + list(self.catalog.views())
-                if "." in k
-            ]
-            # both spellings: schema.table and "schema"."table" (clients
-            # double-quote fully-qualified refs, incl. 3-part column refs)
-            alts = []
-            for k in sorted(keys):
-                schema, table = k.split(".", 1)
-                alts.append(re.escape(k))
-                alts.append(re.escape(f'"{schema}"."{table}"'))
-            self._qualify_re = (
-                re.compile(r'(?:\b|(?="))(' + "|".join(alts) + r")(?![\w\"])")
-                if keys else None
-            )
-            self._qualify_re_version = version
         if self._qualify_re is None or "." not in sql:
             return sql
         # never rewrite inside string literals ('"schema"."table"'::regclass

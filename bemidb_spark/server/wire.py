@@ -1006,11 +1006,7 @@ class _Conn:
         import csv as _csv
         import io
 
-        from bemidb_spark.sources.writer import (
-            BUCKET_COL,
-            _bucket_expr,
-            read_table,
-        )
+        from bemidb_spark.sources.writer import append_rows, read_table
 
         m = _COPY_IN_RE.match(sql)
         if self.session.catalog is None:
@@ -1086,25 +1082,11 @@ class _Conn:
                     f.name, F.lit(None).cast(f.dataType))
         typed = typed.select(*[f.name for f in target.schema.fields])
         with self.session._write_guard():
-            props = self.session.catalog.table_props(schema, table) or {}
-            loc = self.session.catalog.location(schema, table)
-            if props.get("bucket_keys"):
-                out = typed.withColumn(
-                    BUCKET_COL, _bucket_expr(props["bucket_keys"], props["n_buckets"]))
-                out.write.mode("append").partitionBy(BUCKET_COL).parquet(loc)
-            else:
-                typed.write.mode("append").parquet(loc)
-            # Re-commit (same location) so the catalog VERSION bumps — the
-            # same discipline writer.py's in-place appends follow. Other
-            # sessions' plan caches key on the version, and the pg_catalog
-            # registration memo skips re-binding when it is unchanged.
-            self.session.catalog.commit_table(
-                schema, table, loc, self.session.catalog.columns(schema, table))
-        # The bound temp view's plan holds a materialized file index; re-bind
-        # the catalog views (as DDL paths do) so appended files are visible.
-        self.spark.catalog.refreshByPath(loc)
-        self.session._register_catalog_views()
-        self.session.invalidate_plans()
+            append_rows(self.spark, self.session.catalog, schema, table, typed)
+        # the append committed a new version of the table: rebind it and
+        # evict the plans that read it (other sessions do on their next
+        # statement)
+        self.session._sync_catalog()
         self._send(b"C", f"COPY {len(records)}".encode() + b"\x00")
 
     def _parse_copy_binary(

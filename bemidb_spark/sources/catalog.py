@@ -14,6 +14,17 @@ never observe a half-written table.
 On a cluster this module is replaced 1:1 by an Iceberg JDBC/REST catalog;
 every caller goes through ``location()`` / ``commit_table()`` so the swap is
 the only thing that changes.
+
+**Versions.** The state carries monotonic counters next to the tables
+(``versions``): one per table, advanced by every commit that touches it,
+and one ``schema`` counter, advanced only by DDL — creating, dropping or
+renaming a table, view or materialized view, or changing a table's columns.
+Sessions key their caches on these: a data commit to one table rebinds and
+re-plans only what reads that table, and the pg_catalog emulation is rebuilt
+only when the schema counter moves (pg's per-relation relcache
+invalidation). Counters are stored, never derived from file times, and a
+restore (ROLLBACK) advances them like any other commit, so no two states a
+reader can observe share a version.
 """
 
 from __future__ import annotations
@@ -46,12 +57,14 @@ class Catalog:
 
     # -- storage ------------------------------------------------------------
     def version(self) -> int:
-        """Monotonic-enough catalog version: the state file's mtime_ns.
+        """The commit counter: advanced by every commit that changes what a
+        read can see (data or schema), never rewound — not even by a
+        restore of identical content."""
+        return versions(self._read())["seq"]
 
-        Every committed change rewrites the file via atomic rename, so any
-        table swap bumps this; sessions use it to invalidate prepared plans.
-        """
-        return fs.mtime_ns(self._path)
+    def schema_version(self) -> int:
+        """The DDL counter (see the module docstring)."""
+        return versions(self._read())["schema"]
 
     def _read(self) -> dict:
         return fs.read_json(self._path)
@@ -60,6 +73,20 @@ class Catalog:
         # atomic pointer swap: temp file + rename
         fs.write_json_atomic(self._path, state)
 
+    def _commit(self, state: dict, touched: tuple[str, ...] = (),
+                ddl: bool = False) -> None:
+        """Write ``state`` as a new commit: advance the commit counter, the
+        counter of every touched table and, for DDL, the schema counter.
+        Callers hold _LOCK and pass a state read under it."""
+        v = versions(state)
+        v["seq"] += 1
+        for key in touched:
+            v["tables"][key] = v["tables"].get(key, 0) + 1
+        if ddl:
+            v["schema"] += 1
+        state["versions"] = v
+        self._write(state)
+
     # -- transactions --------------------------------------------------------
     def snapshot_state(self) -> dict:
         """The full catalog state (tables + matviews), for BEGIN to pin."""
@@ -67,11 +94,22 @@ class Catalog:
             return self._read()
 
     def restore_state(self, state: dict) -> None:
-        """Atomically restore a previously-pinned state (ROLLBACK). The write
-        is the same atomic rename as any commit, so the catalog version bumps
-        and sessions drop their cached plans."""
+        """Atomically restore a previously-pinned state (ROLLBACK).
+
+        The pinned counters are NOT restored: the restore is a new commit
+        that advances the counter of every table in either state (ROLLBACK
+        also prunes files appended in place, so even an unchanged entry may
+        read differently) and, when the table set, a table's columns, or the
+        view definitions differ, the schema counter."""
         with _LOCK:
-            self._write(state)
+            current = self._read()
+            restored = {k: v for k, v in state.items() if k != "versions"}
+            restored["versions"] = versions(current)
+            self._commit(
+                restored,
+                touched=tuple(set(current["tables"]) | set(state["tables"])),
+                ddl=_schema_of(current) != _schema_of(state),
+            )
 
     # -- tables -------------------------------------------------------------
     @staticmethod
@@ -107,8 +145,10 @@ class Catalog:
             carried = props if props is not None else prev.get("props")
             if carried:
                 entry["props"] = carried
-            state["tables"][self._key(schema, table)] = entry
-            self._write(state)
+            key = self._key(schema, table)
+            state["tables"][key] = entry
+            self._commit(state, touched=(key,),
+                         ddl=not prev or prev.get("columns") != columns)
         if self.EMIT_ICEBERG_METADATA:
             try:
                 from bemidb_spark.sources.iceberg_meta import write_metadata_file
@@ -134,6 +174,7 @@ class Catalog:
             snaps = entry.get("snapshots", [])
             expired = snaps[: max(0, len(snaps) - keep)]
             entry["snapshots"] = snaps[len(expired):]
+            # not a commit: the live location, all a reader binds, is as-is
             self._write(state)
         return [s["location"] for s in expired]
 
@@ -149,6 +190,7 @@ class Catalog:
             if entry is None:
                 raise KeyError(f"table not found in catalog: {schema}.{table}")
             entry["props"] = props
+            # not a commit: props steer writers, and no read plan uses them
             self._write(state)
 
     def location(self, schema: str, table: str) -> str:
@@ -169,8 +211,10 @@ class Catalog:
     def drop_table(self, schema: str, table: str) -> str | None:
         with _LOCK:
             state = self._read()
-            entry = state["tables"].pop(self._key(schema, table), None)
-            self._write(state)
+            key = self._key(schema, table)
+            entry = state["tables"].pop(key, None)
+            if entry is not None:
+                self._commit(state, touched=(key,), ddl=True)
         return entry["location"] if entry else None
 
     def drop_table_locations(self, schema: str, table: str) -> list[str]:
@@ -178,8 +222,10 @@ class Catalog:
         Iceberg metadata dir) so the caller can delete the files."""
         with _LOCK:
             state = self._read()
-            entry = state["tables"].pop(self._key(schema, table), None)
-            self._write(state)
+            key = self._key(schema, table)
+            entry = state["tables"].pop(key, None)
+            if entry is not None:
+                self._commit(state, touched=(key,), ddl=True)
         if not entry:
             return []
         return (
@@ -191,9 +237,9 @@ class Catalog:
     def rename_table(self, schema: str, table: str, new_table: str) -> None:
         with _LOCK:
             state = self._read()
-            entry = state["tables"].pop(self._key(schema, table))
-            state["tables"][self._key(schema, new_table)] = entry
-            self._write(state)
+            old, new = self._key(schema, table), self._key(schema, new_table)
+            state["tables"][new] = state["tables"].pop(old)
+            self._commit(state, touched=(old, new), ddl=True)
 
     # -- materialized views --------------------------------------------------
     # -- plain (non-materialized) views --------------------------------------
@@ -203,7 +249,7 @@ class Catalog:
             state.setdefault("views", {})[self._key(schema, name)] = {
                 "definition": definition
             }
-            self._write(state)
+            self._commit(state, ddl=True)
 
     def views(self) -> dict[str, dict]:
         return self._read().get("views", {})
@@ -212,14 +258,15 @@ class Catalog:
         with _LOCK:
             state = self._read()
             existed = state.get("views", {}).pop(self._key(schema, name), None)
-            self._write(state)
+            if existed is not None:
+                self._commit(state, ddl=True)
         return existed is not None
 
     def put_matview(self, schema: str, name: str, definition: str) -> None:
         with _LOCK:
             state = self._read()
             state["matviews"][self._key(schema, name)] = {"definition": definition}
-            self._write(state)
+            self._commit(state, ddl=True)
 
     def matview_definition(self, schema: str, name: str) -> str:
         entry = self._read()["matviews"].get(self._key(schema, name))
@@ -233,5 +280,24 @@ class Catalog:
     def drop_matview(self, schema: str, name: str) -> None:
         with _LOCK:
             state = self._read()
-            state["matviews"].pop(self._key(schema, name), None)
-            self._write(state)
+            if state["matviews"].pop(self._key(schema, name), None) is not None:
+                self._commit(state, ddl=True)
+
+
+def versions(state: dict) -> dict:
+    """A state's counters — ``seq`` (every commit), ``schema`` (DDL) and
+    ``tables`` (per table) — as a fresh dict; zeros for a state written
+    before counters existed."""
+    v = state.get("versions") or {}
+    return {"seq": v.get("seq", 0), "schema": v.get("schema", 0),
+            "tables": dict(v.get("tables", {}))}
+
+
+def _schema_of(state: dict) -> tuple:
+    """What the schema counter versions: table names and columns, view and
+    materialized-view definitions."""
+    return (
+        sorted((k, repr(e.get("columns"))) for k, e in state["tables"].items()),
+        sorted((k, repr(e)) for k, e in state.get("views", {}).items()),
+        sorted((k, repr(e)) for k, e in state.get("matviews", {}).items()),
+    )

@@ -390,9 +390,12 @@ def upsert_by_key(
     merged.write.mode("overwrite") \
         .option("partitionOverwriteMode", "dynamic") \
         .partitionBy(BUCKET_COL).parquet(loc)
-    # re-commit (same location) so the catalog version bumps and sessions
-    # drop prepared plans that captured the old file listing
-    catalog.commit_table(schema, table, loc, _columns_meta(merged.drop(BUCKET_COL)))
+    # re-commit (same location): advances the table's version, so sessions
+    # rebind it and drop the plans that captured the old file listing. The
+    # declared columns stand — a merge cannot change them, and recomputing
+    # them from the merged rows (whose nullability follows the proposed
+    # rows) would turn every first upsert into a schema change.
+    catalog.commit_table(schema, table, loc, catalog.columns(schema, table))
     return loc
 
 

@@ -68,6 +68,31 @@ def test_insert_on_conflict_arbitrary_set_merges_old_row(spark, cat):
     assert stored == got
 
 
+def test_on_conflict_set_binds_target_qualified_column(spark, cat):
+    """pg spells the existing row in ON CONFLICT … SET by the target's name:
+    `kv.n`, `public.kv.n`, `"kv"."n"`, or the alias under
+    `INSERT INTO kv AS t`. Each binds to the OLD row, as the bare `n` the
+    router also accepts does; the DO UPDATE WHERE gate scopes the same way."""
+    write_bucketed_table(spark, cat, "public", "kv", spark.createDataFrame(
+        [(1, 10), (2, 20)], "k bigint, n bigint"), ["k"], n_buckets=4)
+    pg = PgSession(spark, cat)
+    for set_clause in ("n = kv.n + 1", "n = public.kv.n + 1",
+                       'n = "kv"."n" + 1', "n = n + 1"):
+        df = pg.execute("INSERT INTO kv (k, n) VALUES (1, 0) "
+                        f"ON CONFLICT (k) DO UPDATE SET {set_clause}")
+        assert df._pg_tag == "INSERT 0 1", set_clause
+    df = pg.execute("INSERT INTO kv AS t (k, n) VALUES (1, 0) "
+                    "ON CONFLICT (k) DO UPDATE SET n = t.n + 1")
+    assert df._pg_tag == "INSERT 0 1"
+    df = pg.execute(
+        "INSERT INTO kv AS t (k, n) VALUES (2, 5), (3, 7) "
+        "ON CONFLICT (k) DO UPDATE SET n = t.n + EXCLUDED.n WHERE t.n < 0")
+    assert df._pg_tag == "INSERT 0 1"  # key 2 gated out, key 3 inserted
+    got = {r.k: r.n for r in read_table(spark, cat, "public", "kv").collect()}
+    assert got == {1: 15, 2: 20, 3: 7}
+    assert pg.execute("SELECT sum(n) AS s FROM kv").collect()[0].s == 42
+
+
 def test_insert_on_conflict_do_nothing(spark, cat):
     replace_table(cat, "public", "n", spark.createDataFrame(
         [(1, "a")], "k bigint, v string"))

@@ -1110,36 +1110,85 @@ def test_pgvector_avg_group_by(pg):
 
 
 def test_register_pg_catalog_memo_and_version_bump(spark, tmp_path):
-    """register_pg_catalog skips the rebuild when (catalog id, version,
-    inventory) is unchanged, and a catalog commit (version bump) forces the
-    dynamic views to rebuild — new tables must be visible in pg_class
-    immediately (r9 optimization: registration ran ~0.5-1.3 s of py4j view
-    re-creation on every connection setup and after every DML)."""
-    import time
-
-    from bemidb_spark.pgcompat.catalog_views import register_pg_catalog
+    """A session rebuilds its pg_catalog views only when the catalog's
+    schema_version moves: a statement with nothing moved and a data-only
+    commit leave them as they are, a new table (DDL) rebuilds the dynamic
+    views so pg_class shows it at once, and the static views survive that
+    static-skip rebuild."""
     from bemidb_spark.sources.catalog import Catalog
     from bemidb_spark.sources.writer import replace_table
 
     cat = Catalog(str(tmp_path / "memo_wh"))
-    register_pg_catalog(spark, cat)
+    replace_table(cat, "public", "memo_d", spark.range(3).selectExpr("id AS k"))
+    pg = PgSession(spark, cat, isolate=True)
+    assert pg.execute("SELECT count(*) AS n FROM pg_class").collect()[0].n > 0
     # Structural proof of the no-op: overwrite a DYNAMIC emulation view with
-    # a marker; an unchanged key must NOT rebuild it (memo hit), a version
-    # bump must replace it.
-    spark.sql("SELECT 'marker' AS schemaname").createOrReplaceTempView(
+    # a marker; only a rebuild replaces it.
+    pg.spark.sql("SELECT 'marker' AS schemaname").createOrReplaceTempView(
         "pg_matviews")
-    register_pg_catalog(spark, cat)  # unchanged key: must be a no-op
-    assert spark.table("pg_matviews").columns == ["schemaname"]
+    pg.execute("SELECT 1 AS one").collect()  # nothing moved
+    assert pg.spark.table("pg_matviews").columns == ["schemaname"]
+    replace_table(cat, "public", "memo_d", spark.range(5).selectExpr("id AS k"))
+    assert pg.execute("SELECT count(*) AS n FROM memo_d").collect()[0].n == 5
+    assert pg.spark.table("pg_matviews").columns == ["schemaname"]
 
-    replace_table(cat, "public", "memo_t",
-                  spark.range(3).selectExpr("id AS k"))
-    register_pg_catalog(spark, cat)  # version bumped: dynamic views rebuild
-    assert spark.sql(
+    replace_table(cat, "public", "memo_t", spark.range(3).selectExpr("id AS k"))
+    assert pg.execute(
         "SELECT relname FROM pg_class WHERE relname = 'memo_t'"
     ).count() == 1
-    assert "matviewname" in spark.table("pg_matviews").columns  # marker gone
-    # static views survived the static-skip path
-    assert spark.sql("SELECT count(*) FROM pg_am").collect()[0][0] == 1
+    assert "matviewname" in pg.spark.table("pg_matviews").columns  # rebuilt
+    assert pg.execute("SELECT count(*) AS n FROM pg_am").collect()[0].n == 1
+
+
+def test_data_commit_rebinds_only_the_written_table(spark, tmp_path, monkeypatch):
+    """Two connections on one catalog: A's upsert into a bucketed table
+    leaves B's cached plan over another table as the same DataFrame, B's
+    next read of the written table sees A's rows, and neither session
+    re-registers pg_catalog or drops its whole plan cache. A's CREATE TABLE
+    (DDL) then shows up in B's pg_class."""
+    from bemidb_spark.pgcompat import catalog_views
+    from bemidb_spark.pgcompat import session as pg_session
+    from bemidb_spark.sources.writer import replace_table, write_bucketed_table
+
+    cat = Catalog(str(tmp_path / "xs_wh"))
+    write_bucketed_table(spark, cat, "public", "xs_kv", spark.createDataFrame(
+        [(1, 1), (2, 2)], "k bigint, n bigint"), ["k"], n_buckets=4)
+    replace_table(cat, "public", "xs_other", spark.range(4).selectExpr("id AS k"))
+    a = PgSession(spark, cat, isolate=True)
+    b = PgSession(spark, cat, isolate=True)
+    read_kv = "SELECT sum(n) AS s FROM xs_kv"
+    read_other = "SELECT count(*) AS c FROM xs_other"
+    assert b.execute(read_kv).collect()[0].s == 3
+    other_plan = b.execute(read_other)
+    assert other_plan.collect()[0].c == 4
+    assert b.execute("SELECT count(*) AS n FROM pg_class").collect()[0].n > 0
+
+    calls = {"register": 0, "invalidate": 0}
+    real_register = catalog_views.register_pg_catalog
+    real_invalidate = PgSession.invalidate_plans
+
+    def register(*args, **kwargs):
+        calls["register"] += 1
+        return real_register(*args, **kwargs)
+
+    def invalidate(self):
+        calls["invalidate"] += 1
+        return real_invalidate(self)
+
+    monkeypatch.setattr(catalog_views, "register_pg_catalog", register)
+    monkeypatch.setattr(pg_session, "register_pg_catalog", register)
+    monkeypatch.setattr(PgSession, "invalidate_plans", invalidate)
+    a.execute("INSERT INTO xs_kv (k, n) VALUES (2, 40), (3, 7) "
+              "ON CONFLICT (k) DO UPDATE SET n = EXCLUDED.n")
+    assert b.execute(read_other) is other_plan
+    assert b.execute(read_kv).collect()[0].s == 48
+    assert calls == {"register": 0, "invalidate": 0}
+
+    a.execute("CREATE TABLE xs_new (id int)")
+    names = {r.relname for r in b.execute(
+        "SELECT relname FROM pg_class WHERE relname LIKE 'xs%'").collect()}
+    assert names == {"xs_kv", "xs_other", "xs_new"}
+    assert calls["register"] == 1  # B registered before: rebuilt on DDL
 
 
 def test_isolated_session_registers_pg_catalog_lazily(spark, sf_dir):

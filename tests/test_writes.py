@@ -418,3 +418,45 @@ def test_delete_emptying_all_buckets_keeps_table_readable(spark, catalog):
                   spark.createDataFrame([(9, "z")], "k bigint, v string"), ["k"])
     assert [tuple(r) for r in read_table(
         spark, catalog, "s", "edel").collect()] == [(9, "z")]
+
+
+def test_catalog_versions_are_stored_counters(tmp_path, monkeypatch):
+    """version() is a stored counter, not the state file's mtime: commits
+    inside one mtime tick still advance it, a per-table counter moves only
+    for the table a commit touches, schema_version only for DDL, and a
+    restore of byte-identical content (ROLLBACK) still advances the
+    counters instead of rewinding them."""
+    from bemidb_spark.sources import fs
+    from bemidb_spark.sources.catalog import versions
+
+    monkeypatch.setattr(fs, "mtime_ns", lambda path: 42)  # a frozen clock
+    monkeypatch.setattr(Catalog, "EMIT_ICEBERG_METADATA", False)
+    cat = Catalog(str(tmp_path / "counters"))
+    cols = [{"name": "id", "type": "bigint", "nullable": True}]
+
+    def table_version(key: str) -> int:
+        return versions(cat.snapshot_state())["tables"].get(key, 0)
+
+    v0, s0 = cat.version(), cat.schema_version()
+    cat.commit_table("public", "t", str(tmp_path / "t1"), cols)
+    v1, s1 = cat.version(), cat.schema_version()
+    assert v1 > v0 and s1 > s0  # a new table is DDL
+    cat.commit_table("public", "t", str(tmp_path / "t2"), cols)
+    assert cat.version() > v1
+    assert cat.schema_version() == s1  # same columns: a data commit
+    assert table_version("public.t") == 2
+    cat.commit_table("public", "u", str(tmp_path / "u1"), cols)
+    assert table_version("public.t") == 2  # another table's commit
+
+    pinned = cat.snapshot_state()
+    v, s, t = cat.version(), cat.schema_version(), table_version("public.t")
+    cat.restore_state(pinned)  # byte-identical content
+    assert cat.version() > v and table_version("public.t") > t
+    assert cat.schema_version() == s
+    assert cat.snapshot_state()["tables"] == pinned["tables"]
+
+    cat.drop_table("public", "u")
+    s, u = cat.schema_version(), table_version("public.u")
+    cat.restore_state(pinned)  # brings u back: DDL, counters move forward
+    assert "public.u" in cat.tables()
+    assert cat.schema_version() > s and table_version("public.u") > u
