@@ -294,14 +294,14 @@ class PgSession:
         # session-local, so one wire client's `SET timezone` must not change
         # another client's timestamp rendering — with a shared SparkSession
         # it would (spark.sql.session.timeZone is per-SQLConf). The wire
-        # server passes isolate=True per connection; data views published by
-        # the embedder (tables.register_views global temp views) are bridged
-        # into the fork's namespace here.
+        # server passes isolate=True per connection; a data view the
+        # embedder published (tables.register_views global temp views) is
+        # bound into the fork when a statement first names it
+        # (_bind_embedder), so building a fork costs ~3 ms.
         self.spark = spark.newSession() if isolate else spark
         self.catalog = catalog
         self._isolated = isolate
         if isolate:
-            self._bridge_parent_views(spark)
             # newSession() forks a FRESH SQLConf from SparkConf defaults, so
             # runtime policy the embedder applied to the parent (the
             # size-aware input profile, session.apply_input_size_policy)
@@ -340,6 +340,7 @@ class PgSession:
         self._schema_version: int | None = None
         self._bound: dict[str, int] = {}
         self._bound_views: set[str] = set()
+        self._embedded: set[str] = set()  # embedder views a fork bound
         self._names: dict[str, str] = {}  # bindable name -> catalog key
         self._qualify_re: re.Pattern | None = None
         # Advertised pg version. Default 17.0 (the surface this engine
@@ -359,23 +360,26 @@ class PgSession:
             # forwards its engine's setting of the same name)
             "default_null_order": "nulls_last",
         }
-        # Catalog tables and the pg_catalog emulation views: EAGER on a
-        # shared session (embedder/gate paths may read them without going
-        # through execute()), LAZY on an isolated fork — the per-connection
-        # replay of ~40 views costs ~0.7 s of py4j roundtrips on the wire
-        # handshake critical path, and most statements (all of TPC-H) never
-        # touch pg_catalog or a catalog table. A fork binds a table when a
-        # statement names it and registers the views when one references
-        # them (_bind_statement, with _sql_vector_aware's analysis retry as
-        # the safety net).
+        # Catalog tables, embedder views and the pg_catalog emulation
+        # views: EAGER on a shared session (embedder/gate paths may read
+        # them without going through execute()), LAZY on an isolated fork —
+        # the per-connection replay of ~40 views costs ~0.7 s of py4j
+        # roundtrips on the wire handshake critical path, and most
+        # statements (all of TPC-H) never touch pg_catalog or a catalog
+        # table. A fork binds a relation when a statement names it and
+        # registers the views when one references them (_bind_statement,
+        # with _sql_vector_aware's analysis retry as the safety net), as a
+        # pg backend fills its relcache.
         self._pg_catalog_ready = False
         self._sync_catalog()
         if not isolate:
             self._register_catalog_views()
 
     def _register_catalog_views(self) -> None:
-        """Register the pg_catalog emulation views. pg_class lists the plain
-        catalog views from the session's namespace, so those bind first."""
+        """Register the pg_catalog emulation views. pg_class lists the
+        embedder views and the plain catalog views from the session's
+        namespace, so those bind first."""
+        self._bind_embedder(self._embedder_views())
         if self._state.get("views") or self._bound_views:
             self._bind_views()
         register_pg_catalog(self.spark, self.catalog)
@@ -434,7 +438,9 @@ class PgSession:
 
     def _bind(self, keys: set[str]) -> None:
         """(Re)bind catalog tables at their synced version; a table that
-        left the catalog is unbound."""
+        left the catalog is unbound. A same-named embedder view binds first
+        and keeps the bare name."""
+        self._bind_embedder({k.split(".", 1)[1].lower() for k in keys})
         for key in keys:
             entry = self._state["tables"].get(key)
             if bind_catalog_table(self.spark, key, entry) and entry is not None:
@@ -450,9 +456,33 @@ class PgSession:
             self.spark, self._state.get("views", {}), self._bound_views,
             self._qualify_catalog_tables)
 
+    def _embedder_views(self) -> set[str]:
+        """Names of the views the embedder published as global temp views
+        (shared by every session of the SparkContext); ~0.3 ms. A name that
+        is not a plain identifier cannot be bound under itself: skipped."""
+        manager = self.spark._jsparkSession.sharedState().globalTempViewManager()
+        names = manager.listViewNames("*").mkString(",").split(",")
+        return {n for n in names if n.isidentifier()}
+
+    def _bind_embedder(self, names: set[str]) -> bool:
+        """Bind into a fork the embedder views among these names that it has
+        not bound yet (a plain catalog view keeps its bare name); True when
+        anything was bound. A shared session reads the embedder's own temp
+        views and binds nothing."""
+        todo = names - self._embedded - self._bound_views
+        if not self._isolated or not todo:
+            return False
+        todo &= self._embedder_views()
+        for name in todo:
+            self.spark.table(f"global_temp.{name}").createOrReplaceTempView(name)
+        self._embedded |= todo
+        return bool(todo)
+
     def _bind_named(self, words: set[str]) -> bool:
-        """Bind the catalog tables and views these names refer to that the
-        session has not bound yet; True when anything was bound."""
+        """Bind the embedder views, catalog tables and catalog views these
+        names refer to that the session has not bound yet; True when
+        anything was bound."""
+        embedded = self._bind_embedder(words)
         keys = {self._names[w] for w in words if w in self._names}
         views = self._state.get("views", {})
         if not self._bound_views and any(k in views for k in keys):
@@ -460,17 +490,17 @@ class PgSession:
             return True
         todo = {k for k in keys if k not in views and k not in self._bound}
         self._bind(todo)
-        return bool(todo)
+        return embedded or bool(todo)
 
     def _bind_statement(self, text: str) -> None:
         """Make what a statement names resolvable before it is analyzed: the
         pg_catalog views (a fork registers them on first reference) and the
-        catalog tables and views it names. The analysis retry in
-        _sql_vector_aware catches references this scan cannot see."""
+        embedder views, catalog tables and catalog views it names. The
+        analysis retry in _sql_vector_aware catches references this scan
+        cannot see."""
         if not self._pg_catalog_ready and _PG_CATALOG_HINT_RE.search(text):
             self._register_catalog_views()
-        if self._names:
-            self._bind_named(set(re.findall(r"\w+", text.lower())))
+        self._bind_named(set(re.findall(r"\w+", text.lower())))
 
     def _plan_reads(self, df: DataFrame) -> frozenset[str]:
         """The bound catalog tables an analyzed plan reads, from the views
@@ -497,42 +527,6 @@ class PgSession:
         for text in [t for t, reads in self._plan_deps.items() if reads & keys]:
             del self._plan_deps[text]
             self._plan_cache.pop(text, None)
-
-    def _bridge_parent_views(self, parent: SparkSession) -> None:
-        """Alias the embedder's global temp views into this forked session.
-
-        Wraps each parent view's ANALYZED plan into the fork instead of
-        re-parsing `SELECT * FROM global_temp.x` per view — connection setup
-        is on the client's critical path and plan wrapping is ~50x cheaper
-        than SQL analysis (same internal as session.reexecute)."""
-        try:
-            # SHOW VIEWS is ~20x cheaper than catalog.listTables (which
-            # fetches full metadata per table)
-            tables = parent.sql("SHOW VIEWS IN global_temp").collect()
-        except Exception:  # noqa: BLE001 — no global temp DB yet
-            return
-        try:
-            jspark = self.spark._jsparkSession
-            ofrows = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
-        except Exception:  # noqa: BLE001 — internal API drift
-            jspark = ofrows = None
-        for t in tables:
-            name = t.viewName
-            if t.namespace != "global_temp" or not name.isidentifier():
-                continue  # parent-local temp views are not reachable here
-            if ofrows is not None:
-                try:
-                    plan = parent.table(
-                        f"global_temp.{name}"
-                    )._jdf.queryExecution().analyzed()
-                    ofrows(jspark, plan).createOrReplaceTempView(name)
-                    continue
-                except Exception:  # noqa: BLE001 — fall back to SQL aliasing
-                    pass
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMPORARY VIEW {name} "
-                f"AS SELECT * FROM global_temp.{name}"
-            )
 
     # ------------------------------------------------------------------ SET
     def _handle_set(self, sql: str) -> DataFrame:
@@ -1451,6 +1445,7 @@ class PgSession:
                     # the corpus fingerprint — an unchanged corpus replays
                     # the persisted index (pg persists ivfflat across
                     # connections too), any data/view change rebuilds.
+                    self._bind_named({table})
                     _KM_BUILT.pop(id(self.spark), None)
                     _kmeans_views(self.spark, "::pg_ivf_index::")
             dm = re.match(r"\s*DROP\s+INDEX\s+(?:IF\s+EXISTS\s+)?([\w.]+)",
@@ -1575,6 +1570,7 @@ class PgSession:
             return None
         from bemidb_spark.operators.similarity import ivf_orderby_df
 
+        self._bind_named({tbl})
         # transpile the select list alone (it may carry pg-isms); the probe
         # plan itself is already Spark dialect
         sel = transpile(f"SELECT {m.group('sel')} FROM embeddings")
@@ -1589,8 +1585,9 @@ class PgSession:
 
     def _resolve_missing(self, err_text: str) -> bool:
         """Lazy binding's safety net: when the relation an analyzer error
-        names is one the pg_catalog emulation or an unbound catalog table or
-        view provides, bind it and return True (the caller retries). A
+        names is one the pg_catalog emulation, an unbound embedder view or
+        an unbound catalog table or view provides, bind it and return True
+        (the caller retries). A
         genuine typo pays nothing — no ~0.7 s view replay for a name the
         registration would not provide (the bench's deliberate-error soak
         measured that as ~1.3 s per fresh connection)."""

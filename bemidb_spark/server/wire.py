@@ -22,7 +22,6 @@ concurrent queries schedule under FAIR — the engine's throughput path).
 from __future__ import annotations
 
 import contextlib
-import os
 import re
 import socket
 import struct
@@ -52,19 +51,14 @@ MAX_MESSAGE_BYTES = 256 * 1024 * 1024
 # Adaptive result fetch: a statement whose last observed result was at most
 # this many rows is served by one collect() job instead of per-partition
 # toLocalIterator jobs (see _Conn._row_stream_for). Streaming remains the
-# default for first-seen and large results.
-_WIRE_COLLECT_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_WIRE_COLLECT_MAX_ROWS", "50000")
-)
-# Arrow transport for the known-small collect fast-path (guide §4/§6:
-# Arrow batches cross the JVM boundary columnar instead of pickled rows —
+# default for first-seen and large results. The collect fetches through
+# Arrow (batches cross the JVM boundary columnar instead of pickled rows —
 # measured 0.92 -> 0.52 s for the 22-query resident pass at sf0.1, ~18 ms/
-# statement). Served bytes are pinned identical to the collect() path by
-# tools/wire_bytes_identity.py + tests/test_wire.py; schemas the identity
-# argument doesn't cover (struct/map/year-month-interval and anything
-# unrecognized) decline the Arrow path per _arrow_safe_schema and fall
-# back to collect().
-_WIRE_ARROW_FETCH = os.environ.get("SPARK_GRAFT_WIRE_ARROW", "1") != "0"
+# statement); served bytes are pinned identical to collect() by
+# tools/wire_bytes_identity.py + tests/test_wire.py, and schemas the
+# identity argument doesn't cover (struct/map/year-month-interval and
+# anything unrecognized) decline Arrow per _arrow_safe_schema and collect().
+_WIRE_COLLECT_MAX_ROWS = 50_000
 # Output buffering for row/CopyData frames: flush threshold in bytes.
 _SEND_BUFFER_BYTES = 64 * 1024
 MAX_STARTUP_BYTES = 16 * 1024
@@ -500,18 +494,19 @@ class _Conn:
         self.backend_pid, self.backend_secret = (
             server.register_backend(self) if server else (1, 0))
         self.job_group = f"pgwire-{self.backend_pid}"
-        self.cancel_requested = False  # set by WireServer.cancel_backend
+        self.cancel_requested = False  # set by cancel() on a CancelRequest
+        # set when the running statement ends (_statement_deadline)
+        self._running: threading.Event | None = None
         # Each connection gets an isolated engine session (pg SET semantics
         # are session-local; see PgSession isolate docstring). All of this
         # backend's engine calls go through the fork, so COPY rebinds and
         # DDL refreshes land in the namespace its queries actually read.
-        # The fork build (~0.2 s of GIL-serialized py4j: newSession + conf
-        # copy + view bridging) comes from the server's pre-forked pool when
-        # one is ready — same object, built ahead of time off the handshake
-        # critical path (real pg pre-forks backends the same way).
-        pooled = server.take_session() if server is not None else None
-        self.session = pooled or PgSession(spark, catalog, isolate=True,
-                                           server_version=server_version)
+        # The fork builds in ~3 ms (newSession + profile-conf copy); it
+        # binds each relation when a statement first names it.
+        self.session = (
+            server.take_session() if server is not None
+            else PgSession(spark, catalog, isolate=True,
+                           server_version=server_version))
         self.spark = self.session.spark
         self.prepared: dict[str, _Prepared] = {}
         self.portals: dict[str, _Prepared] = {}
@@ -758,7 +753,7 @@ class _Conn:
                     except (StopIteration, RuntimeError):
                         pass
                 self._limited_plans[sql] = (df, limited)
-            probe = _arrow_fetch_rows(limited) if _WIRE_ARROW_FETCH else None
+            probe = _arrow_fetch_rows(limited)
             if probe is None:
                 probe = limited.collect()
             if len(probe) <= _WIRE_COLLECT_MAX_ROWS:
@@ -857,32 +852,47 @@ class _Conn:
                  "h": 3_600_000, "d": 86_400_000}[unit]
         return int(n * scale)
 
+    def cancel(self) -> None:
+        """CancelRequest: cancel the running statement, on the request's own
+        connection thread. On an idle backend this is a no-op, as in pg."""
+        done = self._running
+        if done is None:
+            return
+        # Flag before canceling: the failure can surface wrapped in layers
+        # that hide the "cancelled job group" cause text (e.g. the
+        # toLocalIterator socket server's awaitResult), so error
+        # classification keys on this flag, not on message matching.
+        self.cancel_requested = True
+        self._cancel_jobs(done)
+
+    def _cancel_jobs(self, done: threading.Event) -> None:
+        """Cancel this backend's Spark jobs until its statement ends.
+        cancelJobGroup only kills jobs that are RUNNING at call time — a
+        statement still in planning would launch its jobs afterwards and run
+        to completion — so the cancel re-arms every 50 ms (tight interval: a
+        short job could otherwise slip through between two attempts)."""
+        while not done.is_set():
+            self.spark.sparkContext.cancelJobGroup(self.job_group)
+            done.wait(0.05)
+
     @contextlib.contextmanager
     def _statement_deadline(self):
-        """Enforce statement_timeout: a timer cancels this backend's Spark
-        job group at the deadline (the same mechanism a CancelRequest uses),
-        and the resulting failure maps to pg's 57014 query_canceled."""
+        """Run one statement cancellable. A CancelRequest (cancel()) and,
+        when statement_timeout is set, a timer at the deadline both cancel
+        it through _cancel_jobs; the failure maps to pg's 57014
+        query_canceled. No thread starts without a timeout: under GIL
+        contention a thread start costs milliseconds per statement."""
         ms = self._timeout_ms()
-        if ms <= 0:
-            yield
-            return
-        fired = threading.Event()
         done = threading.Event()
+        fired = threading.Event()  # the deadline passed
+        if ms > 0:
+            def _timer() -> None:
+                if not done.wait(ms / 1000.0):
+                    fired.set()
+                    self._cancel_jobs(done)
 
-        def _watchdog() -> None:
-            if done.wait(ms / 1000.0):
-                return
-            fired.set()
-            # cancelJobGroup only kills jobs that are RUNNING at call time —
-            # a statement still in planning would launch its jobs afterwards
-            # and run to completion. Keep canceling until the statement ends
-            # (tight interval: a short job could otherwise slip through
-            # between two cancel attempts).
-            while not done.wait(0.05):
-                self.spark.sparkContext.cancelJobGroup(self.job_group)
-
-        watchdog = threading.Thread(target=_watchdog, daemon=True)
-        watchdog.start()
+            threading.Thread(target=_timer, daemon=True).start()
+        self._running = done
         try:
             # A statement that completes cleanly wins even if the deadline
             # raced it (its last row was already on the wire); only a
@@ -893,6 +903,7 @@ class _Conn:
                 raise self._timeout_error() from None
             raise
         finally:
+            self._running = None
             done.set()
 
     @staticmethod
@@ -1569,68 +1580,12 @@ class WireServer:
         # get/set are GIL-atomic; the FIFO eviction race can at worst evict
         # one extra hint.
         self._result_rows: dict[str, int] = {}
-        # Pre-forked session pool (r10): building a per-connection PgSession
-        # fork costs ~0.2 s of GIL-serialized py4j (newSession + profile-conf
-        # copy + global-view bridging) on the handshake critical path — the
-        # dominant term of multi-client connect bursts after r9. A small
-        # background-filled pool of ready forks absorbs it. Entries are
-        # tagged with the fork-state epoch (bemidb_spark.session.fork_epoch:
-        # bumped when the published view set or session profile changes), so
-        # a stale pre-build is discarded, never served. The pool holds only
-        # UNUSED sessions — nothing about any statement or result is reused.
-        self._session_pool: list[tuple[int, PgSession]] = []
-        self._pool_lock = threading.Lock()
-        self._pool_target = int(
-            os.environ.get("SPARK_GRAFT_WIRE_SESSION_POOL", "8"))
-        self._pool_filling = False
 
-    # ------------------------------------------------------- session pool
-    def take_session(self) -> "PgSession | None":
-        """A ready pre-forked session, or None (caller builds inline)."""
-        from bemidb_spark.session import fork_epoch
-
-        epoch = fork_epoch()
-        out = None
-        with self._pool_lock:
-            while self._session_pool:
-                e, s = self._session_pool.pop()
-                if e == epoch:
-                    out = s
-                    break
-                # stale epoch: state the fork snapshotted changed since the
-                # pre-build — drop it (and everything older below it)
-        self._ensure_pool_fill()
-        return out
-
-    def _ensure_pool_fill(self) -> None:
-        if self._pool_target <= 0 or self._stopping:
-            return
-        with self._pool_lock:
-            if self._pool_filling or len(self._session_pool) >= self._pool_target:
-                return
-            self._pool_filling = True
-        threading.Thread(target=self._fill_pool, daemon=True).start()
-
-    def _fill_pool(self) -> None:
-        from bemidb_spark.session import fork_epoch
-
-        try:
-            while not self._stopping:
-                with self._pool_lock:
-                    if len(self._session_pool) >= self._pool_target:
-                        return
-                epoch = fork_epoch()
-                s = PgSession(self.spark, self.catalog, isolate=True,
-                              server_version=self.server_version)
-                if fork_epoch() != epoch:
-                    continue  # state changed mid-build: discard, rebuild
-                with self._pool_lock:
-                    self._session_pool.append((epoch, s))
-        except Exception:  # noqa: BLE001 — pool is best-effort only
-            pass
-        finally:
-            with self._pool_lock:
-                self._pool_filling = False
+    def take_session(self) -> PgSession:
+        """A new isolated session for one connection (~3 ms: a fork binds
+        relations on first reference, so there is nothing to build ahead)."""
+        return PgSession(self.spark, self.catalog, isolate=True,
+                         server_version=self.server_version)
 
     # ------------------------------------------------------ cancel registry
     def register_backend(self, conn: "_Conn") -> tuple[int, int]:
@@ -1653,17 +1608,11 @@ class WireServer:
         # pg silently ignores cancel requests with a bad key.
         if entry is None or entry[1] != secret:
             return
-        # Flag before canceling: the failure can surface wrapped in layers
-        # that hide the "cancelled job group" cause text (e.g. the
-        # toLocalIterator socket server's awaitResult), so error
-        # classification keys on this flag, not on message matching.
-        entry[0].cancel_requested = True
-        self.spark.sparkContext.cancelJobGroup(entry[0].job_group)
+        entry[0].cancel()
 
     def start(self) -> None:
         self._accept_thread = threading.Thread(target=self._accept_loop, daemon=True)
         self._accept_thread.start()
-        self._ensure_pool_fill()  # pre-fork ahead of the first connections
 
     def _accept_loop(self) -> None:
         while not self._stopping:
@@ -1682,9 +1631,11 @@ class WireServer:
         try:
             kind, payload = _initial_packet(sock)
             if kind == "cancel":
-                # CancelRequest(pid, secret): out-of-band — cancel the
-                # victim backend's Spark jobs and drop this connection
-                # without building a session (pg sends no reply).
+                # CancelRequest(pid, secret): out-of-band — drop this
+                # connection without building a session (pg sends no reply;
+                # libpq waits for the close), then cancel the victim
+                # backend's statement until it ends.
+                sock.close()
                 self.cancel_backend(*payload)
                 return
             if kind != "startup":
@@ -1709,6 +1660,4 @@ class WireServer:
 
     def stop(self) -> None:
         self._stopping = True
-        with self._pool_lock:
-            self._session_pool.clear()
         self._listener.close()

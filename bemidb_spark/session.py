@@ -180,22 +180,6 @@ PROFILE_CONF_KEYS = (
 )
 
 
-# Fork-state epoch: bumped whenever state a pre-forked wire session snapshots
-# at build time changes (the session profile here; published global temp views
-# in tables.register_views). WireServer's session pool tags each pre-built
-# fork with the epoch it was built under and discards stale entries at
-# checkout, so pooling can never serve a session built against old state.
-_FORK_EPOCH = [0]
-
-
-def fork_epoch() -> int:
-    return _FORK_EPOCH[0]
-
-
-def bump_fork_epoch() -> None:
-    _FORK_EPOCH[0] += 1
-
-
 def apply_input_size_policy(spark: SparkSession, paths: list[str]) -> bool:
     """Size-aware execution policy: adapt session knobs to the bound dataset.
 
@@ -256,20 +240,11 @@ def apply_input_size_policy(spark: SparkSession, paths: list[str]) -> bool:
         }
     # Structural drift-guard: the profile must touch exactly the confs that
     # PgSession copies into per-connection forks (PROFILE_CONF_KEYS).
+    # A per-connection fork copies these when it is built, so a connection
+    # opened after a profile flip runs under the new profile.
     assert set(profile) == set(PROFILE_CONF_KEYS)
-    changed = False
     for k, v in profile.items():
-        try:
-            if spark.conf.get(k) != v:
-                changed = True
-        except Exception:  # noqa: BLE001 — conf unset counts as a change
-            changed = True
         spark.conf.set(k, v)
-    if changed:
-        # pre-forked wire sessions snapshot the profile at build time —
-        # invalidate them when the profile actually flips (rare: only when a
-        # session rebinds across the small/scale input boundary)
-        bump_fork_epoch()
     return small
 
 

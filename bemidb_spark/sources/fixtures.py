@@ -89,6 +89,7 @@ def register_test_table(spark: SparkSession, catalog=None) -> DataFrame:
         df = spark.createDataFrame(df.rdd, test_table_schema())
     df.createOrReplaceTempView("test_table")
     # publish for isolated per-connection sessions (PgSession isolate=True
-    # bridges global temp views — same contract as tables.register_views)
+    # binds global temp views on first reference — same contract as
+    # tables.register_views)
     df.createOrReplaceGlobalTempView("test_table")
     return df

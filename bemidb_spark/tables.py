@@ -84,19 +84,10 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[st
     dfs = load_tables(spark, sf_dir)
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
-        # Also publish as a global temp view: isolated per-connection
-        # sessions (PgSession isolate=True — forked via newSession for pg's
-        # session-local SET semantics) bridge these into their own view
-        # namespace at startup.
+        # Also publish as a global temp view: an isolated per-connection
+        # session (PgSession isolate=True — forked via newSession for pg's
+        # session-local SET semantics) binds it into its own view namespace
+        # when a statement first names it, so a view published after the
+        # fork was built resolves there too.
         df.createOrReplaceGlobalTempView(name)
-    if _LAST_REGISTER[0] != (id(spark), sf_dir):
-        # the published global-view set changed: pre-forked wire sessions
-        # bridged the OLD set at build time — invalidate the pool
-        _LAST_REGISTER[0] = (id(spark), sf_dir)
-        from bemidb_spark.session import bump_fork_epoch
-
-        bump_fork_epoch()
     return dfs
-
-
-_LAST_REGISTER: list = [None]

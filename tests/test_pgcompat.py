@@ -1219,3 +1219,82 @@ def test_isolated_session_registers_pg_catalog_lazily(spark, sf_dir):
     assert not pg2._pg_catalog_ready
     got = pg2.execute("SELECT count(*) AS n FROM pg_class").collect()
     assert got[0].n > 0 and pg2._pg_catalog_ready
+
+
+def _temp_views(session: PgSession) -> set[str]:
+    return {v.viewName for v in session.spark.sql("SHOW VIEWS").collect()
+            if v.isTemporary}
+
+
+def test_fork_binds_embedder_views_on_first_reference(spark, sf_dir):
+    """A fresh fork holds none of the embedder's views; the first statement
+    that names one binds that view and only that one."""
+    from bemidb_spark.tables import TABLES, register_views
+
+    register_views(spark, sf_dir)
+    pg = PgSession(spark, None, isolate=True)
+    assert _temp_views(pg) & set(TABLES) == set()
+    assert pg.execute("SELECT count(*) AS n FROM region").collect()[0].n == 5
+    assert _temp_views(pg) & set(TABLES) == {"region"}
+
+
+def test_fork_pg_class_lists_unreferenced_embedder_views(spark, sf_dir):
+    """pg_class (psql's \\d) on a fresh fork lists every embedder view,
+    although no statement has named one yet."""
+    from bemidb_spark.tables import TABLES, register_views
+
+    register_views(spark, sf_dir)
+    pg = PgSession(spark, None, isolate=True)
+    names = {r.relname for r in pg.execute(
+        "SELECT relname FROM pg_class").collect()}
+    assert set(TABLES) <= names
+
+
+def test_fork_embedder_view_keeps_bare_name_over_catalog_table(spark, tmp_path):
+    """An embedder view and a catalog table share a name: the bare name
+    reads the embedder view, whichever of the two a fork binds first, and
+    the qualified name reads the catalog table."""
+    from bemidb_spark.sources.writer import replace_table
+
+    spark.range(3).createOrReplaceGlobalTempView("prec_t")
+    cat = Catalog(str(tmp_path / "prec_wh"))
+    replace_table(cat, "public", "prec_t", spark.range(8).selectExpr("id"))
+    bare = "SELECT count(*) AS n FROM prec_t"
+    qualified = "SELECT count(*) AS n FROM public.prec_t"
+    a = PgSession(spark, cat, isolate=True)
+    assert a.execute(bare).collect()[0].n == 3
+    assert a.execute(qualified).collect()[0].n == 8
+    b = PgSession(spark, cat, isolate=True)
+    assert b.execute(qualified).collect()[0].n == 8
+    assert b.execute(bare).collect()[0].n == 3
+
+
+def test_fork_resolves_view_published_after_it_was_built(spark, sf_dir):
+    """register_views after a fork was built: the fork resolves the newly
+    published view on its first reference."""
+    from bemidb_spark.tables import register_views
+
+    register_views(spark, sf_dir)
+    spark.catalog.dropGlobalTempView("nation")
+    pg = PgSession(spark, None, isolate=True)
+    register_views(spark, sf_dir)
+    assert pg.execute("SELECT count(*) AS n FROM nation").collect()[0].n == 25
+
+
+def test_fork_create_ivfflat_index_on_embeddings(spark, sf_dir):
+    """CREATE INDEX … USING ivfflat on a fresh fork reads `embeddings`
+    outside statement analysis (the k-means build): it binds the view
+    first, and the indexed ORDER BY … <-> … LIMIT route serves rows."""
+    from bemidb_spark.tables import register_views
+
+    register_views(spark, sf_dir)
+    pg = PgSession(spark, None, isolate=True)
+    pg.execute("CREATE INDEX emb_ivf ON embeddings "
+                "USING ivfflat (embedding vector_l2_ops)")
+    vec = pg.spark.table("embeddings").first().embedding
+    df = pg.execute(
+        f"SELECT vec_id FROM embeddings ORDER BY embedding <-> "
+        f"'{[float(x) for x in vec]}' LIMIT 3")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "parquet" not in plan.lower()  # the probe plan, not a full scan
+    assert len(df.collect()) == 3

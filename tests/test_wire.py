@@ -113,7 +113,7 @@ def test_set_timezone_is_session_local(server):
         assert a.query("SET timezone TO 'America/New_York'")["errors"] == []
         assert a.query(q)["rows"] == [["2024-06-01 08:00:00"]]
         assert b.query(q)["rows"] == [["2024-06-01 12:00:00"]]  # unaffected
-        # data views bridged into the isolated session
+        # data views bound into the isolated session on first reference
         assert a.query("SELECT count(*) AS n FROM region")["rows"] == [["5"]]
     finally:
         a.close()
