@@ -341,6 +341,8 @@ class PgSession:
         self._bound: dict[str, int] = {}
         self._bound_views: set[str] = set()
         self._embedded: set[str] = set()  # embedder views a fork bound
+        # the embedder's view names as last listed (_embedder_views)
+        self._embedder_names: set[str] | None = None
         self._names: dict[str, str] = {}  # bindable name -> catalog key
         self._qualify_re: re.Pattern | None = None
         # Advertised pg version. Default 17.0 (the surface this engine
@@ -379,7 +381,7 @@ class PgSession:
         """Register the pg_catalog emulation views. pg_class lists the
         embedder views and the plain catalog views from the session's
         namespace, so those bind first."""
-        self._bind_embedder(self._embedder_views())
+        self._bind_embedder(self._embedder_views(refresh=True))
         if self._state.get("views") or self._bound_views:
             self._bind_views()
         register_pg_catalog(self.spark, self.catalog)
@@ -440,7 +442,8 @@ class PgSession:
         """(Re)bind catalog tables at their synced version; a table that
         left the catalog is unbound. A same-named embedder view binds first
         and keeps the bare name."""
-        self._bind_embedder({k.split(".", 1)[1].lower() for k in keys})
+        self._bind_embedder({k.split(".", 1)[1].lower() for k in keys},
+                            refresh=True)
         for key in keys:
             entry = self._state["tables"].get(key)
             if bind_catalog_table(self.spark, key, entry) and entry is not None:
@@ -449,22 +452,33 @@ class PgSession:
                 self._bound.pop(key, None)
 
     def _bind_views(self) -> None:
-        """Bind every plain catalog view — over all catalog tables, since a
-        view may read any of them."""
+        """Bind every plain catalog view — over all catalog tables and the
+        embedder views the definitions name, since a view may read any of
+        them."""
+        views = self._state.get("views", {})
+        self._bind_embedder(
+            {w for e in views.values()
+             for w in re.findall(r"\w+", e["definition"].lower())},
+            refresh=True)
         self._bind(set(self._state["tables"]) - set(self._bound))
         self._bound_views = bind_catalog_views(
-            self.spark, self._state.get("views", {}), self._bound_views,
-            self._qualify_catalog_tables)
+            self.spark, views, self._bound_views, self._qualify_catalog_tables)
 
-    def _embedder_views(self) -> set[str]:
+    def _embedder_views(self, refresh: bool = False) -> set[str]:
         """Names of the views the embedder published as global temp views
-        (shared by every session of the SparkContext); ~0.3 ms. A name that
-        is not a plain identifier cannot be bound under itself: skipped."""
-        manager = self.spark._jsparkSession.sharedState().globalTempViewManager()
-        names = manager.listViewNames("*").mkString(",").split(",")
-        return {n for n in names if n.isidentifier()}
+        (shared by every session of the SparkContext). Listing them costs
+        ~0.3 ms of JVM round trips, so the list is kept and re-read only on
+        ``refresh`` — by the paths that bind anyway or that an unresolved
+        name reaches (_resolve_missing), which is where a view published
+        after the last listing shows up. A name that is not a plain
+        identifier cannot be bound under itself: skipped."""
+        if refresh or self._embedder_names is None:
+            manager = self.spark._jsparkSession.sharedState().globalTempViewManager()
+            names = manager.listViewNames("*").mkString(",").split(",")
+            self._embedder_names = {n for n in names if n.isidentifier()}
+        return self._embedder_names
 
-    def _bind_embedder(self, names: set[str]) -> bool:
+    def _bind_embedder(self, names: set[str], refresh: bool = False) -> bool:
         """Bind into a fork the embedder views among these names that it has
         not bound yet (a plain catalog view keeps its bare name); True when
         anything was bound. A shared session reads the embedder's own temp
@@ -472,17 +486,17 @@ class PgSession:
         todo = names - self._embedded - self._bound_views
         if not self._isolated or not todo:
             return False
-        todo &= self._embedder_views()
+        todo &= self._embedder_views(refresh)
         for name in todo:
             self.spark.table(f"global_temp.{name}").createOrReplaceTempView(name)
         self._embedded |= todo
         return bool(todo)
 
-    def _bind_named(self, words: set[str]) -> bool:
+    def _bind_named(self, words: set[str], refresh: bool = False) -> bool:
         """Bind the embedder views, catalog tables and catalog views these
         names refer to that the session has not bound yet; True when
-        anything was bound."""
-        embedded = self._bind_embedder(words)
+        anything was bound. ``refresh`` re-lists the embedder's views."""
+        embedded = self._bind_embedder(words, refresh)
         keys = {self._names[w] for w in words if w in self._names}
         views = self._state.get("views", {})
         if not self._bound_views and any(k in views for k in keys):
@@ -1445,7 +1459,7 @@ class PgSession:
                     # the corpus fingerprint — an unchanged corpus replays
                     # the persisted index (pg persists ivfflat across
                     # connections too), any data/view change rebuilds.
-                    self._bind_named({table})
+                    self._bind_named({table}, refresh=True)
                     _KM_BUILT.pop(id(self.spark), None)
                     _kmeans_views(self.spark, "::pg_ivf_index::")
             dm = re.match(r"\s*DROP\s+INDEX\s+(?:IF\s+EXISTS\s+)?([\w.]+)",
@@ -1599,7 +1613,7 @@ class PgSession:
         return self._bind_named({
             w.lower() for q in re.findall(r"`([\w.]+)`", err_text)
             for w in q.split(".")
-        })
+        }, refresh=True)
 
     def _sql_vector_aware(self, text: str) -> DataFrame:
         """spark.sql with the pgvector avg(vector) retry: when analysis

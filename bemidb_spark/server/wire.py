@@ -495,8 +495,11 @@ class _Conn:
             server.register_backend(self) if server else (1, 0))
         self.job_group = f"pgwire-{self.backend_pid}"
         self.cancel_requested = False  # set by cancel() on a CancelRequest
-        # set when the running statement ends (_statement_deadline)
+        # set when the running statement ends (_statement_deadline); read
+        # and cleared under _cancel_lock, so a cancel never flags a
+        # statement that already ended
         self._running: threading.Event | None = None
+        self._cancel_lock = threading.Lock()
         # Each connection gets an isolated engine session (pg SET semantics
         # are session-local; see PgSession isolate docstring). All of this
         # backend's engine calls go through the fork, so COPY rebinds and
@@ -855,14 +858,15 @@ class _Conn:
     def cancel(self) -> None:
         """CancelRequest: cancel the running statement, on the request's own
         connection thread. On an idle backend this is a no-op, as in pg."""
-        done = self._running
-        if done is None:
-            return
-        # Flag before canceling: the failure can surface wrapped in layers
-        # that hide the "cancelled job group" cause text (e.g. the
-        # toLocalIterator socket server's awaitResult), so error
-        # classification keys on this flag, not on message matching.
-        self.cancel_requested = True
+        with self._cancel_lock:
+            done = self._running
+            if done is None:
+                return
+            # Flag before canceling: the failure can surface wrapped in
+            # layers that hide the "cancelled job group" cause text (e.g.
+            # the toLocalIterator socket server's awaitResult), so error
+            # classification keys on this flag, not on message matching.
+            self.cancel_requested = True
         self._cancel_jobs(done)
 
     def _cancel_jobs(self, done: threading.Event) -> None:
@@ -903,7 +907,8 @@ class _Conn:
                 raise self._timeout_error() from None
             raise
         finally:
-            self._running = None
+            with self._cancel_lock:
+                self._running = None
             done.set()
 
     @staticmethod

@@ -1277,8 +1277,23 @@ def test_fork_resolves_view_published_after_it_was_built(spark, sf_dir):
     register_views(spark, sf_dir)
     spark.catalog.dropGlobalTempView("nation")
     pg = PgSession(spark, None, isolate=True)
+    # the fork lists the embedder's views (without nation) on this statement
+    assert pg.execute("SELECT count(*) AS n FROM region").collect()[0].n == 5
     register_views(spark, sf_dir)
     assert pg.execute("SELECT count(*) AS n FROM nation").collect()[0].n == 25
+
+
+def test_fork_catalog_view_over_embedder_view(spark, sf_dir, tmp_path):
+    """A catalog view whose definition reads an embedder view resolves in a
+    fresh fork that has not named the embedder view itself."""
+    from bemidb_spark.tables import register_views
+
+    register_views(spark, sf_dir)
+    cat = Catalog(str(tmp_path / "embview_wh"))
+    a = PgSession(spark, cat, isolate=True)
+    a.execute("CREATE VIEW region_n AS SELECT count(*) AS n FROM region")
+    b = PgSession(spark, cat, isolate=True)
+    assert b.execute("SELECT n FROM region_n").collect()[0].n == 5
 
 
 def test_fork_create_ivfflat_index_on_embeddings(spark, sf_dir):
