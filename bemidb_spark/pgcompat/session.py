@@ -23,10 +23,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from bemidb_spark.pgcompat.catalog_views import (
+    CATALOG_RELATIONS,
     PG_DATABASE,
     PG_USER,
     bind_catalog_table,
     bind_catalog_views,
+    embedder_views,
+    local_relation,
     register_pg_catalog,
 )
 from bemidb_spark.pgcompat.permissions import extract_permissions, shadowed_permissions
@@ -80,14 +83,6 @@ def _pg_default_names(df: DataFrame) -> DataFrame:
     names = [_pg_default_name(n) for n in df.columns]
     return df.toDF(*names) if names != df.columns else df
 
-
-# Statement plainly references the pg_catalog emulation surface (lazy
-# registration's proactive trigger; see PgSession.execute). Deliberately
-# broad — `pg_` catches every pg_catalog/pg_settings/pg_* view and costs at
-# worst one early registration that the session would have needed anyway.
-_PG_CATALOG_HINT_RE = re.compile(
-    r"(?i)\bpg_|information_schema|::\s*regclass|\bregclass\b"
-)
 
 # A temp-view reference in an analyzed plan's tree string — subquery plans
 # and views over views print too, so these are every view a plan expands.
@@ -341,6 +336,7 @@ class PgSession:
         self._bound: dict[str, int] = {}
         self._bound_views: set[str] = set()
         self._embedded: set[str] = set()  # embedder views a fork bound
+        self._emulated: set[str] = set()  # pg_catalog relations bound
         # the embedder's view names as last listed (_embedder_views)
         self._embedder_names: set[str] | None = None
         self._names: dict[str, str] = {}  # bindable name -> catalog key
@@ -362,30 +358,24 @@ class PgSession:
             # forwards its engine's setting of the same name)
             "default_null_order": "nulls_last",
         }
-        # Catalog tables, embedder views and the pg_catalog emulation
-        # views: EAGER on a shared session (embedder/gate paths may read
-        # them without going through execute()), LAZY on an isolated fork —
-        # the per-connection replay of ~40 views costs ~0.7 s of py4j
-        # roundtrips on the wire handshake critical path, and most
-        # statements (all of TPC-H) never touch pg_catalog or a catalog
-        # table. A fork binds a relation when a statement names it and
-        # registers the views when one references them (_bind_statement,
-        # with _sql_vector_aware's analysis retry as the safety net), as a
-        # pg backend fills its relcache.
-        self._pg_catalog_ready = False
+        # Catalog tables, catalog views and the pg_catalog emulation
+        # relations: a shared session binds them all here, since embedder
+        # and gate paths may read them without going through execute(). An
+        # isolated fork binds each one when a statement first names it
+        # (_bind_statement, with _sql_vector_aware's analysis retry as the
+        # safety net), as a pg backend fills its relcache; the emulation
+        # relations it binds wrap the process-wide build for the catalog's
+        # schema version (catalog_views.register_pg_catalog), so a bind
+        # costs plan wrapping only.
         self._sync_catalog()
         if not isolate:
-            self._register_catalog_views()
+            self._bind_emulation(CATALOG_RELATIONS)
 
-    def _register_catalog_views(self) -> None:
-        """Register the pg_catalog emulation views. pg_class lists the
-        embedder views and the plain catalog views from the session's
-        namespace, so those bind first."""
-        self._bind_embedder(self._embedder_views(refresh=True))
-        if self._state.get("views") or self._bound_views:
-            self._bind_views()
-        register_pg_catalog(self.spark, self.catalog)
-        self._pg_catalog_ready = True
+    def _bind_emulation(self, names: set[str]) -> None:
+        """Bind these pg_catalog emulation relations at the catalog's
+        current schema version."""
+        register_pg_catalog(self.spark, self.catalog, names)
+        self._emulated |= names
 
     # ------------------------------------------------------ catalog binding
     def _sync_catalog(self) -> None:
@@ -394,8 +384,8 @@ class PgSession:
         A data commit moves one table's version: the session rebinds that
         table if it bound it and evicts only the cached plans that read it —
         a session that never read the table pays nothing. A schema_version
-        move (DDL) also drops every plan, re-derives the name maps and, in a
-        session that registered them, rebuilds the pg_catalog views."""
+        move (DDL) also drops every plan, re-derives the name maps and
+        rebinds the pg_catalog relations the session holds."""
         if self.catalog is None:
             return
         state = self.catalog.snapshot_state()
@@ -413,9 +403,10 @@ class PgSession:
             self._evict(moved)
         if not self._isolated:
             self._bind(set(state["tables"]) - set(self._bound))
-        if ddl and self._pg_catalog_ready:
-            self._register_catalog_views()
-        elif (moved or ddl) and self._bound_views:
+        if ddl and self._emulated:
+            self._bind_emulation(self._emulated)
+        if (moved or ddl) and (self._bound_views
+                               or not self._isolated and state.get("views")):
             self._bind_views()
 
     def _index_names(self) -> None:
@@ -470,12 +461,9 @@ class PgSession:
         ~0.3 ms of JVM round trips, so the list is kept and re-read only on
         ``refresh`` — by the paths that bind anyway or that an unresolved
         name reaches (_resolve_missing), which is where a view published
-        after the last listing shows up. A name that is not a plain
-        identifier cannot be bound under itself: skipped."""
+        after the last listing shows up."""
         if refresh or self._embedder_names is None:
-            manager = self.spark._jsparkSession.sharedState().globalTempViewManager()
-            names = manager.listViewNames("*").mkString(",").split(",")
-            self._embedder_names = {n for n in names if n.isidentifier()}
+            self._embedder_names = embedder_views(self.spark)
         return self._embedder_names
 
     def _bind_embedder(self, names: set[str], refresh: bool = False) -> bool:
@@ -493,9 +481,13 @@ class PgSession:
         return bool(todo)
 
     def _bind_named(self, words: set[str], refresh: bool = False) -> bool:
-        """Bind the embedder views, catalog tables and catalog views these
-        names refer to that the session has not bound yet; True when
-        anything was bound. ``refresh`` re-lists the embedder's views."""
+        """Bind the pg_catalog relations, embedder views, catalog tables and
+        catalog views these names refer to that the session has not bound
+        yet; True when anything was bound. ``refresh`` re-lists the
+        embedder's views."""
+        emulated = words & CATALOG_RELATIONS - self._emulated
+        if emulated:
+            self._bind_emulation(emulated)
         embedded = self._bind_embedder(words, refresh)
         keys = {self._names[w] for w in words if w in self._names}
         views = self._state.get("views", {})
@@ -504,16 +496,15 @@ class PgSession:
             return True
         todo = {k for k in keys if k not in views and k not in self._bound}
         self._bind(todo)
-        return embedded or bool(todo)
+        return bool(emulated) or embedded or bool(todo)
 
     def _bind_statement(self, text: str) -> None:
         """Make what a statement names resolvable before it is analyzed: the
-        pg_catalog views (a fork registers them on first reference) and the
-        embedder views, catalog tables and catalog views it names. The
-        analysis retry in _sql_vector_aware catches references this scan
-        cannot see."""
-        if not self._pg_catalog_ready and _PG_CATALOG_HINT_RE.search(text):
-            self._register_catalog_views()
+        pg_catalog relations, embedder views, catalog tables and catalog
+        views it names. Callers pass the transpiled text, so names the
+        transpiler introduces (`::regclass`, pg_get_keywords(),
+        information_schema.x) count too; the analysis retry in
+        _sql_vector_aware catches references this scan cannot see."""
         self._bind_named(set(re.findall(r"\w+", text.lower())))
 
     def _plan_reads(self, df: DataFrame) -> frozenset[str]:
@@ -839,10 +830,11 @@ class PgSession:
                  e["rows"])
                 for q, e in _STATEMENT_STATS.items()
             ]
-        self.spark.createDataFrame(
-            rows or [(10, 1, 0, "", 0, 0.0, 0.0, 0)],
+        local_relation(
+            self.spark,
             "userid int, dbid int, queryid bigint, query string, calls bigint, "
             "total_exec_time double, mean_exec_time double, rows bigint",
+            rows,
         ).createOrReplaceTempView("pg_stat_statements")
 
     # --------------------------------------------------------- transactions
@@ -1393,8 +1385,9 @@ class PgSession:
                 "", stripped, flags=re.IGNORECASE,
             )
             folded = self._qualify_catalog_tables(self._fold_session_functions(inner))
-            self._bind_statement(folded)
-            df = self._sql_vector_aware(transpile(folded))
+            text = transpile(folded)
+            self._bind_statement(text)
+            df = self._sql_vector_aware(text)
             plan = df._jdf.queryExecution().explainString(
                 self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
             )
@@ -1521,7 +1514,8 @@ class PgSession:
                 return cached
             folded = self._qualify_catalog_tables(
                 self._fold_session_functions(stripped))
-            self._bind_statement(folded)
+            text = transpile(folded)
+            self._bind_statement(text)
             if perms is None and re.search(
                 r"\b(ROLLUP|CUBE|GROUPING\s+SETS)\s*\(", folded, re.IGNORECASE
             ):
@@ -1552,9 +1546,9 @@ class PgSession:
                 # analysis binds the pruned views into the plan; execution
                 # later runs against those bound relations (permissions.py)
                 with shadowed_permissions(self.spark, perms):
-                    df = _pg_default_names(self._sql_vector_aware(transpile(folded)))
+                    df = _pg_default_names(self._sql_vector_aware(text))
             else:
-                df = _pg_default_names(self._sql_vector_aware(transpile(folded)))
+                df = _pg_default_names(self._sql_vector_aware(text))
             if cacheable:
                 self._cache_plan(stripped, df)
             return df
@@ -1599,17 +1593,9 @@ class PgSession:
 
     def _resolve_missing(self, err_text: str) -> bool:
         """Lazy binding's safety net: when the relation an analyzer error
-        names is one the pg_catalog emulation, an unbound embedder view or
-        an unbound catalog table or view provides, bind it and return True
-        (the caller retries). A
-        genuine typo pays nothing — no ~0.7 s view replay for a name the
-        registration would not provide (the bench's deliberate-error soak
-        measured that as ~1.3 s per fresh connection)."""
-        if not self._pg_catalog_ready and re.search(
-            r"`pg_\w+`|information_schema", err_text
-        ):
-            self._register_catalog_views()
-            return True
+        names is an unbound pg_catalog relation, embedder view, catalog table
+        or catalog view, bind it and return True (the caller retries). A
+        genuine typo binds nothing."""
         return self._bind_named({
             w.lower() for q in re.findall(r"`([\w.]+)`", err_text)
             for w in q.split(".")

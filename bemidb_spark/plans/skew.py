@@ -1,7 +1,8 @@
 """Skew-mitigation and co-location join strategies.
 
-Two of the classic 100 TB join techniques, with correctness pinned against a
-plain-join oracle (same results, different physical plan):
+Two of the classic 100 TB join techniques; the salted join is served, with
+correctness pinned against a plain-join oracle (same results, different
+physical plan):
 
 - **salted join**: when one join key is hot, a plain shuffle join puts the
   whole hot key in one task. Salting splits each key into SALT sub-keys
@@ -10,11 +11,12 @@ plain-join oracle (same results, different physical plan):
   spreads over SALT tasks. AQE's skew-join handles moderate skew
   automatically; explicit salting is the tool for pathological keys or
   non-AQE paths.
-- **bucketed tables** (warehouse.write_bucketed): pre-shuffling both fact
-  tables into the same bucket layout on the join key makes later joins
-  shuffle-free — the scan itself is the exchange. This is the batch analogue
-  of co-partitioned storage; at cluster scale the same declaration is
-  Iceberg's ``bucket(N, key)`` partition transform.
+- **bucketed tables**: pre-shuffling both sides into one bucket layout on
+  the join key makes later joins shuffle-free — the scan itself is the
+  exchange (Iceberg's ``bucket(N, key)`` partition transform at cluster
+  scale). No writer here records Spark bucket metadata: the catalog's
+  key-bucketed layout (sources.writer.write_bucketed_table) serves key
+  upserts, not co-located joins.
 """
 
 from __future__ import annotations

@@ -782,9 +782,9 @@ class _Conn:
     def handshake(self) -> bool:
         # The initial packet (SSLRequest / CancelRequest / StartupMessage)
         # was already consumed by WireServer._serve_conn — a CancelRequest
-        # connection must be served WITHOUT building a _Conn, because
-        # per-session setup (register_pg_catalog) can submit small Spark
-        # jobs that queue behind the victim query under FIFO scheduling.
+        # connection is served WITHOUT building a _Conn: it needs no
+        # session, and building one forks an engine session, work that
+        # must not stand between a cancel and the victim query.
         if self.password is not None and self.auth_method == "scram-sha-256":
             if not self._scram_handshake():
                 return False

@@ -96,118 +96,3 @@ def ensure_warehouse(
     os.makedirs(out, exist_ok=True)
     ingest(spark, sf_dir, out)
     return out
-
-
-def write_bucketed(
-    spark: SparkSession,
-    sf_dir: str,
-    tables_and_keys: dict[str, tuple[str, int]] | None = None,
-) -> None:
-    """Write bucketed copies of join-heavy tables (co-located join layout).
-
-    ``saveAsTable`` with ``bucketBy`` records bucket metadata in the session
-    catalog; a later join on the bucket key reads both sides pre-partitioned
-    and skips the shuffle entirely (verified by plan in tests). The cluster
-    equivalent is Iceberg's bucket(N, key) partition transform.
-    """
-    tables_and_keys = tables_and_keys or {
-        "lineitem": ("l_orderkey", 8),
-        "orders": ("o_orderkey", 8),
-    }
-    import shutil
-
-    src = load_tables(spark, sf_dir)
-    warehouse_root = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for name, (key, n_buckets) in tables_and_keys.items():
-        spark.sql(f"DROP TABLE IF EXISTS {name}_bucketed")
-        # a previous session's managed-table dir blocks saveAsTable
-        shutil.rmtree(os.path.join(warehouse_root, f"{name}_bucketed"), ignore_errors=True)
-        (
-            src[name]
-            .write.bucketBy(n_buckets, key)
-            .sortBy(key)
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(f"{name}_bucketed")
-        )
-
-
-def write_partitioned_events(spark: SparkSession, sf_dir: str, out_dir: str) -> str:
-    """Write events hive-partitioned by event_date (Iceberg hidden-partitioning
-    stand-in: the partition column is *derived* from ts at write time, and
-    date-range predicates prune whole partition directories — verified by
-    PartitionFilters in the scan plan)."""
-    ev = load_tables(spark, sf_dir)["events"]
-    path = os.path.join(out_dir, "events_partitioned.parquet")
-    (
-        ev.withColumn("event_date", F.col("ts").cast("date"))
-        .repartition("event_date")
-        .write.mode("overwrite")
-        .partitionBy("event_date")
-        .parquet(path)
-    )
-    return path
-
-
-def zorder_key(col_a, col_b, bits: int = 16) -> "F.Column":
-    """Interleaved-bit (Morton / Z-order) sort key over two rank-normalized
-    int columns — pure Spark expressions, codegen'd per row.
-
-    Sorting files by this key gives every file a *narrow min/max range on
-    BOTH columns*, so parquet footer stats can skip files for predicates on
-    either one — the property a single-column sort only provides for its
-    leading column. This is the same layout Iceberg/Delta expose as
-    ``zorder by (a, b)``; at 100 TB it is the difference between pruning on
-    one dimension and pruning on all of them.
-    """
-    expr = F.lit(0).cast("bigint")
-    for i in range(bits):
-        bit_a = F.shiftright(col_a.cast("bigint"), i).bitwiseAND(F.lit(1))
-        bit_b = F.shiftright(col_b.cast("bigint"), i).bitwiseAND(F.lit(1))
-        expr = expr.bitwiseOR(
-            F.shiftleft(bit_a, 2 * i + 1).bitwiseOR(F.shiftleft(bit_b, 2 * i))
-        )
-    return expr
-
-
-def write_zordered(
-    spark: SparkSession,
-    df,
-    out_path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-    bits: int = 16,
-) -> str:
-    """Write df as n_files parquet files clustered by Z-order over (a, b).
-
-    Values are min/max-normalized into the bit budget with one tiny
-    aggregate (broadcast back as literals — no global window, nothing
-    single-partition), then interleaved and range-sorted: one shuffle total,
-    exactly what a production OPTIMIZE ... ZORDER rewrite costs. Quantile
-    binning (approxQuantile boundaries) is the drop-in refinement when a
-    column is heavily skewed.
-    """
-    lo_a, hi_a, lo_b, hi_b = df.agg(
-        F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
-    ).first()
-    scale = (1 << bits) - 1
-
-    def norm(col: str, lo, hi) -> "F.Column":
-        span = max(int(hi) - int(lo), 1)
-        return ((F.col(col) - F.lit(int(lo))) * scale / F.lit(span)).cast("bigint")
-
-    keyed = df.withColumn("_za", norm(col_a, lo_a, hi_a)).withColumn(
-        "_zb", norm(col_b, lo_b, hi_b)
-    )
-    keyed = keyed.withColumn("_zkey", zorder_key(F.col("_za"), F.col("_zb"), bits))
-    (
-        keyed.repartitionByRange(n_files, F.col("_zkey"))
-        .sortWithinPartitions("_zkey")
-        .drop("_za", "_zb", "_zkey")
-        .write.mode("overwrite")
-        .parquet(out_path)
-    )
-    return out_path

@@ -939,31 +939,30 @@ def test_recursive_cte_genuinely_self_recursive(pg):
 
 
 def test_pg_catalog_fast_registration_matches_slow(spark, tmp_path_factory):
-    """The per-connection fast path (cached analyzed plans re-registered via
-    plan wrapping, catalog_views._PLAN_CACHE) must produce views identical
-    to a full rebuild, and must MISS the cache after DDL bumps the catalog
-    version — a new connection sees the new table in pg_class."""
-    from bemidb_spark.pgcompat import catalog_views as cv
+    """Every fork wraps one shared build: two forks see identical pg_class,
+    pg_namespace, pg_type and information_schema_columns, every emulation
+    relation resolves on a fresh fork, and DDL makes a new table visible
+    in an existing fork and in a new one."""
+    from bemidb_spark.pgcompat.catalog_views import CATALOG_RELATIONS
 
     catalog = Catalog(str(tmp_path_factory.mktemp("fastwh")))
-    a = PgSession(spark, catalog, isolate=True)   # slow path, fills cache
-    b = PgSession(spark, catalog, isolate=True)   # fast path from cache
+    a = PgSession(spark, catalog, isolate=True)
+    b = PgSession(spark, catalog, isolate=True)
     for view in ("pg_class", "pg_namespace", "pg_type",
                  "information_schema_columns"):
         rows_a = sorted(map(tuple, a.execute(f"SELECT * FROM {view}").collect()))
         rows_b = sorted(map(tuple, b.execute(f"SELECT * FROM {view}").collect()))
         assert rows_a == rows_b, view
-    # every static view the slow path creates is present on the fast session
-    missing = [n for n in cv._STATIC_VIEW_NAMES
-               if not b.spark.catalog.tableExists(n)]
-    assert not missing, missing
-    # DDL bumps the catalog version -> the cache key changes -> a NEW
-    # connection rebuilds and sees the table
+    fresh = PgSession(spark, catalog, isolate=True)
+    for name in sorted(CATALOG_RELATIONS):
+        assert fresh.execute(f"SELECT * FROM {name} LIMIT 0").collect() == []
+    assert fresh._emulated == CATALOG_RELATIONS
     a.execute("CREATE TABLE fastreg_t (id int, name text)")
+    query = "SELECT relname FROM pg_class WHERE relname = 'fastreg_t'"
     c = PgSession(spark, catalog, isolate=True)
-    names = {r.relname for r in c.execute(
-        "SELECT relname FROM pg_class WHERE relname = 'fastreg_t'").collect()}
-    assert names == {"fastreg_t"}
+    for session in (b, c):
+        names = {r.relname for r in session.execute(query).collect()}
+        assert names == {"fastreg_t"}
 
 
 def test_pgvector_operators_match_numpy(pg, spark):
@@ -1109,12 +1108,13 @@ def test_pgvector_avg_group_by(pg):
         (1, [2.0, 4.0]), (2, [10.0, 0.0])]
 
 
-def test_register_pg_catalog_memo_and_version_bump(spark, tmp_path):
-    """A session rebuilds its pg_catalog views only when the catalog's
-    schema_version moves: a statement with nothing moved and a data-only
-    commit leave them as they are, a new table (DDL) rebuilds the dynamic
-    views so pg_class shows it at once, and the static views survive that
-    static-skip rebuild."""
+def test_register_pg_catalog_memo_and_version_bump(spark, tmp_path, monkeypatch):
+    """The emulation relations are built once per catalog schema_version: a
+    statement with nothing moved and a data-only commit build nothing and
+    leave a fork's bound relations as they are; a new table (DDL) builds
+    the inventory-derived relations again, and the fork's pg_class shows it
+    at once."""
+    from bemidb_spark.pgcompat import catalog_views as cv
     from bemidb_spark.sources.catalog import Catalog
     from bemidb_spark.sources.writer import replace_table
 
@@ -1122,21 +1122,25 @@ def test_register_pg_catalog_memo_and_version_bump(spark, tmp_path):
     replace_table(cat, "public", "memo_d", spark.range(3).selectExpr("id AS k"))
     pg = PgSession(spark, cat, isolate=True)
     assert pg.execute("SELECT count(*) AS n FROM pg_class").collect()[0].n > 0
-    # Structural proof of the no-op: overwrite a DYNAMIC emulation view with
-    # a marker; only a rebuild replaces it.
+    built = []
+    real = cv.local_relation
+    monkeypatch.setattr(cv, "local_relation",
+                        lambda spark, ddl, rows: built.append(ddl) or real(spark, ddl, rows))
+    # Structural proof of the no-op: overwrite a bound relation with a
+    # marker; only a rebind replaces it.
     pg.spark.sql("SELECT 'marker' AS schemaname").createOrReplaceTempView(
-        "pg_matviews")
+        "pg_class")
     pg.execute("SELECT 1 AS one").collect()  # nothing moved
-    assert pg.spark.table("pg_matviews").columns == ["schemaname"]
     replace_table(cat, "public", "memo_d", spark.range(5).selectExpr("id AS k"))
     assert pg.execute("SELECT count(*) AS n FROM memo_d").collect()[0].n == 5
-    assert pg.spark.table("pg_matviews").columns == ["schemaname"]
+    assert pg.spark.table("pg_class").columns == ["schemaname"]
+    assert built == []
 
     replace_table(cat, "public", "memo_t", spark.range(3).selectExpr("id AS k"))
     assert pg.execute(
         "SELECT relname FROM pg_class WHERE relname = 'memo_t'"
     ).count() == 1
-    assert "matviewname" in pg.spark.table("pg_matviews").columns  # rebuilt
+    assert 0 < len(built) < len(cv.CATALOG_RELATIONS)  # unchanged ones kept
     assert pg.execute("SELECT count(*) AS n FROM pg_am").collect()[0].n == 1
 
 
@@ -1192,33 +1196,133 @@ def test_data_commit_rebinds_only_the_written_table(spark, tmp_path, monkeypatch
 
 
 def test_isolated_session_registers_pg_catalog_lazily(spark, sf_dir):
-    """An isolated fork (the wire per-connection path) defers the ~0.7 s
-    pg_catalog view replay off the connection handshake: data queries run
-    without it, and the first statement that references the emulation
-    surface registers on demand (r9 wave 4). Eager behavior is unchanged
-    for shared sessions."""
+    """An isolated fork (the wire per-connection path) binds no emulation
+    relation when it is built: data queries run without one, and a
+    statement binds the ones it names — also names the transpiler
+    introduces. A shared session binds all of them at construction."""
+    from bemidb_spark.pgcompat.catalog_views import CATALOG_RELATIONS
     from bemidb_spark.tables import register_views
 
     register_views(spark, sf_dir)
     pg = PgSession(spark, None, isolate=True)
-    # not registered at init: the fork has no pg emulation views yet
-    assert not pg._pg_catalog_ready
-    assert not pg.spark.catalog.tableExists("pg_keywords_view")
-    # a plain data query runs without ever registering
+    assert _temp_views(pg) & CATALOG_RELATIONS == set()
     assert pg.execute("SELECT count(*) AS n FROM region").collect()[0].n == 5
-    assert not pg._pg_catalog_ready
-    # first catalog-surface statement triggers registration and resolves
+    assert _temp_views(pg) & CATALOG_RELATIONS == set()
     rows = pg.execute(
         "SELECT relname FROM pg_class WHERE relname = 'region'").collect()
     assert [r.relname for r in rows] == ["region"]
-    assert pg._pg_catalog_ready
-
-    # the analysis-retry safety net also triggers when the proactive regex
-    # cannot see the reference (simulate: flag off, views dropped)
+    assert _temp_views(pg) & CATALOG_RELATIONS == {"pg_class"}
+    # names the transpiler introduces: information_schema.x, pg_get_keywords()
+    assert pg.execute("SELECT count(*) AS n FROM information_schema.tables "
+                      "WHERE table_name = 'region'").collect()[0].n == 1
+    assert pg.execute("SELECT word FROM pg_get_keywords() "
+                      "WHERE word = 'abort'").count() == 1
+    assert _temp_views(pg) & CATALOG_RELATIONS == {
+        "pg_class", "information_schema_tables", "pg_keywords_view"}
+    # the analysis retry is the safety net for a name no scan saw
     pg2 = PgSession(spark, None, isolate=True)
-    assert not pg2._pg_catalog_ready
-    got = pg2.execute("SELECT count(*) AS n FROM pg_class").collect()
-    assert got[0].n > 0 and pg2._pg_catalog_ready
+    assert pg2._sql_vector_aware("SELECT count(*) AS n FROM pg_am").collect()[0].n == 1
+    shared = PgSession(spark, None)
+    assert CATALOG_RELATIONS <= _temp_views(shared)
+
+
+def test_pg_catalog_builds_once_per_key(spark, tmp_path, monkeypatch):
+    """Many forks that name pg_catalog relations share one build; the
+    inventory is read once per (catalog root, schema_version, embedder
+    view names)."""
+    from bemidb_spark.pgcompat import catalog_views as cv
+
+    cat = Catalog(str(tmp_path / "once_wh"))
+    calls = []
+    real = cv._inventory
+    monkeypatch.setattr(cv, "_inventory",
+                        lambda *a: calls.append(a) or real(*a))
+    for _ in range(4):
+        pg = PgSession(spark, cat, isolate=True)
+        assert pg.execute("SELECT count(*) AS n FROM pg_namespace").collect()[0].n >= 3
+    assert len(calls) == 1
+
+
+def test_fork_psql_describe_binds_three_relations(spark, sf_dir):
+    """psql's \\d on a fresh fork binds pg_class, pg_namespace and pg_am
+    and no other emulation relation."""
+    from bemidb_spark.pgcompat.catalog_views import CATALOG_RELATIONS
+    from bemidb_spark.tables import register_views
+
+    register_views(spark, sf_dir)
+    pg = PgSession(spark, None, isolate=True)
+    rows = pg.execute(
+        "SELECT n.nspname as \"Schema\", c.relname as \"Name\", "
+        "CASE c.relkind WHEN 'r' THEN 'table' WHEN 'v' THEN 'view' "
+        "WHEN 'm' THEN 'materialized view' END as \"Type\", "
+        "pg_catalog.pg_get_userbyid(c.relowner) as \"Owner\" "
+        "FROM pg_catalog.pg_class c "
+        "LEFT JOIN pg_catalog.pg_namespace n ON n.oid = c.relnamespace "
+        "LEFT JOIN pg_catalog.pg_am am ON am.oid = c.relam "
+        "WHERE c.relkind IN ('r','p','v','m','S','f','') "
+        "AND n.nspname <> 'pg_catalog' AND n.nspname !~ '^pg_toast' "
+        "AND n.nspname <> 'information_schema' "
+        "AND pg_catalog.pg_table_is_visible(c.oid) ORDER BY 1,2").collect()
+    assert ("public", "region", "table", "bemidb") in {tuple(r) for r in rows}
+    assert _temp_views(pg) & CATALOG_RELATIONS == {
+        "pg_class", "pg_namespace", "pg_am"}
+
+
+def test_pg_catalog_relations_are_local(spark):
+    """No emulation relation is an RDD scan: each analyzed plan is a
+    LocalRelation, which plans without Spark jobs."""
+    from bemidb_spark.pgcompat.catalog_views import CATALOG_RELATIONS
+
+    pg = PgSession(spark, None)
+    for name in sorted(CATALOG_RELATIONS):
+        plan = pg.spark.table(name)._jdf.queryExecution().analyzed().toString()
+        assert "LogicalRDD" not in plan and "LocalRelation" in plan, name
+
+
+def test_pg_class_lists_catalog_views_once(spark, tmp_path):
+    """A catalog view is listed once, under its own schema, in pg_class and
+    information_schema.tables: no phantom base table from the
+    `<schema>_<name>` name it is bound under."""
+    cat = Catalog(str(tmp_path / "phantom_wh"))
+    a = PgSession(spark, cat, isolate=True)
+    a.execute("CREATE TABLE ph_t1 (id int, name text)")
+    a.execute("CREATE VIEW ph_v1 AS SELECT id FROM ph_t1")
+    a.execute("CREATE VIEW ph_s2.ph_v2 AS SELECT name FROM ph_t1")
+    b = PgSession(spark, cat, isolate=True)
+    cls = {tuple(r) for r in b.execute(
+        "SELECT n.nspname, c.relname, c.relkind FROM pg_class c "
+        "JOIN pg_namespace n ON n.oid = c.relnamespace "
+        "WHERE c.relname LIKE 'ph%'").collect()}
+    assert cls == {("public", "ph_t1", "r"), ("public", "ph_v1", "v"),
+                   ("ph_s2", "ph_v2", "v")}
+    tables = {tuple(r) for r in b.execute(
+        "SELECT table_schema, table_name, table_type "
+        "FROM information_schema.tables "
+        "WHERE table_name LIKE 'ph%'").collect()}
+    assert tables == {("public", "ph_t1", "BASE TABLE"),
+                      ("public", "ph_v1", "VIEW"), ("ph_s2", "ph_v2", "VIEW")}
+    cols = {tuple(r) for r in b.execute(
+        "SELECT table_schema, table_name, column_name "
+        "FROM information_schema.columns "
+        "WHERE table_name IN ('ph_v1', 'ph_v2')").collect()}
+    assert cols == {("public", "ph_v1", "id"), ("ph_s2", "ph_v2", "name")}
+
+
+def test_empty_catalog_information_schema_has_no_rows(spark, tmp_path):
+    """On an empty catalog with no embedder views, information_schema.views
+    and information_schema.columns return zero rows, as pg does."""
+    from bemidb_spark.pgcompat.catalog_views import embedder_views
+
+    published = {n: spark.table(f"global_temp.{n}") for n in embedder_views(spark)}
+    for name in published:
+        spark.catalog.dropGlobalTempView(name)
+    try:
+        pg = PgSession(spark, Catalog(str(tmp_path / "empty_wh")), isolate=True)
+        assert pg.execute("SELECT * FROM information_schema.views").collect() == []
+        assert pg.execute("SELECT * FROM information_schema.columns").collect() == []
+    finally:
+        for name, df in published.items():
+            df.createOrReplaceGlobalTempView(name)
 
 
 def _temp_views(session: PgSession) -> set[str]:

@@ -48,94 +48,3 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
         .collect()
     )
     assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
-
-
-def test_bucketed_join_skips_shuffle(spark, sf_dir, tmp_path_factory):
-    import contextlib
-    import io
-
-    from bemidb_spark import warehouse as wh
-
-    wh.write_bucketed(spark, sf_dir)
-    # force a non-broadcast join so the bucketed (shuffle-free) path shows
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.sql("""
-            SELECT o_orderpriority, count(*) AS n
-            FROM lineitem_bucketed l JOIN orders_bucketed o
-              ON l.l_orderkey = o.o_orderkey
-            GROUP BY o_orderpriority
-        """)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        # the join itself is exchange-free: the only Exchange is the groupBy's
-        join_section = plan.split("HashAggregate")[0]
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert "Exchange" not in join_section
-        assert joined.count() == 5
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_partitioned_events_prune(spark, sf_dir, tmp_path_factory):
-    import contextlib
-    import io
-
-    from bemidb_spark import warehouse as wh
-
-    out = str(tmp_path_factory.mktemp("part"))
-    path = wh.write_partitioned_events(spark, sf_dir, out)
-    df = (
-        spark.read.parquet(path)
-        .filter("event_date BETWEEN DATE '2024-01-05' AND DATE '2024-01-06'")
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    assert "event_date" in plan.split("PartitionFilters", 1)[1][:200]
-    # only the two selected day-partitions are read
-    n = df.count()
-    total = spark.read.parquet(path).count()
-    assert 0 < n < total
-
-
-def test_zorder_files_are_narrow_on_both_columns(spark, tmp_path):
-    """Z-order clustering: every output file covers a narrow slice of BOTH
-    sort columns, so footer min/max stats can skip files for predicates on
-    either — a single-column sort only achieves this for its leading key."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from bemidb_spark.warehouse import write_zordered
-
-    n = 40_000
-    df = spark.range(n).selectExpr(
-        "CAST(pmod(hash(id), 100000) AS BIGINT) AS x",
-        "CAST(pmod(hash(id * 7 + 3), 100000) AS BIGINT) AS y",
-    )
-    path = str(tmp_path / "z.parquet")
-    write_zordered(spark, df, path, "x", "y", n_files=16)
-
-    spans_x, spans_y = [], []
-    for f in glob.glob(f"{path}/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        mins_x = min(md.row_group(i).column(0).statistics.min for i in range(md.num_row_groups))
-        maxs_x = max(md.row_group(i).column(0).statistics.max for i in range(md.num_row_groups))
-        mins_y = min(md.row_group(i).column(1).statistics.min for i in range(md.num_row_groups))
-        maxs_y = max(md.row_group(i).column(1).statistics.max for i in range(md.num_row_groups))
-        spans_x.append((maxs_x - mins_x) / 100000)
-        spans_y.append((maxs_y - mins_y) / 100000)
-    # With 16 z-ordered files, the average per-file span on EACH column is a
-    # fraction of the domain (a 1-column sort gives ~1/16 on x but ~1.0 on y).
-    assert len(spans_x) >= 8
-    assert sum(spans_x) / len(spans_x) < 0.6
-    assert sum(spans_y) / len(spans_y) < 0.6
-    # and a point-range predicate on either column can skip most files
-    assert sum(1 for s in spans_x if s < 0.9) > len(spans_x) // 2
-    assert sum(1 for s in spans_y if s < 0.9) > len(spans_y) // 2
