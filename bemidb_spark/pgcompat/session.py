@@ -18,7 +18,10 @@ distributed plan entirely.
 from __future__ import annotations
 
 import re
+import threading
 
+from pyspark.errors import PySparkException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -87,6 +90,14 @@ def _pg_default_names(df: DataFrame) -> DataFrame:
 # A temp-view reference in an analyzed plan's tree string — subquery plans
 # and views over views print too, so these are every view a plan expands.
 _VIEW_NODE_RE = re.compile(r"View \(`([^`]+)`")
+
+# PySpark writes every error it captures from the JVM to these loggers at
+# ERROR, with the JVM stack, as it raises it; _sql_vector_aware mutes them on
+# its own thread while it probes analysis, so a caught failure is not logged.
+_CAPTURED_LOG = threading.local()
+for _name in ("SQLQueryContextLogger", "DataFrameQueryContextLogger"):
+    PySparkLogger.getLogger(_name).addFilter(
+        lambda record: not getattr(_CAPTURED_LOG, "muted", False))
 
 _AVG_VEC_ERR_RE = re.compile(
     r'Cannot resolve "avg\((.+?)\)" due to data type mismatch.*?'
@@ -1535,8 +1546,8 @@ class PgSession:
                         # pg_catalog retry must fire HERE — a silent
                         # fallback to the uncompensated path would change
                         # the empty-grouping result on a fresh fork
-                        df = _pg_default_names(
-                            self._sql_vector_aware(transpile(comp)))
+                        df = _pg_default_names(self._sql_vector_aware(
+                            transpile(comp), log_failure=False))
                         if cacheable:
                             self._cache_plan(stripped, df)
                         return df
@@ -1601,27 +1612,41 @@ class PgSession:
             for w in q.split(".")
         }, refresh=True)
 
-    def _sql_vector_aware(self, text: str) -> DataFrame:
-        """spark.sql with the pgvector avg(vector) retry: when analysis
-        reports avg over ARRAY<DOUBLE> (a vector column), rewrite that avg
-        into the element-wise mean and retry — one pass per distinct vector
-        operand, bounded."""
-        for _ in range(4):
-            try:
-                return self.spark.sql(text)
-            except Exception as exc:  # noqa: BLE001 — analyzer error probe
-                s = str(exc)
-                if ("TABLE_OR_VIEW_NOT_FOUND" in s
-                        or "UnresolvedRelation" in s) and self._resolve_missing(s):
-                    continue
-                m = _AVG_VEC_ERR_RE.search(s)
-                if m is None:
-                    raise
-                new = _rewrite_vector_avg(text, m.group(1))
-                if new == text:
-                    raise
-                text = new
-        return self.spark.sql(text)
+    def _sql_vector_aware(self, text: str, *, log_failure: bool = True) -> DataFrame:
+        """spark.sql with the analysis retries: an unbound relation is bound
+        (_resolve_missing), and when analysis reports avg over ARRAY<DOUBLE>
+        (a vector column) that avg is rewritten into the element-wise mean —
+        one pass per distinct vector operand, bounded.
+
+        The attempts run with PySpark's captured-error log muted, so a
+        statement a retry rescues writes no ERROR record; one that fails for
+        good writes the record of its final error, unless ``log_failure`` is
+        False (the caller falls back to another plan)."""
+        _CAPTURED_LOG.muted = True
+        try:
+            for _ in range(4):
+                try:
+                    return self.spark.sql(text)
+                except Exception as exc:  # noqa: BLE001 — analyzer error probe
+                    s = str(exc)
+                    if ("TABLE_OR_VIEW_NOT_FOUND" in s
+                            or "UnresolvedRelation" in s) and self._resolve_missing(s):
+                        continue
+                    m = _AVG_VEC_ERR_RE.search(s)
+                    if m is None:
+                        raise
+                    new = _rewrite_vector_avg(text, m.group(1))
+                    if new == text:
+                        raise
+                    text = new
+            return self.spark.sql(text)
+        except PySparkException as exc:
+            _CAPTURED_LOG.muted = False
+            if log_failure:
+                exc._log_exception()
+            raise
+        finally:
+            _CAPTURED_LOG.muted = False
 
     def invalidate_plans(self) -> None:
         """Drop every cached prepared plan (DDL or a setting change; a data

@@ -48,16 +48,12 @@ CANCEL_REQUEST = 80877102
 # just options and caps small, matching pg's 10 kB limit.
 MAX_MESSAGE_BYTES = 256 * 1024 * 1024
 
-# Adaptive result fetch: a statement whose last observed result was at most
-# this many rows is served by one collect() job instead of per-partition
-# toLocalIterator jobs (see _Conn._row_stream_for). Streaming remains the
-# default for first-seen and large results. The collect fetches through
-# Arrow (batches cross the JVM boundary columnar instead of pickled rows —
-# measured 0.92 -> 0.52 s for the 22-query resident pass at sf0.1, ~18 ms/
-# statement); served bytes are pinned identical to collect() by
-# tools/wire_bytes_identity.py + tests/test_wire.py, and schemas the
-# identity argument doesn't cover (struct/map/year-month-interval and
-# anything unrecognized) decline Arrow per _arrow_safe_schema and collect().
+# Result fetch (_Conn._row_stream_for): every result is first fetched as one
+# Arrow job capped at this many rows + 1; a result that overflows the cap,
+# or whose schema Arrow cannot carry byte-identically (_arrow_safe_schema:
+# struct/map/year-month-interval and anything unrecognized), streams
+# partition-at-a-time instead. Served bytes are pinned identical to
+# collect() by tools/wire_bytes_identity.py + tests/test_wire.py.
 _WIRE_COLLECT_MAX_ROWS = 50_000
 # Output buffering for row/CopyData frames: flush threshold in bytes.
 _SEND_BUFFER_BYTES = 64 * 1024
@@ -432,20 +428,28 @@ def _strip_tz_arrow_type(t):
 def _arrow_fetch_rows(limited: DataFrame) -> list | None:
     """Fetch ``limited``'s rows via one Arrow job (``toArrow``) as a list of
     tuples whose Python objects match ``collect()`` exactly, or ``None``
-    when the schema can't be proven byte-identical (caller collects).
+    when Arrow cannot carry the result byte-identically (the caller
+    streams it instead).
 
     ``collect()`` deserializes pickled Rows one at a time;
     ``toArrow`` ships the same result as columnar Arrow batches —
-    measured 1.8x faster on the resident 22-query pass (module header).
+    measured 1.8x faster on the resident 22-query pass at sf0.1.
     The one representational difference — Arrow timestamps carry the UTC
     session zone, ``collect`` yields naive UTC wall time — is normalized by
     casting tz-aware columns to naive BEFORE ``to_pylist`` (epoch unchanged,
-    so the wall-time digits are identical)."""
+    so the wall-time digits are identical).
+
+    Only a conversion failure returns ``None``: PySpark's schema mapping
+    (``TypeError``) or pyarrow's (``ArrowException``). A failure of the
+    statement itself — a runtime error, a cancel, a timeout — raises from
+    this one run; falling back on it would run the statement again."""
+    import pyarrow as pa
+
     if not _arrow_safe_schema(limited.schema):
         return None
     try:
         tbl = limited.toArrow()
-    except Exception:  # noqa: BLE001 — unsupported plan/type: collect instead
+    except (TypeError, pa.ArrowException):
         return None
     cols = []
     for col in tbl.columns:
@@ -462,10 +466,9 @@ def _arrow_fetch_rows(limited: DataFrame) -> list | None:
 class _Prepared:
     sql: str
     params: list[str | None] = field(default_factory=list)
-    # (df, live row iterator) — rows stream partition-at-a-time from the
-    # executors (toLocalIterator), or, for statements whose observed result
-    # is known-small, a single CAPPED collect (LIMIT max_rows+1 with a
-    # streaming fallback on overflow — see _row_stream_for). Either way the
+    # (df, live row iterator) — the rows of one capped Arrow fetch (LIMIT
+    # max_rows+1), or, when that overflows or Arrow declines the schema, a
+    # partition-at-a-time stream (see _row_stream_for). Either way the
     # portal never buffers an unbounded result set on the driver: `SELECT *
     # FROM huge` over the wire stays O(partition) driver memory, matching
     # how Postgres itself streams DataRows.
@@ -513,22 +516,6 @@ class _Conn:
         self.spark = self.session.spark
         self.prepared: dict[str, _Prepared] = {}
         self.portals: dict[str, _Prepared] = {}
-        # Last observed result-row count per statement text — feeds the
-        # adaptive fetch in _row_stream_for (see there). Bounded FIFO,
-        # shared server-wide so fresh connections inherit the hints (a
-        # standalone _Conn keeps a private dict).
-        self._result_rows: dict[str, int] = (
-            server._result_rows if server is not None else {}
-        )
-        # statement text -> (source df, df.limit(max+1)) for the capped
-        # collect fast-path: building the limited Dataset per execution
-        # would re-run analysis+optimization of the whole query (~200 ms at
-        # sf0.1 — measured as a 1.1 -> 4.3 s wire regression); memoizing it
-        # keeps the resident-plan reuse the fast path exists for. The `is`
-        # identity check on the source df invalidates the memo whenever the
-        # session serves a fresh Dataset (DML/DDL plan invalidation,
-        # reexecute mode), so the limited plan can never outlive its source.
-        self._limited_plans: dict[str, tuple] = {}
 
     # ---------------------------------------------------------------- frames
     def _recv_exact(self, n: int) -> bytes:
@@ -676,8 +663,8 @@ class _Conn:
         self._send(b"T", payload)
 
     def _send_rows(self, df: DataFrame, rows, formats: list[int] | None = None) -> int:
-        """Encode and send DataRows from any row iterable (list or live
-        ``toLocalIterator``) — counting as it streams, never materializing.
+        """Encode and send DataRows from any row iterable (fetched list or
+        live stream) — counting as it streams, never materializing.
 
         DataRow frames are batched into an output buffer flushed at
         ``_SEND_BUFFER_BYTES``: one sendall per ~64 KB instead of one
@@ -716,67 +703,28 @@ class _Conn:
         return iter(df.toLocalIterator(prefetchPartitions=True))
 
     def _row_stream_for(self, sql: str, df: DataFrame):
-        """Adaptive result fetch (guide §5: the driver should do almost no
-        data work — and no repeated per-partition jobs either).
+        """The rows of ``df`` for the wire: one capped Arrow fetch, else a
+        stream.
 
-        ``toLocalIterator`` launches one Spark job per result partition;
-        measured at sf0.1 that is ~175 ms/statement of pure job-scheduling
-        overhead against ~40 ms for a single ``collect`` job
-        (tools/probe_wire_phase.py: toLocalIterator 3.87 s vs collect
-        0.91 s for the 22-query suite). A first execution of a statement
-        streams partition-at-a-time (unknown result size — the O(partition)
-        driver-memory contract for `SELECT * FROM huge` stands); once the
-        statement's observed row count is known to be small it is served by
-        one collect job. Row counts re-record on every completion, so a
-        statement whose result grows past the bound falls back to streaming
-        on its next run.
-
-        The collect is CAPPED: the hint can be stale (the table grew via a
-        bulk COPY/INSERT since the count was recorded, or another session's
-        same-text statement saw different data), and an uncapped
-        ``df.collect()`` on a grown result would materialize it all on the
-        driver — at scale a driver OOM that takes the whole server down, not
-        a slow fetch. ``LIMIT max_rows+1`` bounds what the driver can ever
-        hold; on overflow the fetch falls back to the streaming iterator
-        (full result, O(partition) driver memory) and the re-recorded count
-        keeps it streaming from then on. A limit >= the true row count
-        returns every row in the plan's partition order — the same sequence
-        ``collect()`` yields — so the served bytes are identical."""
-        n = self._result_rows.get(sql)
-        if n is not None and n <= _WIRE_COLLECT_MAX_ROWS:
-            cached = self._limited_plans.get(sql)
-            if cached is not None and cached[0] is df:
-                limited = cached[1]
-            else:
-                limited = df.limit(_WIRE_COLLECT_MAX_ROWS + 1)
-                if sql not in self._limited_plans and len(self._limited_plans) >= 256:
-                    try:
-                        self._limited_plans.pop(
-                            next(iter(self._limited_plans)), None)
-                    except (StopIteration, RuntimeError):
-                        pass
-                self._limited_plans[sql] = (df, limited)
-            probe = _arrow_fetch_rows(limited)
-            if probe is None:
-                probe = limited.collect()
-            if len(probe) <= _WIRE_COLLECT_MAX_ROWS:
-                return iter(probe)
-            # Stale hint: the result outgrew the bound. Drop the capped
-            # probe and stream the full result instead — the driver never
-            # holds more than max_rows+1 rows of it at once.
-            del probe
+        The fetch runs ``df.limit(max_rows+1)`` as one Arrow job
+        (``toLocalIterator`` would run one job per result partition). The
+        capped plan lives on the Dataset it caps (``df._pg_capped``), so a
+        resident plan-cache hit re-runs the same executed plan, while a
+        fresh Dataset (a new text, a plan invalidated by DML/DDL, reexecute
+        mode) builds its own and no result outlives its execution. The cap
+        bounds what the driver holds: a result that overflows it, or that
+        Arrow cannot carry, streams partition-at-a-time (``_row_stream``),
+        so ``SELECT * FROM huge`` stays O(partition) driver memory. A limit
+        above the row count returns every row in the plan's partition
+        order, the same sequence ``collect()`` yields."""
+        capped = getattr(df, "_pg_capped", None)
+        if capped is None:
+            capped = df._pg_capped = df.limit(_WIRE_COLLECT_MAX_ROWS + 1)
+        rows = _arrow_fetch_rows(capped)
+        if rows is not None and len(rows) <= _WIRE_COLLECT_MAX_ROWS:
+            return iter(rows)
+        del rows  # an overflowing probe is dropped before the stream starts
         return self._row_stream(df)
-
-    def _note_result_rows(self, sql: str, n: int) -> None:
-        if sql not in self._result_rows and len(self._result_rows) >= 1024:
-            # pop(key, None): two connection threads can race to the same
-            # first key; the default makes the loser a no-op instead of a
-            # KeyError mid-query (the dict mutates between next() and pop()).
-            try:
-                self._result_rows.pop(next(iter(self._result_rows)), None)
-            except (StopIteration, RuntimeError):
-                pass  # dict emptied/resized under us — nothing to evict
-        self._result_rows[sql] = n
 
     # --------------------------------------------------------------- startup
     def handshake(self) -> bool:
@@ -864,7 +812,7 @@ class _Conn:
                 return
             # Flag before canceling: the failure can surface wrapped in
             # layers that hide the "cancelled job group" cause text (e.g.
-            # the toLocalIterator socket server's awaitResult), so error
+            # the result socket server's awaitResult), so error
             # classification keys on this flag, not on message matching.
             self.cancel_requested = True
         self._cancel_jobs(done)
@@ -937,7 +885,6 @@ class _Conn:
         t0 = time.monotonic()
         self._send_row_description(df)
         n = self._send_rows(df, self._row_stream_for(sql, df))
-        self._note_result_rows(sql, n)
         from bemidb_spark.pgcompat.session import record_statement_stats
 
         record_statement_stats(sql, time.monotonic() - t0, n, count_call=False)
@@ -1401,11 +1348,11 @@ class _Conn:
                 err.sqlstate = "34000"
                 raise err
             # Describe executes and caches — reference query_handler.go:205-209
-            # (DML runs here for its tag; SELECT results stay a live stream).
-            # Under the statement deadline: with AQE, building the local
-            # iterator materializes shuffle query stages synchronously inside
-            # the blocking py4j call, so an unbounded query would hang the
-            # connection here, before Execute's own deadline could ever arm.
+            # (DML runs here for its tag; a SELECT's rows are fetched here,
+            # or its stream started). Under the statement deadline: the
+            # fetch runs the statement's jobs inside a blocking py4j call,
+            # so an unbounded query would hang the connection here, before
+            # Execute's own deadline could ever arm.
             with self._statement_deadline():
                 df = self.session.execute(target.sql)
                 if getattr(df, "_pg_tag", None) is not None and not getattr(
@@ -1488,7 +1435,6 @@ class _Conn:
         else:
             done_tag = tag or _tag_for(portal.sql, portal.sent)
             self._send(b"C", done_tag.encode() + b"\x00")
-            self._note_result_rows(portal.sql, portal.sent)
             portal.result = None
             portal.pending = None
             portal.sent = 0
@@ -1573,18 +1519,6 @@ class WireServer:
         self._backends: dict[int, tuple[_Conn, int]] = {}
         self._backends_lock = threading.Lock()
         self._next_pid = 0
-        # Server-wide last-observed result-row counts (see
-        # _Conn._row_stream_for): the count is a fetch-STRATEGY hint, not a
-        # result cache, so sharing it across connections is safe — a stale
-        # entry at worst picks the CAPPED collect (LIMIT max_rows+1) for a
-        # result that since grew past the bound; the probe overflows, the
-        # fetch falls back to streaming, and the re-recorded count keeps it
-        # there. Without sharing, every FRESH connection pays
-        # the per-partition toLocalIterator job overhead (~175 ms/stmt) for
-        # statements the server has served hundreds of times. Plain dict:
-        # get/set are GIL-atomic; the FIFO eviction race can at worst evict
-        # one extra hint.
-        self._result_rows: dict[str, int] = {}
 
     def take_session(self) -> PgSession:
         """A new isolated session for one connection (~3 ms: a fork binds

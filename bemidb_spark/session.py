@@ -98,14 +98,14 @@ def build_session(
         # (direct appends, streaming staging) unless missing ids fall back
         # to by-name resolution. ignoreMissing is that fallback.
         .config("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
-        # LIMIT/take execution: the default incremental protocol starts at 1
-        # partition and scales up 4x per extra job; the wire fast-path's
-        # capped collect (LIMIT max_rows+1 over a known-small result) would
-        # pay 2-3 job schedulings per statement instead of one. Scanning up
-        # to a core-count of partitions in the FIRST take job serves every
-        # local result in one job, while keeping the driver's transient
-        # bound at O(cpus x limit) rows for oversized probes. Env-derived
-        # like every width knob — never pinned to the local 32.
+        # LIMIT/take execution (collect() of a LIMIT query, take, first):
+        # the default incremental protocol starts at 1 partition and scales
+        # up 4x per extra job, so a LIMIT over a multi-partition result would
+        # pay 2-3 job schedulings instead of one. Scanning up to a core-count
+        # of partitions in the FIRST take job serves every local result in
+        # one job, while keeping the driver's transient bound at O(cpus x
+        # limit) rows. Env-derived like every width knob — never pinned to
+        # the local 32.
         .config("spark.sql.limit.initialNumPartitions", str(cpus))
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.enableVectorizedReader", "true")
@@ -255,16 +255,15 @@ def reexecute(df):
     parse/analysis exactly like a pg prepared statement, but re-optimizing
     and re-executing every stage (collect() on the original object would
     instead reuse its already-materialized shuffle map outputs). Used by the
-    benchmark's honest re-execution pass; falls back to the same object if
-    the internal constructor is unavailable.
+    benchmark's honest re-execution pass. The result is always a new
+    object, so nothing memoised on the cached one (the wire's capped plan,
+    ``_pg_capped``) carries over; the internal constructor is pinned with
+    Spark, so an API drift fails loudly instead of serving the cached plan.
     """
     from pyspark.sql import DataFrame as PyDF
 
     spark = df.sparkSession
-    try:
-        jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            spark._jsparkSession, df._jdf.queryExecution().analyzed()
-        )
-        return PyDF(jdf, spark)
-    except Exception:  # noqa: BLE001 — internal API; degrade to cached object
-        return df
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.queryExecution().analyzed()
+    )
+    return PyDF(jdf, spark)

@@ -986,10 +986,10 @@ def test_transaction_rollback_over_wire(copy_server):
 
 
 def test_large_result_streams_all_partitions(client):
-    """A multi-partition result set streams completely through the simple-
-    query path (rows arrive partition-at-a-time via toLocalIterator — the
-    driver never buffers the result; regression for the streaming refactor).
-    The tag's row count must match the true cardinality."""
+    """A multi-partition result set arrives completely through the simple-
+    query path (one capped fetch here; a result over the cap streams, see
+    test_stale_small_hint_never_materializes_grown_result). The tag's row
+    count must match the true cardinality."""
     r = client.query("SELECT l_orderkey, l_linenumber FROM lineitem")
     assert r["errors"] == []
     n = len(r["rows"])
@@ -1149,120 +1149,209 @@ def test_extended_protocol_fuzz(server):
         good.close()
 
 
-def test_adaptive_row_stream_switches_to_collect(spark):
-    """The wire result fetch streams partition-at-a-time on first execution
-    (unknown size) and switches to one collect job once the statement's
-    observed row count is known-small; a count past the bound keeps
-    streaming. Rows are identical either way (r9 optimization: per-partition
-    toLocalIterator jobs were ~175 ms/statement of scheduling overhead)."""
-    import bemidb_spark.server.wire as wire_mod
+def _is_fetched(rows) -> bool:
+    """True when _row_stream_for served a fetched list, not a stream."""
+    return isinstance(rows, type(iter([])))
+
+
+def test_row_stream_for_serves_one_capped_arrow_fetch(spark):
+    """Every result is fetched by one capped Arrow job (`df.limit(max+1)`),
+    whose plan is kept on the Dataset as `_pg_capped`, so a re-run of the
+    same Dataset re-runs that plan (a result over the cap or outside the
+    Arrow-safe schemas streams instead: see the two tests below). Rows
+    arrive as plain tuples; the server only consumes them positionally."""
     from bemidb_spark.server.wire import _Conn
 
     conn = _Conn.__new__(_Conn)
-    conn._result_rows = {}
-    conn._limited_plans = {}
     df = spark.range(10).selectExpr("id AS n")
-    sql = "SELECT n FROM t_adaptive"
+    sql = "SELECT n FROM t_fetch"
 
     first = _Conn._row_stream_for(conn, sql, df)
-    assert not isinstance(first, type(iter([])))  # streaming path
-    rows_first = [r.n for r in first]
-    _Conn._note_result_rows(conn, sql, len(rows_first))
+    assert _is_fetched(first)
+    assert [r[0] for r in first] == list(range(10))
+    capped = df._pg_capped
 
     second = _Conn._row_stream_for(conn, sql, df)
-    assert isinstance(second, type(iter([])))  # collect path: list iterator
-    # collect fast-path rows may be plain tuples (Arrow transport) — the
-    # server only ever consumes them positionally, so the test does too
-    assert [r[0] for r in second] == rows_first
-
-    _Conn._note_result_rows(conn, sql, wire_mod._WIRE_COLLECT_MAX_ROWS + 1)
-    third = _Conn._row_stream_for(conn, sql, df)
-    assert not isinstance(third, type(iter([])))  # back to streaming
-    assert [r.n for r in third] == rows_first
+    assert _is_fetched(second) and df._pg_capped is capped
+    assert [r[0] for r in second] == list(range(10))
 
 
 def test_stale_small_hint_never_materializes_grown_result(spark, monkeypatch):
-    """A statement's table can grow 100x between the row count being
-    recorded and the next execution (bulk COPY/INSERT, or another session
-    observing different data). The stale known-small hint must NEVER make
-    the driver materialize the full grown result: the collect fast-path is
-    capped at LIMIT max_rows+1 and falls back to the streaming iterator on
-    overflow (VERDICT r9 #1 / ADVICE r9)."""
+    """A result past the cap (a table that grew 100x since it was small)
+    must NEVER be materialized on the driver: the fetch is capped at LIMIT
+    max_rows+1 and an overflowing probe falls back to the partition-at-a-
+    time stream, which serves every row. The overflow is decided by the
+    result on every execution, so a repeat streams again."""
     import bemidb_spark.server.wire as wire_mod
     from bemidb_spark.server.wire import _Conn
 
     monkeypatch.setattr(wire_mod, "_WIRE_COLLECT_MAX_ROWS", 10)
     conn = _Conn.__new__(_Conn)
-    conn._result_rows = {}
-    conn._limited_plans = {}
     sql = "SELECT n FROM t_grown"
-
-    # yesterday the result was 5 rows; today the table holds 2000
-    _Conn._note_result_rows(conn, sql, 5)
-    df = spark.range(2000).selectExpr("id AS n")
+    df = spark.range(0, 2000, 1, 4).selectExpr("id AS n")
     # an UNCAPPED collect of the full result is exactly the bug — shadow the
     # bound method so it fails the test if anything calls it (df.limit(...)
     # creates a fresh DataFrame, so the capped probe is unaffected)
     df.collect = lambda: (_ for _ in ()).throw(
         AssertionError("uncapped df.collect() on a grown result"))
 
-    stream = _Conn._row_stream_for(conn, sql, df)
-    assert not isinstance(stream, type(iter([])))  # streaming fallback taken
-    rows = [r.n for r in stream]
-    assert sorted(rows) == list(range(2000))  # full result still served
+    for _ in range(2):
+        stream = _Conn._row_stream_for(conn, sql, df)
+        assert not _is_fetched(stream)  # streaming fallback taken
+        assert sorted(r.n for r in stream) == list(range(2000))
 
-    # completion re-records the true count; the next run streams without
-    # even paying the probe
-    _Conn._note_result_rows(conn, sql, len(rows))
-    again = _Conn._row_stream_for(conn, sql, df)
-    assert not isinstance(again, type(iter([])))
-
-    # a genuinely small result keeps the one-job collect fast path (capped
-    # probe returns everything: list iterator)
+    # a result within the cap is served by the capped fetch (list iterator)
     small = spark.range(4).selectExpr("id AS n")
-    _Conn._note_result_rows(conn, "small", 4)
     fast = _Conn._row_stream_for(conn, "small", small)
-    assert isinstance(fast, type(iter([])))
+    assert _is_fetched(fast)
     assert [r[0] for r in fast] == [0, 1, 2, 3]
 
 
-def test_result_rows_memo_shared_across_connections(server):
-    """The observed-row-count memo lives on the WireServer, so a FRESH
-    connection inherits the fetch-strategy hints collected by earlier
-    connections (r9: per-connection memos made every fresh connection in the
-    multi-client soak pay the per-partition streaming overhead for
-    statements the server had already served). The memo holds only row
-    COUNTS — results are always computed; sharing cannot serve stale data."""
-    sql = "SELECT r_regionkey FROM region ORDER BY r_regionkey"
+def test_resident_hit_reuses_capped_plan(spark):
+    """A resident plan-cache hit serves the same Dataset, so the wire fetch
+    re-runs its kept capped plan; the capped plan lives and dies with the
+    session's plan-cache entry (an invalidation serves a fresh Dataset)."""
+    from bemidb_spark.pgcompat.session import PgSession
+    from bemidb_spark.server.wire import _Conn
 
-    c1 = MiniPgClient(server.host, server.port)
-    try:
-        r1 = c1.query(sql)
-        assert not r1["errors"]
-    finally:
-        c1.close()
-    # the first connection's completion wrote through to the server memo
-    assert server._result_rows.get(sql) == len(r1["rows"])
+    pg = PgSession(spark, None, isolate=True)
+    conn = _Conn.__new__(_Conn)
+    sql = ("SELECT id % 3 AS k, count(*) AS n FROM range(0, 30, 1, 3) "
+           "GROUP BY 1 ORDER BY 1")
+    df = pg.execute(sql)
+    rows = list(_Conn._row_stream_for(conn, sql, df))
+    capped = df._pg_capped
+    hit = pg.execute(sql)
+    assert hit is df
+    assert list(_Conn._row_stream_for(conn, sql, hit)) == rows
+    assert hit._pg_capped is capped
+    pg.invalidate_plans()
+    fresh = pg.execute(sql)
+    assert fresh is not df and not hasattr(fresh, "_pg_capped")
 
-    # a second, fresh connection reads the same dict object and serves the
-    # identical rows (collect fast-path eligible from its first execution)
-    c2 = MiniPgClient(server.host, server.port)
+
+def test_reexecute_serves_fresh_dataset_without_capped_plan(spark):
+    """In reexecute mode every hit is a new Dataset over the cached analyzed
+    plan: it is never the cached object and carries no `_pg_capped`, so the
+    wire builds a capped plan per execution and reuses no shuffle output."""
+    from bemidb_spark.pgcompat.session import PgSession
+    from bemidb_spark.server.wire import _Conn
+
+    pg = PgSession(spark, None, isolate=True)
+    conn = _Conn.__new__(_Conn)
+    sql = "SELECT id % 2 AS k, count(*) AS n FROM range(10) GROUP BY 1 ORDER BY 1"
+    cached = pg.execute(sql)
+    expected = list(_Conn._row_stream_for(conn, sql, cached))
+    assert hasattr(cached, "_pg_capped")
+    pg.execute("SET bemidb.plan_cache_mode = reexecute")
+    for _ in range(2):
+        again = pg.execute(sql)
+        assert again is not cached and not hasattr(again, "_pg_capped")
+        assert list(_Conn._row_stream_for(conn, sql, again)) == expected
+
+
+def _backend_jobs(server, client, sql):
+    """Run ``sql`` on ``client``; return (result, number of Spark jobs its
+    backend's job group ran for it)."""
+    key = next(body for t, body in client.startup_messages if t == b"K")
+    pid, _secret = struct.unpack("!II", key)
+    tracker = server.spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(f"pgwire-{pid}"))
+    r = client.query(sql)
+    return r, len(set(tracker.getJobIdsForGroup(f"pgwire-{pid}")) - before)
+
+
+def test_failing_statement_runs_once(server):
+    """A runtime error surfaces from the statement's one run: the fetch
+    falls back only when Arrow cannot carry the result, never on the
+    statement's own failure (which would run the plan a second time)."""
+    c = MiniPgClient(server.host, server.port)
     try:
-        r2 = c2.query(sql)
-        assert not r2["errors"]
-        assert r2["rows"] == r1["rows"]
+        sql = "SELECT raise_error('boom') AS x FROM range(10)"
+        for _ in range(2):  # first and repeated (plan-cache hit) execution
+            r, jobs = _backend_jobs(server, c, sql)
+            assert r["errors"] and "boom" in r["errors"][0]["M"]
+            assert jobs == 1
+        assert c.query("SELECT 1 AS x")["rows"] == [["1"]]
     finally:
-        c2.close()
+        c.close()
+
+
+def test_fresh_connection_small_result_runs_one_job(server):
+    """A fresh connection's first execution of a small result spread over
+    several partitions runs one Spark job (the capped fetch, not one job per
+    partition), and two connections serve the same rows."""
+    # eight shuffle partitions of grouped rows
+    sql = ("SELECT l_returnflag, l_linestatus, count(*) AS n FROM lineitem "
+           "GROUP BY 1, 2 ORDER BY 1, 2")
+    results = []
+    for _ in range(2):
+        c = MiniPgClient(server.host, server.port)
+        try:
+            r, jobs = _backend_jobs(server, c, sql)
+            assert r["errors"] == [] and jobs == 1
+            results.append(r["rows"])
+        finally:
+            c.close()
+    assert results[0] == results[1] and len(results[0]) >= 3
+
+
+def _captured_error_records(capfd, monkeypatch, run) -> tuple:
+    """Run ``run()`` and count the ERROR records PySpark's captured-error
+    loggers write to stderr meanwhile (their handlers are pointed at the
+    stderr that ``capfd`` captures)."""
+    import re
+    import sys
+
+    from pyspark.logger import PySparkLogger
+
+    for name in ("SQLQueryContextLogger", "DataFrameQueryContextLogger"):
+        for h in PySparkLogger.getLogger(name).handlers:
+            monkeypatch.setattr(h, "stream", sys.stderr)
+    capfd.readouterr()
+    out = run()
+    err = capfd.readouterr().err
+    return out, len(re.findall(r'"logger": "\w+QueryContextLogger"', err))
+
+
+def test_rescued_statement_writes_no_error_record(server, capfd, monkeypatch):
+    """A statement that analysis retries rescue (avg over a vector column;
+    the first pg_get_keywords() of a fresh fork) writes no ERROR record; a
+    statement that fails for good keeps its SQLSTATE and writes one."""
+    def run():
+        c = MiniPgClient(server.host, server.port)  # a fresh fork
+        try:
+            return (
+                c.query("SELECT avg(v) AS m FROM (VALUES ('[1,2]'::vector), "
+                        "('[3,6]'::vector)) AS t(v)"),
+                c.query("SELECT count(*) AS n FROM pg_get_keywords()"))
+        finally:
+            c.close()
+
+    (avg, kw), records = _captured_error_records(capfd, monkeypatch, run)
+    assert avg["errors"] == [] and avg["rows"] == [["{2.0,4.0}"]]
+    assert kw["errors"] == [] and int(kw["rows"][0][0]) > 0
+    assert records == 0
+
+    def fail():
+        c = MiniPgClient(server.host, server.port)
+        try:
+            return c.query("SELECT * FROM no_such_table_for_log_test")
+        finally:
+            c.close()
+
+    r, records = _captured_error_records(capfd, monkeypatch, fail)
+    assert [e["C"] for e in r["errors"]] == ["42P01"]
+    assert records == 1
 
 
 def test_arrow_fetch_bytes_identical_to_collect(spark):
-    """The Arrow transport for the known-small collect fast-path (r10) must
+    """The Arrow transport of the capped wire fetch must
     produce BYTE-IDENTICAL DataRow frames to the pickled-Row collect() path,
     in both text and binary result formats — float repr, timestamp zone
     handling and nested arrays are exactly where coercion could diverge.
     Schemas outside the proven-identical set (struct here) must decline the
-    Arrow path and fall back to collect."""
-    import bemidb_spark.server.wire as wire_mod
+    Arrow path and stream, with the same bytes as collect()."""
     from bemidb_spark.server.wire import (
         _Conn,
         _arrow_fetch_rows,
@@ -1311,12 +1400,14 @@ def test_arrow_fetch_bytes_identical_to_collect(spark):
     assert not _arrow_safe_schema(df_struct.schema)
     assert _arrow_fetch_rows(df_struct.limit(10)) is None
 
-    # the adaptive fetch integrates the Arrow rows: known-small statement is
-    # served as a list iterator with the same values
+    # the wire fetch serves the battery's Arrow rows (a list iterator) and
+    # streams the struct result; both encode to collect()'s bytes
     conn = _Conn.__new__(_Conn)
-    conn._result_rows = {}
-    conn._limited_plans = {}
-    _Conn._note_result_rows(conn, "battery", 7)
     served = _Conn._row_stream_for(conn, "battery", df)
-    assert isinstance(served, type(iter([])))
+    assert _is_fetched(served)
     assert [tuple(r) for r in served] == [tuple(r) for r in via_collect]
+    for fmt in (0, 1):
+        streamed = _Conn._row_stream_for(conn, "struct", df_struct)
+        assert not _is_fetched(streamed)
+        assert frames(df_struct, streamed, fmt) == frames(
+            df_struct, df_struct.collect(), fmt)

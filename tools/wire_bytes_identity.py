@@ -1,17 +1,18 @@
 """Wire-bytes identity harness for the Arrow result fetch (VERDICT r9 #3).
 
 For EVERY registry entry in ``__spark_entry__.queries()``, fetch the entry's
-result through both fast-path transports —
+capped result (``LIMIT max_rows+1``, as the wire fetch runs it) through both
+transports —
 
-  A. ``limited.collect()``          (the pre-r10 path: pickled Rows)
-  B. ``_arrow_fetch_rows(limited)`` (the Arrow path, tz-normalized)
+  A. ``limited.collect()``          (pickled Rows, as the stream yields them)
+  B. ``_arrow_fetch_rows(limited)`` (the Arrow path the wire serves, tz-normalized)
 
 — then encode both row sets through the server's own ``_send_rows`` (text
 format) and ``_encode_binary`` (binary format) into a capture buffer and
 assert the produced DataRow frames are BYTE-IDENTICAL. Entries whose schema
 declines the Arrow path (struct/map/…: ``_arrow_safe_schema`` False) are
-reported as ``fallback`` — for those the server serves the collect bytes by
-construction, so identity is trivial.
+reported as ``fallback`` — the server streams those (``toLocalIterator``
+yields the same Rows as ``collect()``), so identity is trivial.
 
 Float/timestamp text rendering is exactly the risk this harness pins: any
 coercion difference between the pickle and Arrow transports shows up as a
