@@ -17,9 +17,9 @@ its server is read-only, so routing client DML onto the writer is a
 capability extension, pinned here against pg semantics via DuckDB.
 
 Scale note: the upsert/delete entries run against a KEY-BUCKETED table, so
-the MERGE rewrites only the `_kb` partitions holding affected keys — the
-same plan shape that lets a k-row upsert touch ~k/n_buckets of a 100 TB
-table. The cursor-append entry's incremental predicate
+the MERGE rewrites only the listed files of the `_kb` buckets holding
+affected keys — the same plan shape that lets a k-row upsert touch
+~k/n_buckets of a 100 TB table. The cursor-append entry's incremental predicate
 (``event_id > (SELECT max(event_id) FROM t)``) is the writer's cursor
 semantics expressed in SQL: a bounded scalar-subquery probe, then a
 map-only append of the new slice.
@@ -435,7 +435,7 @@ ORACLES["pg_alter_column_route"] = """
 
 
 # ---------------------------------------------------------------------------
-# Time travel over the snapshot log (r7): an UPDATE swaps the live location;
+# Time travel over the snapshot log (r7): an UPDATE commits a new file list;
 # the superseded one stays readable via read_table_at(age=1) — the
 # in-flight-reader / time-travel guarantee the writer documents (Iceberg
 # snapshot semantics; reference keeps the same snapshot history,

@@ -32,6 +32,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from bemidb_spark.sources.catalog import Catalog
+from bemidb_spark.sources.writer import read_files
 
 # The reference reads both from config/env (config.go:61); tests there run
 # with user "user". Overridable so a deployment (or the parity harness)
@@ -356,7 +357,7 @@ def bind_catalog_table(spark: SparkSession, key: str, entry: dict | None) -> boo
     points at (the reference's B3 role: schema.table -> engine-readable
     relation, query_remapper_table.go:93-110): `<schema>_<table>` always,
     bare `<table>` when free or bound by the binder. ``entry`` None (the
-    table left the catalog) unbinds both. False when the location is gone
+    table left the catalog) unbinds both. False when a listed file is gone
     (dropped mid-flight)."""
     schema, table = key.split(".", 1)
     if entry is None:
@@ -365,8 +366,8 @@ def bind_catalog_table(spark: SparkSession, key: str, entry: dict | None) -> boo
             spark.catalog.dropTempView(table)
         return True
     try:
-        df = spark.read.parquet(entry["location"])
-    except Exception:  # noqa: BLE001 — location vanished
+        df = read_files(spark, entry["columns"], entry["files"])
+    except Exception:  # noqa: BLE001 — a listed file vanished
         return False
     df.createOrReplaceTempView(f"{schema}_{table}")
     if table in _BOUND_BARE_NAMES or not any(

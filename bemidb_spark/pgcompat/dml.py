@@ -8,15 +8,15 @@ the idiomatic statements onto the same storage machinery the syncers use:
 - ``INSERT … VALUES``                 → append files (never rewrites data)
 - ``INSERT … ON CONFLICT DO NOTHING`` → anti-join then append new keys only
 - ``INSERT … ON CONFLICT (k) DO UPDATE SET c = EXCLUDED.c`` →
-  ``writer.upsert_by_key`` (partition-pruned MERGE on key-bucketed tables)
+  ``writer.upsert_by_key`` (bucket-pruned MERGE on key-bucketed tables)
 - ``UPDATE … SET … WHERE …``          → matched rows recomputed, then
-  partition-pruned upsert (bucketed) or rewrite-and-swap (unbucketed)
+  bucket-pruned upsert (bucketed) or rewrite-and-swap (unbucketed)
 - ``DELETE FROM … WHERE …``           → ``writer.delete_by_key`` (bucketed)
   or rewrite-and-swap
 
 Scale notes: the VALUES payload of an INSERT is tiny (client-side literals),
 so every path's cost is bounded by the *affected key buckets*, not table
-size, on bucketed tables — a 1-row upsert touches 1 partition directory.
+size, on bucketed tables — a 1-row upsert rewrites 1 bucket's file.
 UPDATE/DELETE predicates are ordinary Spark expressions, so partition/file
 pruning applies to the matched-row scan as well.
 
@@ -24,7 +24,7 @@ All SET right-hand sides see the OLD row (pg semantics): the new row is built
 in a single ``select`` so one SET cannot observe another's result.
 
 ``RETURNING`` works on every form: the projection is materialized BEFORE the
-table mutates (a lazy plan would re-read the swapped/overwritten location)
+table mutates (a lazy plan would read a list whose files expiry may delete)
 and is streamed back as a result set with the DML CommandComplete tag —
 the `INSERT … RETURNING id` shape every ORM emits.
 """
@@ -39,13 +39,13 @@ from pyspark.sql import functions as F
 from bemidb_spark.pgcompat.transpiler import transpile
 from bemidb_spark.sources.catalog import Catalog
 from bemidb_spark.sources.writer import (
-    BUCKET_COL,
     _bucket_expr,
     _bucketed_layout,
-    _columns_meta,
+    bucket_slice,
     delete_by_key,
     read_table,
     replace_table,
+    rewrite_buckets,
     upsert_by_key,
 )
 
@@ -138,16 +138,14 @@ def _bucket_stats(
     keys: list[str] | None,
     current: DataFrame,
     cond,
-) -> tuple[int, list[int], set[int]] | None:
-    """(matched-row count, affected buckets, fully-emptied buckets) from ONE
-    per-bucket aggregation over the target — or None when the table is not
-    key-bucketed on ``keys``. UPDATE/DELETE previously paid up to three
-    separate actions for the same facts (matched.count(), the writer's
-    affected-bucket distinct, DELETE's surviving-bucket distinct), each a
-    full pass over the target (r10, guide §1.2: remove passes before tuning
-    them). NULL ``cond`` counts as unmatched, exactly like ``filter``."""
-    from bemidb_spark.sources.writer import _bucket_expr, _bucketed_layout
-
+) -> tuple[int, list[int]] | None:
+    """(matched-row count, affected buckets) from ONE per-bucket
+    aggregation over the target — or None when the table is not
+    key-bucketed on ``keys``. UPDATE/DELETE previously paid separate
+    actions for the same facts (matched.count(), the writer's
+    affected-bucket distinct), each a full pass over the target (r10, guide
+    §1.2: remove passes before tuning them). NULL ``cond`` counts as
+    unmatched, exactly like ``filter``."""
     if not keys:
         return None
     n_buckets = _bucketed_layout(catalog, schema, table, keys)
@@ -159,15 +157,11 @@ def _bucket_stats(
             F.when(cond, 1).otherwise(0).alias("_hit"),
         )
         .groupBy("_kb")
-        .agg(F.count(F.lit(1)).alias("_tot"), F.sum("_hit").alias("_hits"))
+        .agg(F.sum("_hit").alias("_hits"))
         .collect()
     )
     n = int(sum(r["_hits"] for r in rows))
-    buckets = sorted(int(r["_kb"]) for r in rows if r["_hits"] > 0)
-    emptied = {
-        int(r["_kb"]) for r in rows if r["_hits"] > 0 and r["_hits"] == r["_tot"]
-    }
-    return n, buckets, emptied
+    return n, sorted(int(r["_kb"]) for r in rows if r["_hits"] > 0)
 
 
 def _read_target(
@@ -197,14 +191,11 @@ def _fold_cursor_probe(
 ) -> str:
     """Constant-fold ``col > (SELECT max(col) FROM <target>)`` — the
     incremental-append cursor gate (reference amplitude syncer.go:35-75) —
-    into a literal read from the live files' parquet footer stats (Iceberg
+    into a literal read from the listed files' parquet footer stats (Iceberg
     upper_bounds style): a metadata probe instead of a table-scan aggregate
     running as a scalar subquery inside the write job. Non-matching or
     non-foldable (string-typed / remote) probes run unchanged."""
-    from bemidb_spark.sources.writer import (
-        _local_parquet_paths,
-        footer_column_max,
-    )
+    from bemidb_spark.sources.writer import _os_paths, footer_column_max
 
     tbl = rf'(?:"?{re.escape(schema)}"?\s*\.\s*)?"?{re.escape(table)}"?'
     pat = re.compile(
@@ -215,7 +206,7 @@ def _fold_cursor_probe(
     if not m:
         return source_sql
     try:
-        paths = _local_parquet_paths(catalog.location(schema, table))
+        paths = _os_paths(catalog.files(schema, table))
     except KeyError:
         return source_sql
     if paths is None:
@@ -557,8 +548,6 @@ def _count_and_buckets(
     routes re-execute their join for every separate action, so fusing the
     count with the writer's affected-bucket derivation drops one full join
     execution per statement (r10, guide §1.2)."""
-    from bemidb_spark.sources.writer import _bucket_expr, _bucketed_layout
-
     n_buckets = _bucketed_layout(catalog, schema, table, keys) if keys else None
     if n_buckets is None:
         return rows.count(), None
@@ -664,14 +653,12 @@ def _delete_using(
 
 
 # Write-path regime of the most recent _run_merge, for tests that assert
-# WHICH path executed (pruned / fallback), not just the result:
-#   "pruned"              — only source-affected buckets read+overwritten
+# WHICH path executed (pruned / full), not just the result:
+#   "pruned"              — only source-affected buckets read+rewritten
 #   "pruned_empty_source" — empty source short-circuit, zero writes
-#   "fallback_rewrite"    — pruning keys found, but a clause mutated a key
-#                           into an unread bucket → stitched full rewrite
 #   "full"                — no usable key equality (theta ON / unbucketed)
 LAST_MERGE_REGIME: str | None = None
-LAST_MERGE_B_SRC: list[int] = []  # buckets the pruned path read/overwrote
+LAST_MERGE_B_SRC: list[int] = []  # buckets the pruned path read/rewrote
 
 _MERGE_CLAUSE_RE = re.compile(
     r"^WHEN\s+(NOT\s+)?MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+(.+)$",
@@ -819,22 +806,21 @@ def _run_merge(
 
     Scale (VERDICT r7 #2 — bucket-pruned): when the target is key-bucketed
     AND the ON condition equates every bucket key with a pure source-side
-    expression (the `ON t.k = d.k` shape), only the buckets those source
-    expressions hash into are read, joined, and dynamic-partition-
-    overwritten — target rows in every other bucket are untouched bytes,
-    exactly like upsert_by_key/delete_by_key (writer.py). MERGE semantics
-    make this sound: a match requires t.k = expr(s), so both every matched
-    target row and every insert destination lives in an affected bucket; a
-    WHEN NOT MATCHED miss inside the slice is a miss everywhere. The
-    localCheckpoint then pins only the affected slice, not the whole table.
-    Falls back to the full rewrite when the keys aren't all equated
-    (theta-ON), when an UPDATE/INSERT writes a row into an unread bucket
-    (key mutation — detected, not assumed), or when the table is unbucketed.
-    At 100 TB this is a k-row MERGE touching ~k/n_buckets of the table
-    instead of rewriting all of it."""
+    expression (the `ON t.k = d.k` shape), only the listed files of the
+    buckets those source expressions hash into are read, joined, and
+    rewritten (writer.rewrite_buckets) — every other bucket's files stay in
+    the list untouched, exactly like upsert_by_key/delete_by_key. MERGE
+    semantics make this sound: a match requires t.k = expr(s), so every
+    matched target row lives in an affected bucket; a WHEN NOT MATCHED miss
+    inside the slice is a miss everywhere. A row an UPDATE/INSERT moves
+    into an unread bucket (key mutation) adds a file to that bucket without
+    rewriting it. The localCheckpoint then pins only the affected slice,
+    not the whole table. Falls back to the full rewrite when the keys
+    aren't all equated (theta-ON) or when the table is unbucketed. At
+    100 TB this is a k-row MERGE touching ~k/n_buckets of the table instead
+    of rewriting all of it."""
     from bemidb_spark.pgcompat.transpiler import _shield_strings, _unshield
-    from bemidb_spark.sources import fs
-    from bemidb_spark.sources.writer import _with_field_ids, write_bucketed_table
+    from bemidb_spark.sources.writer import write_bucketed_table
 
     shielded, lits = _shield_strings(sql)
     m = re.match(
@@ -977,7 +963,6 @@ def _run_merge(
     n_buckets = _bucketed_layout(catalog, schema, table, keys) if keys else None
     key_src = _merge_key_sources(_retarget(on_text), keys) if n_buckets else None
     b_src: list[int] = []
-    raw = None
     join_side = target
     if key_src is not None:
         try:
@@ -996,10 +981,9 @@ def _run_merge(
         except Exception:  # unparseable key expr: pruning off, never wrong
             key_src = None
         else:
-            loc = catalog.location(schema, table)
-            raw = spark.read.parquet(loc)
-            join_side = raw.filter(
-                F.col(BUCKET_COL).isin(b_src)).drop(BUCKET_COL).select(*tcols)
+            touched, slice_rows = bucket_slice(
+                spark, catalog, schema, table, b_src)
+            join_side = slice_rows.select(*tcols)
 
     T = join_side.select(
         *[F.col(c).alias(f"__t_{c}") for c in tcols],
@@ -1119,37 +1103,9 @@ def _run_merge(
             # were affected; the target is untouched bytes (MERGE 0)
             LAST_MERGE_REGIME = "pruned_empty_source"
             return "MERGE", n, ret
-        out = _with_field_ids(result).withColumn(
-            BUCKET_COL, _bucket_expr(keys, n_buckets))
-        out_buckets = {
-            r[0] for r in out.select(BUCKET_COL).distinct().collect()
-        }
-        if out_buckets <= set(b_src):
-            LAST_MERGE_REGIME = "pruned"
-            loc = catalog.location(schema, table)
-            out.write.mode("overwrite") \
-                .option("partitionOverwriteMode", "dynamic") \
-                .partitionBy(BUCKET_COL).parquet(loc)
-            # dynamic overwrite can't emit an empty partition: buckets whose
-            # rows were all deleted keep stale files — drop them explicitly
-            # (same guard as delete_by_key)
-            for b in b_src:
-                if b not in out_buckets:
-                    fs.remove_tree(fs.join(loc, f"{BUCKET_COL}={b}"))
-            if not any(f.endswith(".parquet") for f in fs.walk_files(loc)):
-                replace_table(
-                    catalog, schema, table,
-                    spark.createDataFrame([], target.schema))
-            else:
-                catalog.commit_table(
-                    schema, table, loc, _columns_meta(result))
-            return "MERGE", n, ret
-        # an UPDATE/INSERT moved a row into an unread bucket (key mutation):
-        # the slice-join is still correct, but a pruned write would clobber
-        # that bucket — stitch the untouched buckets back and rewrite fully
-        LAST_MERGE_REGIME = "fallback_rewrite"
-        result = raw.filter(~F.col(BUCKET_COL).isin(b_src)) \
-            .drop(BUCKET_COL).select(*tcols).unionByName(result)
+        LAST_MERGE_REGIME = "pruned"
+        rewrite_buckets(catalog, schema, table, touched, result, keys, n_buckets)
+        return "MERGE", n, ret
 
     if keys and n_buckets:
         write_bucketed_table(
@@ -1235,16 +1191,15 @@ def handle_dml(
         stats = _bucket_stats(catalog, schema, table, keys, current, cond)
         if stats is not None:
             # bucketed target: ONE per-bucket aggregation yields the deleted
-            # row count, the affected buckets, and the fully-emptied subset
-            # that delete_by_key would otherwise derive with three separate
-            # jobs (count + distinct-buckets + surviving-buckets; r10
-            # guide §1.2 "remove passes")
-            n, buckets, emptied = stats
+            # row count and the affected buckets that delete_by_key would
+            # otherwise derive with a separate job (r10 guide §1.2 "remove
+            # passes")
+            n, buckets = stats
             ret = _project_returning(spark, matched, returning)
             if n == 0:
                 return "DELETE", 0, ret
             delete_by_key(spark, catalog, schema, table, matched.select(*keys),
-                          keys, buckets=buckets, emptied_buckets=emptied)
+                          keys, buckets=buckets)
             return "DELETE", n, ret
         n = matched.count()
         ret = _project_returning(spark, matched, returning)
@@ -1297,7 +1252,7 @@ def handle_dml(
             # one aggregation job yields both the matched-row count and the
             # affected buckets (keys are not SET, so matched rows keep their
             # bucket) instead of a count job + upsert_by_key's distinct job
-            n, buckets, _emptied = stats
+            n, buckets = stats
             ret = _project_returning(spark, updated, returning)
             if n == 0:
                 return "UPDATE", 0, ret

@@ -207,14 +207,14 @@ _LITERAL_RE = re.compile(
     re.VERBOSE,
 )
 
-# Process-global transaction write lock. ROLLBACK undoes by restoring a
-# BEGIN-pinned catalog state and pruning files appended after the pin; that is
-# only sound when no OTHER session commits writes between the pin and the
-# restore (otherwise their committed INSERT/DDL would be clobbered — all wire
-# connections share one Catalog). So a session with an open transaction holds
-# this lock for the transaction's duration, and autocommit writes take it
-# transiently — concurrent write transactions serialize (coarse-grained
-# analog of pg's table locks; readers are never blocked).
+# Process-global transaction write lock. ROLLBACK undoes by restoring the
+# BEGIN-pinned catalog state — the whole state, every table's file list —
+# which is only sound when no OTHER session commits writes between the pin
+# and the restore (otherwise their committed INSERT/DDL would be clobbered —
+# all wire connections share one Catalog). So a session with an open
+# transaction holds this lock for the transaction's duration, and autocommit
+# writes take it transiently — concurrent write transactions serialize
+# (coarse-grained analog of pg's table locks; readers are never blocked).
 _TXN_WRITE_LOCK = __import__("threading").Lock()
 _TXN_LOCK_TIMEOUT = 60.0  # seconds; analogous to pg's lock_timeout
 
@@ -250,6 +250,30 @@ def record_statement_stats(sql: str, seconds: float | None = None,
             ent["rows"] += rows
 
 
+def stream_rows(df: DataFrame):
+    """Partition-at-a-time rows of ``df`` (``toLocalIterator``). A task
+    failure surfaces from the iterator as py4j's wrapper around the result
+    server's awaitResult; it is re-raised as the Spark error that caused
+    it, so the statement keeps its own SQLSTATE and message."""
+    from py4j.protocol import Py4JError, Py4JJavaError
+    from pyspark.errors.exceptions.captured import convert_exception
+
+    try:
+        yield from df.toLocalIterator(prefetchPartitions=True)
+    except Py4JJavaError as exc:
+        cause = exc.java_exception
+        while cause is not None:
+            try:
+                if cause.getCondition():  # awaitResult's wrapper has none
+                    break
+            except Py4JError:  # not a SparkThrowable
+                pass
+            cause = cause.getCause()
+        if cause is None:
+            raise
+        raise convert_exception(cause) from None
+
+
 class _Cursor:
     """Server-side cursor: a lazily-opened forward stream over a DataFrame.
 
@@ -269,7 +293,7 @@ class _Cursor:
         """Next ``n`` rows (None = all remaining); (rows, count). MOVE passes
         ``discard`` so skipping a huge prefix never buffers it."""
         if self._iter is None:
-            self._iter = self.df.toLocalIterator(prefetchPartitions=True)
+            self._iter = stream_rows(self.df)
         out: list = []
         count = 0
         for row in self._iter:
@@ -333,7 +357,7 @@ class PgSession:
         self._sql_prepared: dict[str, str] = {}  # SQL-level PREPARE bodies
         self._cursors: dict[str, _Cursor] = {}  # DECLARE'd server-side cursors
         self._ivf_indexes: dict[str, tuple[str, str]] = {}  # ivfflat: name -> (table, col)
-        self._txn: dict | None = None  # BEGIN-pinned catalog state + file sets
+        self._txn: dict | None = None  # BEGIN's catalog pin (Catalog.pin)
         self._txn_open = False  # BEGIN seen (independent of catalog pinning)
         self._txn_local_restore: dict[str, str | None] = {}  # SET LOCAL undo
         self._holds_txn_lock = False  # this session owns _TXN_WRITE_LOCK
@@ -720,7 +744,7 @@ class PgSession:
             err.sqlstate = "42601"
             raise err
         from bemidb_spark.pgcompat.types import spark_field
-        from bemidb_spark.sources.writer import drop_table_files, replace_table
+        from bemidb_spark.sources.writer import replace_table
 
         m = re.match(
             r"CREATE\s+(?:TEMP(?:ORARY)?\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
@@ -732,10 +756,10 @@ class PgSession:
 
             schema, _, table = m.group(1).replace('"', "").rpartition(".")
             df = self.execute(m.group(2))
-            loc = replace_table(self.catalog, schema or "public", table, df)
+            files = replace_table(self.catalog, schema or "public", table, df)
             # pg's CTAS tag is the row count: read it from the files just
             # written (footer metadata) instead of re-executing the query
-            n = footer_total_rows(loc)
+            n = footer_total_rows(files)
             if n is None:
                 n = df.count()
             out = self._ok("CREATE TABLE")
@@ -778,7 +802,7 @@ class PgSession:
                     err.sqlstate = "42P01"
                     raise err
             else:
-                drop_table_files(self.catalog, schema, table)
+                self.catalog.drop_table(schema, table)
             out = self._ok("DROP TABLE")
             out._pg_tag = "DROP TABLE"
             return out
@@ -854,13 +878,14 @@ class PgSession:
         self._cursors = {k: c for k, c in self._cursors.items() if c.hold}
 
     def _begin_txn(self) -> None:
-        """Pin the catalog state and every live table location's file set.
+        """Pin the catalog state (``Catalog.pin``).
 
-        ROLLBACK = restore the state pointer (metadata-only, like an Iceberg
-        snapshot rollback) + prune files appended into still-live locations
-        (the append fast-path writes into the current directory, so the state
-        pointer alone wouldn't undo it). Nested BEGIN keeps the outer pin,
-        matching pg's 'there is already a transaction in progress' warning.
+        ROLLBACK = restore the pinned state pointer (metadata-only, like an
+        Iceberg snapshot rollback): no write changes a file that a pinned
+        list names, and the pin keeps each such file from being deleted, so
+        the restore alone undoes the transaction. Nested BEGIN keeps the
+        outer pin, matching pg's 'there is already a transaction in
+        progress' warning.
         """
         if self.catalog is None or self._txn is not None:
             return
@@ -876,53 +901,30 @@ class PgSession:
         self._txn = self._pin_catalog()
 
     def _pin_catalog(self) -> dict:
-        from bemidb_spark.sources import fs
-
-        state = self.catalog.snapshot_state()
-        files: dict[str, set[str]] = {}
-        for entry in state.get("tables", {}).values():
-            loc = entry.get("location")
-            if loc and fs.isdir(loc):
-                files[loc] = set(fs.walk_files(loc))
+        token, state = self.catalog.pin()
         # pg GUCs are transactional: plain SET inside a rolled-back
         # transaction reverts too, and ROLLBACK TO SAVEPOINT reverts to the
         # savepoint's settings — so every pin carries a settings snapshot
-        return {"state": state, "files": files,
+        return {"token": token, "state": state,
                 "settings": dict(self.settings)}
 
     def _restore_pin(self, pinned: dict) -> None:
-        from bemidb_spark.sources import fs
-
-        aborted = self.catalog.snapshot_state()
+        """Restore a pinned state (ROLLBACK / ROLLBACK TO): one catalog
+        commit, which deletes the files only the aborted state named."""
         self.catalog.restore_state(pinned["state"])
-
-        def _locs(state: dict) -> set[str]:
-            out = set()
-            for entry in state.get("tables", {}).values():
-                if entry.get("location"):
-                    out.add(entry["location"])
-                out.update(s["location"] for s in entry.get("snapshots", []))
-            return out
-
-        # directories created after the pin (new tables, rewrites)
-        for loc in _locs(aborted) - _locs(pinned["state"]):
-            fs.remove_tree(loc)
-        # files appended into still-live locations after the pin
-        for loc, keep in pinned["files"].items():
-            if not fs.isdir(loc):
-                continue
-            changed = False
-            added = set(fs.walk_files(loc)) - keep
-            for rel in added:
-                fs.remove_file(fs.join(loc, rel))
-                changed = True
-            for rel in sorted({r.rsplit("/", 1)[0] for r in added if "/" in r},
-                              key=len, reverse=True):
-                fs.rmdir_if_empty(fs.join(loc, rel))
-            if changed:
-                self.spark.catalog.refreshByPath(loc)
         # the restore advanced every table's version: rebind and evict
         self._sync_catalog()
+
+    def _unpin(self, pins) -> None:
+        for pin in pins:
+            self.catalog.unpin(pin["token"])
+
+    def _end_txn(self) -> None:
+        """Close the transaction: release its pin and its savepoints'."""
+        if self._txn is not None:
+            self._unpin([self._txn, *self._savepoints.values()])
+        self._txn = None
+        self._savepoints = {}
 
     def _release_txn_lock(self) -> None:
         if self._holds_txn_lock:
@@ -962,11 +964,9 @@ class PgSession:
             return  # pg: 'no transaction in progress' warning, then no-op
         try:
             self._restore_pin(self._txn)
-            if "settings" in self._txn:
-                self._restore_settings(self._txn["settings"])
+            self._restore_settings(self._txn["settings"])
         finally:
-            self._txn = None
-            self._savepoints = {}
+            self._end_txn()
             self._release_txn_lock()
 
     def dispose(self) -> None:
@@ -988,13 +988,16 @@ class PgSession:
                 err = UnsupportedQueryError("SAVEPOINT can only be used in transaction blocks")
                 err.sqlstate = "25P01"
                 raise err
-            self._savepoints.pop(m.group(1).lower(), None)
-            self._savepoints[m.group(1).lower()] = self._pin_catalog()
+            name = m.group(1).lower()
+            if name in self._savepoints:
+                self._unpin([self._savepoints.pop(name)])
+            self._savepoints[name] = self._pin_catalog()
             return self._ok("SAVEPOINT")
 
         def _drop_later(name: str, inclusive: bool) -> None:
             names = list(self._savepoints)
             keep = names[: names.index(name) + (0 if inclusive else 1)]
+            self._unpin([self._savepoints[k] for k in names if k not in keep])
             self._savepoints = {k: self._savepoints[k] for k in keep}
 
         m = re.match(r"ROLLBACK\s+TO\s+(?:SAVEPOINT\s+)?([\w]+)\s*$", sql, re.IGNORECASE)
@@ -1006,8 +1009,7 @@ class PgSession:
                 err.sqlstate = "3B001"
                 raise err
             self._restore_pin(pin)
-            if "settings" in pin:
-                self._restore_settings(pin["settings"])
+            self._restore_settings(pin["settings"])
             _drop_later(name, inclusive=False)
             return self._ok("ROLLBACK")
         m = re.match(r"RELEASE\s+(?:SAVEPOINT\s+)?([\w]+)\s*$", sql, re.IGNORECASE)
@@ -1194,7 +1196,7 @@ class PgSession:
             return self._ok("ANALYZE")
         if self.catalog is None:
             return self._ok("VACUUM")
-        from bemidb_spark.sources.writer import compact_table, expire_snapshots
+        from bemidb_spark.sources.writer import compact_table
 
         m = re.match(
             r"VACUUM\s*(FULL\s+)?(?:\([^)]*\)\s*)?([\w.]+)?\s*$", sql, re.IGNORECASE
@@ -1210,7 +1212,7 @@ class PgSession:
             schema = schema or "public"
             if full:
                 compact_table(self.spark, self.catalog, schema, table)
-            expire_snapshots(self.catalog, schema, table, keep=0)
+            self.catalog.expire_snapshots(schema, table, keep=0)
         if full:
             self._sync_catalog()
         return self._ok("VACUUM")
@@ -1310,8 +1312,7 @@ class PgSession:
                 self._restore_local_sets()
                 return self._ok("ROLLBACK")
             self._restore_local_sets()
-            self._txn = None  # COMMIT / END / DISCARD ALL: writes are durable
-            self._savepoints = {}
+            self._end_txn()  # COMMIT / END / DISCARD ALL: writes are durable
             self._release_txn_lock()
             self._close_txn_cursors()
             if word == "DISCARD":  # DISCARD ALL resets the whole session

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bemidb_spark.pgcompat.session import PgSession, UnsupportedQueryError
+from bemidb_spark.pgcompat.session import PgSession, UnsupportedQueryError, stream_rows
 from bemidb_spark.pgcompat.types import render_interval, render_time
 from bemidb_spark.sources.catalog import Catalog
 
@@ -699,8 +699,9 @@ class _Conn:
     def _row_stream(df: DataFrame):
         """Partition-at-a-time row iterator: driver memory stays O(one
         partition) regardless of result size (pg streams DataRows the same
-        way). Prefetch pipelines the next partition behind the socket writes."""
-        return iter(df.toLocalIterator(prefetchPartitions=True))
+        way). Prefetch pipelines the next partition behind the socket writes;
+        a task failure keeps its own SQLSTATE (``stream_rows``)."""
+        return stream_rows(df)
 
     def _row_stream_for(self, sql: str, df: DataFrame):
         """The rows of ``df`` for the wire: one capped Arrow fetch, else a
@@ -960,11 +961,11 @@ class _Conn:
         self._send(b"C", f"COPY {n}".encode() + b"\x00")
 
     # -------------------------------------------------------------- COPY IN
-    # Beyond-reference bulk load: `COPY table [(cols)] FROM STDIN` appends
-    # parquet files to the catalog table's live location — the same
-    # append-new-files-only path as the cursor syncer, so a bulk load never
-    # rewrites existing data (bucketed tables get their `_kb=` partition
-    # computed so partition-pruned MERGE keeps working afterwards).
+    # Beyond-reference bulk load: `COPY table [(cols)] FROM STDIN` adds new
+    # parquet files to the catalog table's list — the same append path as
+    # the cursor syncer, so a bulk load never rewrites existing data
+    # (bucketed tables get one new file per `_kb=` bucket, so bucket-pruned
+    # MERGE keeps working afterwards).
     def _run_copy_in(self, sql: str) -> None:
         import csv as _csv
         import io

@@ -1,19 +1,21 @@
-"""Warehouse catalog: schema.table → storage location + column metadata.
+"""Warehouse catalog: schema.table → a snapshot (the list of its live parquet
+files) + column metadata.
 
 Plays the role of the reference's Postgres-backed Iceberg catalog (two tables:
 ``iceberg_tables(table_namespace, table_name, metadata_location, columns)`` and
 ``iceberg_materialized_views(schema_name, table_name, definition)`` — reference
 scripts/catalog.sql:1-15, common/iceberg_catalog.go:59-82). Without an Iceberg
-runtime in this environment, the catalog is a JSON file beside the data and
-tables are parquet directories with **versioned locations + atomic pointer
-swap** (the same commit model Iceberg metadata files implement, and the same
-visibility guarantee the reference's `-bemidb-syncing` rename dance provides —
-iceberg_table.go:46-70): readers resolve the catalog pointer at query time and
-never observe a half-written table.
+runtime in this environment, the catalog is a JSON file beside the data.
 
-On a cluster this module is replaced 1:1 by an Iceberg JDBC/REST catalog;
-every caller goes through ``location()`` / ``commit_table()`` so the swap is
-the only thing that changes.
+**Files are immutable.** A write puts its files into a fresh directory
+(``new_location``) and commits a new list (``commit_table``): the live list
+minus the files it replaces plus the files it wrote — the reference's
+per-file rewrite (iceberg_table_writer.go:304-378), done copy-on-write. A
+reader that resolved a list keeps reading it while writers commit, and
+ROLLBACK is a pointer restore. A file is deleted once no live list, no
+retained snapshot (the snapshot log, storage_utils.go:371-496) and no open
+transaction pin (``pin``, held in this process) references it; its commit
+directory goes with its last file.
 
 **Versions.** The state carries monotonic counters next to the tables
 (``versions``): one per table, advanced by every commit that touches it,
@@ -24,11 +26,17 @@ re-plans only what reads that table, and the pg_catalog emulation is rebuilt
 only when the schema counter moves (pg's per-relation relcache
 invalidation). Counters are stored, never derived from file times, and a
 restore (ROLLBACK) advances them like any other commit, so no two states a
-reader can observe share a version.
+reader can observe share a version. A snapshot's ``id`` is its table's
+counter at the commit that made it.
+
+On a cluster this module is replaced 1:1 by an Iceberg JDBC/REST catalog;
+every write goes through ``commit_table`` so the swap is the only thing that
+changes.
 """
 
 from __future__ import annotations
 
+import itertools
 import threading
 import time
 
@@ -36,15 +44,23 @@ from bemidb_spark.sources import fs
 
 _LOCK = threading.Lock()
 
+# superseded snapshots kept per table (time travel + in-flight readers)
+SNAPSHOT_RETENTION = 3
+
+# open transaction and savepoint pins: catalog file -> token -> what the
+# pinned state references (files, (table, snapshot id) pairs)
+_PINS: dict[str, dict[int, tuple[frozenset, frozenset]]] = {}
+_PIN_TOKENS = itertools.count(1)
+
+
+class CommitConflict(Exception):
+    """A commit removes a file that is no longer live: another writer
+    replaced it first (pg's serialization_failure)."""
+
+    sqlstate = "40001"
+
 
 class Catalog:
-    # Every commit also emits spec-shaped Iceberg v2 metadata.json for the
-    # table (sources/iceberg_meta.py) — the reference's headline contract
-    # (storage_utils.go:371-496). Advisory for external readers: engine-side
-    # reads always resolve through this catalog, so metadata emission is
-    # best-effort and can be disabled for bulk test setup.
-    EMIT_ICEBERG_METADATA = True
-
     def __init__(self, root: str) -> None:
         # root may be a plain path or a file:// URI; all path math goes
         # through the fs adapter, so an object-store root only needs the
@@ -87,20 +103,83 @@ class Catalog:
         state["versions"] = v
         self._write(state)
 
+    # -- garbage collection ---------------------------------------------------
+    def _collect(self, candidates: tuple, state: dict) -> None:
+        """Delete the candidate files and snapshot metadata that neither
+        ``state`` nor an open pin references. Callers hold _LOCK."""
+        files, snaps = _refs(state["tables"])
+        for pinned_files, pinned_snaps in _PINS.get(self._path, {}).values():
+            files |= pinned_files
+            snaps |= pinned_snaps
+        garbage = set(candidates[0]) - files
+        dead = set(candidates[1]) - snaps
+        for path in sorted(garbage) + [p for key, snap_id in sorted(dead)
+                                       for p in self.metadata_files(key, snap_id)]:
+            d, name = path.rsplit("/", 1)
+            for p in (path, f"{d}/.{name}.crc"):  # Hadoop's checksum file
+                if fs.exists(p):
+                    fs.remove_file(p)
+        for cdir in {_commit_dir(p) for p in garbage}:
+            if not any(f.startswith(cdir + "/") for f in files):
+                fs.remove_tree(cdir)  # with Spark's _SUCCESS file
+        for key in {k for k, _ in dead} - {k for k, _ in snaps}:
+            fs.remove_tree(self.metadata_dir(key))
+
+    def metadata_dir(self, key: str) -> str:
+        """A table's Iceberg metadata (iceberg_meta) lives catalog-side:
+        readers find it through the metadata-location pointer."""
+        return fs.join(self.root, "_iceberg", key)
+
+    def metadata_files(self, key: str, snap_id: int) -> list[str]:
+        """The metadata version, manifest list and manifest of one snapshot."""
+        mdir = self.metadata_dir(key)
+        return [fs.join(mdir, f"v{snap_id}.metadata.json"),
+                fs.join(mdir, f"snap-{snap_id}.avro"),
+                fs.join(mdir, f"manifest-{snap_id}.avro")]
+
+    def _emit(self, schema: str, table: str) -> None:
+        # Every commit also emits spec-shaped Iceberg v2 metadata
+        # (iceberg_meta.py; the reference's headline contract,
+        # storage_utils.go:371-496). Advisory: engine reads resolve through
+        # this catalog, so a failed emission never fails the commit.
+        try:
+            from bemidb_spark.sources.iceberg_meta import write_metadata_file
+
+            write_metadata_file(self, schema, table)
+        except Exception:  # noqa: BLE001 — advisory artifact
+            pass
+
     # -- transactions --------------------------------------------------------
     def snapshot_state(self) -> dict:
-        """The full catalog state (tables + matviews), for BEGIN to pin."""
+        """The full catalog state (tables + views + matviews)."""
         with _LOCK:
             return self._read()
 
+    def pin(self) -> tuple[int, dict]:
+        """(token, current state); until ``unpin``, nothing the state
+        references is deleted (BEGIN / SAVEPOINT)."""
+        with _LOCK:
+            state = self._read()
+            token = next(_PIN_TOKENS)
+            _PINS.setdefault(self._path, {})[token] = tuple(
+                frozenset(r) for r in _refs(state["tables"]))
+        return token, state
+
+    def unpin(self, token: int) -> None:
+        """Release a pin, deleting what only it kept alive."""
+        with _LOCK:
+            refs = _PINS.get(self._path, {}).pop(token, None)
+            if refs is not None:
+                self._collect(refs, self._read())
+
     def restore_state(self, state: dict) -> None:
-        """Atomically restore a previously-pinned state (ROLLBACK).
+        """Atomically restore a pinned state (ROLLBACK) and delete the files
+        that only the aborted state referenced.
 
         The pinned counters are NOT restored: the restore is a new commit
-        that advances the counter of every table in either state (ROLLBACK
-        also prunes files appended in place, so even an unchanged entry may
-        read differently) and, when the table set, a table's columns, or the
-        view definitions differ, the schema counter."""
+        that advances the counter of every table in either state and, when
+        the table set, a table's columns, or the view definitions differ,
+        the schema counter."""
         with _LOCK:
             current = self._read()
             restored = {k: v for k, v in state.items() if k != "versions"}
@@ -110,73 +189,96 @@ class Catalog:
                 touched=tuple(set(current["tables"]) | set(state["tables"])),
                 ddl=_schema_of(current) != _schema_of(state),
             )
+            self._collect(_refs(current["tables"]), restored)
+        for key, entry in restored["tables"].items():
+            if current["tables"].get(key) != entry:
+                self._emit(*key.split(".", 1))
 
     # -- tables -------------------------------------------------------------
     @staticmethod
     def _key(schema: str, table: str) -> str:
         return f"{schema}.{table}"
 
+    def entry(self, schema: str, table: str) -> dict:
+        """``files`` (the live list), ``columns``, ``id``, ``snapshots``
+        (superseded, oldest first) and ``props``."""
+        entry = self._read()["tables"].get(self._key(schema, table))
+        if entry is None:
+            raise KeyError(f"table not found in catalog: {schema}.{table}")
+        return entry
+
+    def location(self, schema: str, table: str) -> str:
+        """The directory every commit directory of the table lives under."""
+        self.entry(schema, table)
+        return fs.join(self.root, "data", schema, table)
+
     def new_location(self, schema: str, table: str) -> str:
-        """A fresh versioned data directory for a table rewrite."""
-        return fs.join(self.root, "data", schema, fs.fresh_name(table))
+        """A fresh commit directory for a write's new files."""
+        return fs.join(self.root, "data", schema, table, fs.fresh_name(table))
+
+    def files(self, schema: str, table: str) -> list[str]:
+        return list(self.entry(schema, table)["files"])
 
     def commit_table(
-        self, schema: str, table: str, location: str, columns: list[dict],
+        self, schema: str, table: str, added: list[str],
+        removed: list[str] | None = None, columns: list[dict] | None = None,
         props: dict | None = None,
-    ) -> str | None:
-        """Atomically point schema.table at location; return the old location.
+    ) -> None:
+        """Commit a new snapshot of schema.table: the live list minus
+        ``removed`` (None: all of it, a full replace) plus ``added``.
 
-        ``props`` carries table layout metadata (e.g. key-bucket partitioning
-        for pruned MERGE); omitted -> the previous entry's props are kept.
-        """
+        Every removed file must still be live, else the commit raises
+        CommitConflict (40001) and deletes its own new files. ``columns``
+        and ``props`` (layout metadata, e.g. key buckets) default to the
+        previous entry's. The superseded list joins the snapshot log."""
+        key = self._key(schema, table)
         with _LOCK:
             state = self._read()
-            prev = state["tables"].get(self._key(schema, table), {})
-            old = prev.get("location")
-            entry = {"location": location, "columns": columns}
-            # snapshot log (reference keeps a snapshot history in its table
-            # metadata, storage_utils.go:371-496): superseded locations stay
-            # readable until expired, giving time travel + safe in-flight
-            # reads across a swap
-            snapshots = list(prev.get("snapshots", []))
-            if old and old != location:
-                snapshots.append({"location": old, "at": time.time()})
-            entry["snapshots"] = snapshots
+            prev = state["tables"].get(key) or {"files": [], "snapshots": []}
+            live = prev["files"]
+            gone = set(live) if removed is None else set(removed)
+            if not gone <= set(live):
+                for cdir in {_commit_dir(p) for p in added}:
+                    fs.remove_tree(cdir)
+                raise CommitConflict(
+                    f"could not serialize access to {key} due to a "
+                    "concurrent update")
+            entry = {
+                "id": versions(state)["tables"].get(key, 0) + 1,
+                "files": [f for f in live if f not in gone] + list(added),
+                "columns": columns or prev["columns"],
+                "snapshots": prev["snapshots"] + (
+                    [{"id": prev["id"], "files": live, "at": time.time()}]
+                    if "id" in prev else []),
+            }
             carried = props if props is not None else prev.get("props")
             if carried:
                 entry["props"] = carried
-            key = self._key(schema, table)
             state["tables"][key] = entry
+            expired = _trim(entry, SNAPSHOT_RETENTION)
             self._commit(state, touched=(key,),
-                         ddl=not prev or prev.get("columns") != columns)
-        if self.EMIT_ICEBERG_METADATA:
-            try:
-                from bemidb_spark.sources.iceberg_meta import write_metadata_file
-
-                write_metadata_file(self, schema, table)
-            except Exception:  # noqa: BLE001 — advisory artifact; a failed
-                pass  # emission must never fail the committed table swap
-        return old
+                         ddl=prev.get("columns") != entry["columns"])
+            self._collect(_snap_refs((key, s) for s in expired), state)
+        self._emit(schema, table)
 
     def snapshots(self, schema: str, table: str) -> list[dict]:
-        """Superseded locations, oldest first (live location not included)."""
+        """Superseded snapshots, oldest first (live list not included)."""
         entry = self._read()["tables"].get(self._key(schema, table)) or {}
         return list(entry.get("snapshots", []))
 
-    def prune_snapshots(self, schema: str, table: str, keep: int) -> list[str]:
-        """Drop all but the newest ``keep`` snapshots from the log; returns
-        the expired locations (caller deletes the files)."""
+    def expire_snapshots(self, schema: str, table: str, keep: int = 0) -> int:
+        """Drop all but the newest ``keep`` snapshots from the log and delete
+        what they alone referenced (Iceberg expire_snapshots). Returns the
+        number expired."""
+        key = self._key(schema, table)
         with _LOCK:
             state = self._read()
-            entry = state["tables"].get(self._key(schema, table))
-            if entry is None:
-                return []
-            snaps = entry.get("snapshots", [])
-            expired = snaps[: max(0, len(snaps) - keep)]
-            entry["snapshots"] = snaps[len(expired):]
-            # not a commit: the live location, all a reader binds, is as-is
-            self._write(state)
-        return [s["location"] for s in expired]
+            expired = _trim(state["tables"].get(key, {}), keep)
+            if expired:
+                # not a commit: the live list, all a reader binds, is as-is
+                self._write(state)
+                self._collect(_snap_refs((key, s) for s in expired), state)
+        return len(expired)
 
     def table_props(self, schema: str, table: str) -> dict:
         entry = self._read()["tables"].get(self._key(schema, table)) or {}
@@ -193,46 +295,22 @@ class Catalog:
             # not a commit: props steer writers, and no read plan uses them
             self._write(state)
 
-    def location(self, schema: str, table: str) -> str:
-        entry = self._read()["tables"].get(self._key(schema, table))
-        if entry is None:
-            raise KeyError(f"table not found in catalog: {schema}.{table}")
-        return entry["location"]
-
     def columns(self, schema: str, table: str) -> list[dict]:
-        entry = self._read()["tables"].get(self._key(schema, table))
-        if entry is None:
-            raise KeyError(f"table not found in catalog: {schema}.{table}")
-        return entry["columns"]
+        return self.entry(schema, table)["columns"]
 
     def tables(self) -> dict[str, dict]:
         return self._read()["tables"]
 
-    def drop_table(self, schema: str, table: str) -> str | None:
+    def drop_table(self, schema: str, table: str) -> bool:
+        """Drop the table and delete every file only it referenced."""
         with _LOCK:
             state = self._read()
             key = self._key(schema, table)
             entry = state["tables"].pop(key, None)
             if entry is not None:
                 self._commit(state, touched=(key,), ddl=True)
-        return entry["location"] if entry else None
-
-    def drop_table_locations(self, schema: str, table: str) -> list[str]:
-        """Drop the table; return EVERY location (live + snapshots + the
-        Iceberg metadata dir) so the caller can delete the files."""
-        with _LOCK:
-            state = self._read()
-            key = self._key(schema, table)
-            entry = state["tables"].pop(key, None)
-            if entry is not None:
-                self._commit(state, touched=(key,), ddl=True)
-        if not entry:
-            return []
-        return (
-            [s["location"] for s in entry.get("snapshots", [])]
-            + [entry["location"]]
-            + [fs.join(self.root, "_iceberg", self._key(schema, table))]
-        )
+                self._collect(_refs({key: entry}), state)
+        return entry is not None
 
     def rename_table(self, schema: str, table: str, new_table: str) -> None:
         with _LOCK:
@@ -291,6 +369,45 @@ def versions(state: dict) -> dict:
     v = state.get("versions") or {}
     return {"seq": v.get("seq", 0), "schema": v.get("schema", 0),
             "tables": dict(v.get("tables", {}))}
+
+
+def bucket_of(path: str) -> int | None:
+    """A key-bucketed file's bucket: its ``_kb=N/`` path segment."""
+    return next((int(p[4:]) for p in path.split("/") if p.startswith("_kb=")), None)
+
+
+def _refs(tables: dict) -> tuple[set, set]:
+    """(files, (table, snapshot id) pairs) that tables' live lists and
+    snapshot logs reference."""
+    return _snap_refs((key, snap) for key, entry in tables.items()
+                      for snap in (entry, *entry.get("snapshots", [])))
+
+
+def _snap_refs(snaps) -> tuple[set, set]:
+    """(files, (table, snapshot id) pairs) of (table, snapshot) pairs."""
+    files: set = set()
+    ids: set = set()
+    for key, snap in snaps:
+        files.update(snap["files"])
+        ids.add((key, snap["id"]))
+    return files, ids
+
+
+def _trim(entry: dict, keep: int) -> list[dict]:
+    """Cut an entry's snapshot log to its newest ``keep``; return the rest."""
+    snaps = entry.get("snapshots", [])
+    expired = snaps[: max(0, len(snaps) - keep)]
+    entry["snapshots"] = snaps[len(expired):]
+    return expired
+
+
+def _commit_dir(path: str) -> str:
+    """The commit directory a data file was written into (above its
+    ``col=value`` partition directories)."""
+    d = path.rsplit("/", 1)[0]
+    while "=" in d.rsplit("/", 1)[-1]:
+        d = d.rsplit("/", 1)[0]
+    return d
 
 
 def _schema_of(state: dict) -> tuple:

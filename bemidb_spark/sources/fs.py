@@ -10,7 +10,7 @@ behind one StorageInterface (storage.go); here the split is scheme-based:
   the reference's storage_s3.go role);
 - any other scheme (``gs://``, ``abfss://``) raises
   ``UnsupportedSchemeError`` from the *local-side* helpers only. Spark-side
-  reads/writes (``spark.read.parquet(loc)`` etc.) pass locations through
+  reads/writes (``spark.read.parquet(*files)`` etc.) pass paths through
   verbatim, so object-store locations flow to Hadoop's filesystem layer
   untouched — only driver-side maintenance (snapshot expiry, catalog JSON)
   needs a scheme-specific implementation, registered via
@@ -105,13 +105,6 @@ def exists(path: str) -> bool:
     return os.path.exists(_local(path))
 
 
-def isdir(path: str) -> bool:
-    b = _backend(path)
-    if b:
-        return b.isdir(path)
-    return os.path.isdir(_local(path))
-
-
 def makedirs(path: str) -> None:
     b = _backend(path)
     if b:
@@ -131,15 +124,6 @@ def remove_file(path: str) -> None:
     if b:
         return b.remove_file(path)
     os.remove(_local(path))
-
-
-def rmdir_if_empty(path: str) -> None:
-    b = _backend(path)
-    if b:
-        return b.rmdir_if_empty(path)
-    p = _local(path)
-    if os.path.isdir(p) and not os.listdir(p):
-        os.rmdir(p)
 
 
 def mtime_ns(path: str) -> int:
@@ -186,6 +170,13 @@ def write_json_atomic(path: str, payload: dict) -> None:
     with os.fdopen(fd, "w") as fh:
         json.dump(payload, fh, indent=1)
     os.replace(tmp, target)
+
+
+def copy_file(src: str, dst: str) -> None:
+    b = _backend(src)
+    if b:
+        return b.copy_file(src, dst)
+    shutil.copyfile(_local(src), _local(dst))
 
 
 def move_file(src: str, dst: str) -> None:

@@ -13,7 +13,7 @@ copy_object`` surface); the default is a lazily-created ``boto3.client("s3")``
 so importing this module costs nothing when S3 is unused. Semantics notes,
 matching object-store reality rather than POSIX:
 
-- ``makedirs``/``rmdir_if_empty`` are no-ops (S3 has no directories);
+- ``makedirs`` is a no-op (S3 has no directories);
 - ``write_json_atomic`` is a single PUT — atomic by S3's own guarantee
   (a GET sees either the old or the new object, never a torn write);
 - ``move_file`` is copy+delete (S3 has no rename) — callers that need an
@@ -63,15 +63,8 @@ class S3Backend:
         except Exception:  # noqa: BLE001 - includes botocore ClientError 404
             return bool(list(self._iter_keys(bucket, key.rstrip("/") + "/", 1)))
 
-    def isdir(self, path: str) -> bool:
-        bucket, key = split_uri(path)
-        return bool(list(self._iter_keys(bucket, key.rstrip("/") + "/", 1)))
-
     # -- directory shims (no-ops on an object store)
     def makedirs(self, path: str) -> None:
-        return None
-
-    def rmdir_if_empty(self, path: str) -> None:
         return None
 
     # -- listing
@@ -115,13 +108,16 @@ class S3Backend:
                 Delete={"Objects": [{"Key": k} for k in keys[i : i + 1000]]},
             )
 
-    def move_file(self, src: str, dst: str) -> None:
+    def copy_file(self, src: str, dst: str) -> None:
         sb, sk = split_uri(src)
         db, dk = split_uri(dst)
         self.client.copy_object(
             Bucket=db, Key=dk, CopySource={"Bucket": sb, "Key": sk}
         )
-        self.client.delete_object(Bucket=sb, Key=sk)
+
+    def move_file(self, src: str, dst: str) -> None:
+        self.copy_file(src, dst)
+        self.remove_file(src)
 
     # -- content
     def mtime_ns(self, path: str) -> int:

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import os
 
-from bemidb_spark.sources import fs
 from bemidb_spark.sources.avro_io import write_ocf
 
 
@@ -141,8 +140,8 @@ MANIFEST_FILE_SCHEMA = {
 STATUS_ADDED = 1
 
 
-def data_file_stats(location: str) -> list[dict]:
-    """Footer-only stats for every parquet file under ``location``.
+def data_file_stats(files: list[str]) -> list[dict]:
+    """Footer-only stats for every listed parquet file.
 
     Returns spec-shaped ``data_file`` records (path-sorted for deterministic
     manifests). Stats maps are keyed by the footer's PARQUET:field_id; files
@@ -152,10 +151,7 @@ def data_file_stats(location: str) -> list[dict]:
     import pyarrow.parquet as pq
 
     entries = []
-    for rel in sorted(fs.walk_files(location)):
-        if not rel.endswith(".parquet"):
-            continue
-        full = fs.join(location, rel)
+    for full in sorted(files):
         local = full[len("file://"):] if full.startswith("file://") else full
         meta = pq.read_metadata(local)
         arrow_schema = pq.read_schema(local)
@@ -200,17 +196,13 @@ def data_file_stats(location: str) -> list[dict]:
 
 
 def write_manifest(
-    path: str, location: str, snapshot_id: int, sequence_number: int
+    path: str, data_files: list[str], snapshot_id: int, sequence_number: int
 ) -> tuple[int, int, int]:
-    """Write one manifest Avro for the data files at ``location``.
+    """Write one manifest Avro for a snapshot's listed data files.
 
-    Returns (manifest byte length, file count, total record count). A
-    missing location (expired snapshot) yields an empty-but-valid manifest.
+    Returns (manifest byte length, file count, total record count).
     """
-    try:
-        files = data_file_stats(location)
-    except (OSError, FileNotFoundError):
-        files = []
+    files = data_file_stats(data_files)
     entries = [
         {
             "status": STATUS_ADDED,

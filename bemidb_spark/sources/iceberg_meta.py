@@ -4,7 +4,7 @@ The reference's headline feature is that its tables are Iceberg: it
 hand-writes ``metadata.json`` (src/common/storage_utils.go:371-496) and Avro
 manifests (storage_utils.go:162-370) so external engines can consume them.
 This module reproduces the *metadata* layer faithfully — every commit writes
-a spec-compliant ``metadata/v{N}.metadata.json`` + ``version-hint.text``
+a spec-compliant ``v{id}.metadata.json`` + ``version-hint.text``
 whose field set matches the reference writer one-for-one (format-version 2,
 table-uuid, schemas/fields with ids, snapshots + snapshot-log + refs/main,
 partition-specs, sort-orders) — and maps the JSON catalog 1:1 onto the
@@ -12,12 +12,12 @@ Iceberg REST catalog API shapes (namespaces / table identifiers /
 LoadTableResult with metadata-location).
 
 Each snapshot's ``manifest-list`` points at a real Avro manifest-list
-(``snap-<version>.avro``) which references an Avro manifest
-(``manifest-<version>.avro``) of spec-shaped ``manifest_entry`` records with
-footer-derived record counts and per-column stats — written by
-:mod:`iceberg_manifest` through the from-spec Avro encoder in
-:mod:`avro_io` (the reference does the same via goavro,
-storage_utils.go:162-370). Validation limits, documented: no external
+(``snap-<id>.avro``) which references an Avro manifest
+(``manifest-<id>.avro``) of spec-shaped ``manifest_entry`` records, one per
+file of the snapshot's committed list, with footer-derived record counts
+and per-column stats — written by :mod:`iceberg_manifest` through the
+from-spec Avro encoder in :mod:`avro_io` (the reference does the same via
+goavro, storage_utils.go:162-370). Validation limits, documented: no external
 Iceberg reader ships in this sandbox, so conformance is proven by an
 independent from-spec Avro decoder in tests, not by a third-party engine.
 """
@@ -146,52 +146,42 @@ def _schema_fields(columns: list[dict]) -> tuple[list[dict], int]:
     return fields, last_id
 
 
-def metadata_dir(catalog, schema: str, table: str) -> str:
-    """Metadata lives catalog-side (``<root>/_iceberg/<schema>.<table>/``),
-    NOT inside the data location: the data location must stay a pure parquet
-    directory (Spark's reader lists every non-hidden file in it), and
-    Iceberg readers locate metadata via the catalog's metadata-location
-    pointer, not by path convention — a REST catalog may point anywhere."""
-    return fs.join(catalog.root, "_iceberg", f"{schema}.{table}")
-
-
 def table_metadata(catalog, schema: str, table: str) -> dict:
     """Build the v2 metadata document for the table's current state.
 
-    Snapshot list = catalog snapshot log (oldest first) + live location,
+    Snapshot list = catalog snapshot log (oldest first) + live snapshot,
     mirroring the reference's manifestListFilesSortedAsc loop
-    (storage_utils.go:392-436): monotonic sequence numbers, parent links,
+    (storage_utils.go:392-436): each snapshot's id is its catalog id
+    (monotonic, so it doubles as the sequence number), parent links,
     refs/main at the newest snapshot.
     """
-    entry = catalog.tables()[f"{schema}.{table}"]
+    entry = catalog.entry(schema, table)
     fields, last_id = _schema_fields(entry["columns"])
     now_ms = int(time.time() * 1000)
-    mdir = metadata_dir(catalog, schema, table)
+    key = f"{schema}.{table}"
 
-    locations = [s["location"] for s in entry.get("snapshots", [])]
-    locations.append(entry["location"])
     snapshots, snapshot_log = [], []
-    for seq, loc in enumerate(locations, start=1):
-        snap_id = seq  # deterministic per table history position
-        snap = {
+    for snap in [*entry.get("snapshots", []), entry]:
+        snap_id = snap["id"]
+        out = {
             "snapshot-id": snap_id,
             "schema-id": 0,
-            "sequence-number": seq,
+            "sequence-number": snap_id,
             "timestamp-ms": now_ms,
-            "manifest-list": fs.join(mdir, f"snap-{fs.basename(loc)}.avro"),
+            "manifest-list": catalog.metadata_files(key, snap_id)[1],
             "summary": {"operation": "overwrite"},
         }
-        if seq > 1:
-            snap["parent-snapshot-id"] = snap_id - 1
-        snapshots.append(snap)
+        if snapshots:
+            out["parent-snapshot-id"] = snapshots[-1]["snapshot-id"]
+        snapshots.append(out)
         snapshot_log.append({"snapshot-id": snap_id, "timestamp-ms": now_ms})
-    current_id = snapshots[-1]["snapshot-id"]
+    current_id = entry["id"]
 
     return {
         "format-version": 2,
-        "table-uuid": str(uuid.uuid5(uuid.NAMESPACE_URL, f"{schema}.{table}")),
-        "location": entry["location"],
-        "last-sequence-number": len(snapshots),
+        "table-uuid": str(uuid.uuid5(uuid.NAMESPACE_URL, key)),
+        "location": catalog.location(schema, table),
+        "last-sequence-number": current_id,
         "last-updated-ms": now_ms,
         "last-column-id": last_id,
         "schemas": [
@@ -219,34 +209,28 @@ def table_metadata(catalog, schema: str, table: str) -> dict:
 
 
 def write_metadata_file(catalog, schema: str, table: str) -> str:
-    """Write v{N}.metadata.json + version-hint.text + the current snapshot's
-    Avro manifest-list/manifest pair into the metadata dir. Returns the path.
-
-    Manifests for older snapshots already exist from their own commits
-    (location basenames are unique per version), so each commit writes only
-    its own pair — commit cost stays O(files added), not O(history)."""
+    """Write the live snapshot's v{id}.metadata.json, Avro manifest list and
+    manifest (built from the committed list) + version-hint.text. Returns
+    the metadata path. Named by snapshot id, each commit writes only its own
+    set, and expiry deletes it with the snapshot's files."""
     from bemidb_spark.sources import iceberg_manifest
 
-    entry = catalog.tables()[f"{schema}.{table}"]
-    location = entry["location"]
-    if fs.is_remote(location):
-        raise fs.UnsupportedSchemeError(location)
-    mdir = metadata_dir(catalog, schema, table)
+    if fs.is_remote(catalog.root):
+        raise fs.UnsupportedSchemeError(catalog.root)
+    entry = catalog.entry(schema, table)
+    snap_id = entry["id"]
+    path, list_path, manifest_path = catalog.metadata_files(
+        f"{schema}.{table}", snap_id)
+    mdir = catalog.metadata_dir(f"{schema}.{table}")
     fs.makedirs(mdir)
-    version = len(entry.get("snapshots", [])) + 1
-    path = fs.join(mdir, f"v{version}.metadata.json")
     fs.write_json_atomic(path, table_metadata(catalog, schema, table))
-    hint = fs.join(mdir, "version-hint.text")
-    fs.write_json_atomic(hint, version)  # single int, like HadoopCatalog's hint
-    base = fs.basename(location)
-    manifest_path = fs.join(mdir, f"manifest-{base}.avro")
-    snap_id = seq = version  # matches table_metadata's snapshot numbering
+    # single int, like HadoopCatalog's hint
+    fs.write_json_atomic(fs.join(mdir, "version-hint.text"), snap_id)
     length, n_files, n_rows = iceberg_manifest.write_manifest(
-        manifest_path, location, snap_id, seq
+        manifest_path, entry["files"], snap_id, snap_id
     )
     iceberg_manifest.write_manifest_list(
-        fs.join(mdir, f"snap-{base}.avro"),
-        manifest_path, length, snap_id, seq, n_files, n_rows,
+        list_path, manifest_path, length, snap_id, snap_id, n_files, n_rows,
     )
     return path
 
@@ -272,12 +256,10 @@ def rest_table_identifiers(catalog, namespace: str) -> dict:
 
 def rest_load_table(catalog, namespace: str, table: str) -> dict:
     """GET /v1/namespaces/{ns}/tables/{t} -> LoadTableResult shape."""
-    entry = catalog.tables()[f"{namespace}.{table}"]
-    version = len(entry.get("snapshots", [])) + 1
+    key = f"{namespace}.{table}"
     return {
-        "metadata-location": fs.join(
-            metadata_dir(catalog, namespace, table), f"v{version}.metadata.json"
-        ),
+        "metadata-location": catalog.metadata_files(
+            key, catalog.tables()[key]["id"])[0],
         "metadata": table_metadata(catalog, namespace, table),
         "config": {},
     }
@@ -287,7 +269,12 @@ def import_rest_table(catalog, namespace: str, name: str, load_result: dict) -> 
     """Register a REST LoadTableResult into a (possibly different) catalog —
     the inverse mapping, proving the JSON catalog and the REST schema carry
     the same information (VERDICT r2 item 6 round-trip). The identifier comes
-    from the REST path, exactly as a REST client would pass it."""
+    from the REST path, exactly as a REST client would pass it. The current
+    snapshot's data files (read from its manifests) are copied into a fresh
+    directory: the importing catalog owns, and may delete, only its own
+    files."""
+    from bemidb_spark.sources.avro_io import read_ocf
+
     meta = load_result["metadata"]
     schema_fields = meta["schemas"][meta["current-schema-id"]]["fields"]
 
@@ -310,4 +297,14 @@ def import_rest_table(catalog, namespace: str, name: str, load_result: dict) -> 
         }
         for f in schema_fields
     ]
-    catalog.commit_table(namespace, name, meta["location"], columns)
+    current = next(s for s in meta["snapshots"]
+                   if s["snapshot-id"] == meta["current-snapshot-id"])
+    sources = [entry["data_file"]["file_path"]
+               for manifest in read_ocf(current["manifest-list"])[1]
+               for entry in read_ocf(manifest["manifest_path"])[1]]
+    loc = catalog.new_location(namespace, name)
+    fs.makedirs(loc)
+    files = [fs.join(loc, f"{i:05d}.parquet") for i in range(len(sources))]
+    for src, dst in zip(sources, files):
+        fs.copy_file(src, dst)
+    catalog.commit_table(namespace, name, files, columns=columns)

@@ -69,10 +69,8 @@ def read_materialized_view(
 
 
 def drop_materialized_view(catalog: Catalog, name: str) -> None:
-    from bemidb_spark.sources.writer import drop_table_files
-
     catalog.drop_matview(MATVIEW_SCHEMA, name)
-    drop_table_files(catalog, MATVIEW_SCHEMA, name)
+    catalog.drop_table(MATVIEW_SCHEMA, name)
 
 
 def rename_materialized_view(catalog: Catalog, name: str, new_name: str) -> None:

@@ -412,9 +412,7 @@ class AmplitudeSyncer:
             )
         df = self.spark.createDataFrame(rows, amplitude_schema())
         schema, table = AMPLITUDE_TABLE
-        try:
-            self.catalog.location(schema, table)
-        except KeyError:
+        if f"{schema}.{table}" not in self.catalog.tables():
             replace_table(self.catalog, schema, table, df)
             return df.count()
         return append_with_cursor(

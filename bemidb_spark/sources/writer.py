@@ -1,37 +1,37 @@
 """Write operators: full refresh, cursor append, key upsert/delete.
 
 Spark-first re-expression of the reference's data-movement operators
-(SURVEY.md §2.C):
+(SURVEY.md §2.C). Each writes its files into a fresh directory and commits
+a new list (``Catalog.commit_table``); readers of the old list are
+unaffected (snapshot isolation by immutability).
 
-- **replace_table** (C1/C2): write a fresh versioned location, atomically
-  re-point the catalog — the reference's `-bemidb-syncing` rename dance
-  (iceberg_table.go:46-70) collapses into a pointer swap. Readers of the old
-  location are unaffected (snapshot isolation by immutability).
+- **replace_table** (C1/C2): the new list is the fresh directory's files —
+  the reference's `-bemidb-syncing` rename dance (iceberg_table.go:46-70)
+  collapses into a pointer swap.
 - **append_with_cursor** (C3): incremental append — read current max(cursor),
-  take only newer source rows, write them as *additional files* in the live
-  location (parquet append). The reference rewrites its last small file to keep
-  ~100 MB targets (iceberg_table_writer.go:231-302); we defer that to a
-  compaction pass (`compact_table`) the way Iceberg's rewrite_data_files does.
+  take only newer source rows, add their files to the list. The reference
+  rewrites its last small file to keep ~100 MB targets
+  (iceberg_table_writer.go:231-302); we defer that to a compaction pass
+  (`compact_table`) the way Iceberg's rewrite_data_files does.
 - **upsert_by_key** (C4): MERGE semantics — (current rows NOT matched by key)
-  ∪ (new rows), written to a fresh location + swap. This is exactly the
-  reference's per-file rewrite (iceberg_table_writer.go:304-378) lifted to a
-  declarative anti-join; on Iceberg it becomes `MERGE INTO`, with file-level
-  pruning done by the engine instead of hand-tracked key→file maps.
-- **delete_by_key** (C5): anti-join rewrite + swap (`MERGE … THEN DELETE`).
+  ∪ (new rows). On a key-bucketed table only the touched buckets' listed
+  files are read and rewritten, one file per bucket — the reference's
+  per-file rewrite (iceberg_table_writer.go:304-378), done copy-on-write.
+- **delete_by_key** (C5): the same bucket rewrite with an anti-join
+  (`MERGE … THEN DELETE`); an emptied bucket simply has no files.
 
 Every operator is a full distributed plan (no collect of data rows); the only
-driver-side action is the catalog pointer swap.
+driver-side steps are listing the fresh directory and the catalog commit.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
 from bemidb_spark.sources import fs
-from bemidb_spark.sources.catalog import Catalog
+from bemidb_spark.sources.catalog import SNAPSHOT_RETENTION, Catalog, bucket_of  # noqa: F401
 
 
 def _columns_meta(df: DataFrame) -> list[dict]:
@@ -71,8 +71,37 @@ def _with_field_ids(df: DataFrame) -> DataFrame:
     )
 
 
-# hive partition column for key-bucketed tables (pruned MERGE)
+# hive partition column for key-bucketed tables; a file's bucket is its
+# ``_kb=N/`` path segment, never a column a reader binds
 BUCKET_COL = "_kb"
+
+
+def table_schema(columns: list[dict]) -> StructType:
+    """The declared schema a reader binds: the catalog's column types (one
+    DDL parse), pg_type tags kept, every column nullable as a parquet read
+    makes it."""
+    ddl = ", ".join(
+        "`{}` {}".format(c["name"].replace("`", "``"), c["type"]) for c in columns)
+    parsed = _parse_datatype_string(ddl)
+    return StructType([
+        StructField(f.name, f.dataType, True,
+                    {"pg_type": c["pg"]} if c.get("pg") else {})
+        for f, c in zip(parsed.fields, columns)
+    ])
+
+
+def read_files(spark: SparkSession, columns: list[dict], files: list[str]) -> DataFrame:
+    """Bind listed files with the declared columns: no directory listing and
+    no schema inference; an empty list is an empty relation."""
+    schema = table_schema(columns)
+    if not files:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*files)
+
+
+def read_table(spark: SparkSession, catalog: Catalog, schema: str, table: str) -> DataFrame:
+    entry = catalog.entry(schema, table)
+    return read_files(spark, entry["columns"], entry["files"])
 
 
 # ---------------------------------------------------------------------------
@@ -84,31 +113,22 @@ BUCKET_COL = "_kb"
 # probe touches O(#files) footers, not O(rows) data.
 # ---------------------------------------------------------------------------
 
-def _local_parquet_paths(location: str) -> list[str] | None:
-    """OS paths of the .parquet data files under a LOCAL table location, or
-    None for remote schemes (callers then fall back to a Spark job — on a
-    real cluster the same stats come from Iceberg manifests)."""
-    if fs.is_remote(location):
+def _os_paths(files: list[str]) -> list[str] | None:
+    """OS paths of listed LOCAL files, or None when any is remote (callers
+    then fall back to a Spark job — on a real cluster the same stats come
+    from Iceberg manifests)."""
+    if any(fs.is_remote(f) for f in files):
         return None
-    root = location[len("file://"):] if location.startswith("file://") else location
-    return [
-        os.path.join(root, rel.replace("/", os.sep))
-        for rel in fs.walk_files(location)
-        if rel.endswith(".parquet")
-    ]
+    return [f[len("file://"):] if f.startswith("file://") else f for f in files]
 
 
-def _footer_row_count(paths: list[str]) -> int:
+def footer_total_rows(files: list[str]) -> int | None:
+    """Exact row count of listed files from parquet footers (None → remote
+    files, caller must run a count job)."""
     import pyarrow.parquet as pq
 
-    return sum(pq.read_metadata(p).num_rows for p in paths)
-
-
-def footer_total_rows(location: str) -> int | None:
-    """Exact row count of a table location from parquet footers (None →
-    remote location, caller must run a count job)."""
-    paths = _local_parquet_paths(location)
-    return None if paths is None else _footer_row_count(paths)
+    paths = _os_paths(files)
+    return None if paths is None else sum(pq.read_metadata(p).num_rows for p in paths)
 
 
 # physical types whose parquet min/max stats are exact values (BYTE_ARRAY
@@ -152,6 +172,30 @@ def footer_column_max(paths: list[str], col: str) -> tuple[bool, object]:
     return True, best
 
 
+def _bucket_expr(key_cols: list[str], n_buckets: int):
+    return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets))
+
+
+def _write_files(
+    catalog: Catalog, schema: str, table: str, df: DataFrame,
+    bucketing: tuple[list[str], int] | None = None,
+) -> tuple[str, list[str]]:
+    """Write df into a fresh commit directory; return it and the parquet
+    files written (none: the directory is removed). A key-bucketed write
+    is one file per bucket (``_kb=N/``)."""
+    loc = catalog.new_location(schema, table)
+    if bucketing:
+        out = df.withColumn(BUCKET_COL, _bucket_expr(*bucketing))
+        out.repartition(BUCKET_COL).write.partitionBy(BUCKET_COL).parquet(loc)
+    else:
+        df.write.parquet(loc)
+    files = sorted(fs.join(loc, rel) for rel in fs.walk_files(loc)
+                   if rel.endswith(".parquet"))
+    if not files:
+        fs.remove_tree(loc)
+    return loc, files
+
+
 def append_rows(
     spark: SparkSession,
     catalog: Catalog,
@@ -161,51 +205,25 @@ def append_rows(
 ) -> int:
     """Append-only write; returns the EXACT appended row count.
 
-    The count is read back from the new files' footers (one execution of the
-    source plan — the write job itself — instead of the count-then-write
-    double execution), matching how Iceberg derives commit row counts from
-    manifest entries. A zero-row append is rolled back: the empty part files
-    are removed and no catalog version is committed, so replayed cursor
-    batches are true no-ops. Remote locations count first (no footer access
-    driver-side) and skip the write when empty."""
-    props = catalog.table_props(schema, table) or {}
-    loc = catalog.location(schema, table)
-    out = df
-    if props.get("bucket_keys"):
-        out = df.withColumn(
-            BUCKET_COL, _bucket_expr(props["bucket_keys"], props["n_buckets"])
-        )
-        writer = out.write.mode("append").partitionBy(BUCKET_COL)
-    else:
-        writer = out.write.mode("append")
-    before = _local_parquet_paths(loc)
-    if before is None:  # remote: no driver-side footer access
-        n = df.count()
-        if n:
-            writer.parquet(loc)
-    else:
-        writer.parquet(loc)
-        prior = set(before)
-        new_files = [p for p in _local_parquet_paths(loc) if p not in prior]
-        n = _footer_row_count(new_files)
-        if n == 0:
-            for p in new_files:
-                fs.remove_file(p)
-    if n:
-        spark.catalog.refreshByPath(loc)
-        catalog.commit_table(schema, table, loc, catalog.columns(schema, table))
+    The new files go into a fresh directory and join the live list. The
+    count is read back from their footers (one execution of the source plan
+    — the write job itself — instead of the count-then-write double
+    execution), matching how Iceberg derives commit row counts from manifest
+    entries. A zero-row append removes its fresh directory and commits
+    nothing, so replayed cursor batches are true no-ops."""
+    entry = catalog.entry(schema, table)
+    props = entry.get("props", {})
+    bucketing = (props["bucket_keys"], props["n_buckets"]) \
+        if props.get("bucket_keys") else None
+    loc, files = _write_files(catalog, schema, table, df, bucketing)
+    n = footer_total_rows(files)
+    if n is None:  # remote: no driver-side footer access
+        n = read_files(spark, entry["columns"], files).count()
+    if n == 0:
+        fs.remove_tree(loc)
+        return 0
+    catalog.commit_table(schema, table, files, removed=[])
     return n
-
-
-def read_table(spark: SparkSession, catalog: Catalog, schema: str, table: str) -> DataFrame:
-    df = spark.read.parquet(catalog.location(schema, table))
-    if BUCKET_COL in df.columns:
-        df = df.drop(BUCKET_COL)
-    return df
-
-
-def _bucket_expr(key_cols: list[str], n_buckets: int):
-    return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets))
 
 
 def write_bucketed_table(
@@ -216,32 +234,23 @@ def write_bucketed_table(
     df: DataFrame,
     key_cols: list[str],
     n_buckets: int = 16,
-) -> str:
-    """Write a table hive-partitioned by key bucket (``_kb=<n>/`` dirs).
+) -> list[str]:
+    """Write a table hive-partitioned by key bucket (``_kb=<n>/`` dirs), one
+    file per bucket; returns the new list.
 
     This is the layout that makes `upsert_by_key`/`delete_by_key` rewrite
-    only the partitions containing affected keys — the Spark-side analogue of
+    only the buckets containing affected keys — the Spark-side analogue of
     the reference's key-overlapping-file rewrite
     (iceberg_table_writer.go:304-378). At 100 TB, a k-row MERGE touches
     ~k/n_buckets of the table instead of all of it.
     """
-    loc = catalog.new_location(schema, table)
-    out = _with_field_ids(df).withColumn(BUCKET_COL, _bucket_expr(key_cols, n_buckets))
-    out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(loc)
+    _, files = _write_files(
+        catalog, schema, table, _with_field_ids(df), (key_cols, n_buckets))
     catalog.commit_table(
-        schema, table, loc, _columns_meta(df),
+        schema, table, files, columns=_columns_meta(df),
         props={"bucket_keys": key_cols, "n_buckets": n_buckets},
     )
-    # superseded location joined the snapshot log in commit_table — expire
-    # through the log (not remove_tree) so time travel stays consistent
-    expire_snapshots(catalog, schema, table, keep=SNAPSHOT_RETENTION)
-    return loc
-
-
-# superseded snapshots retained per table before auto-expiry (time travel +
-# in-flight reader safety; reference keeps a snapshot log,
-# storage_utils.go:371-496)
-SNAPSHOT_RETENTION = 3
+    return files
 
 
 def replace_table(
@@ -250,60 +259,38 @@ def replace_table(
     table: str,
     df: DataFrame,
     n_files: int | None = None,
-    drop_old: bool = False,
-) -> str:
-    """Full-refresh: write df to a fresh location, swap the catalog pointer.
+) -> list[str]:
+    """Full refresh: write df to a fresh directory; the new list is its
+    files. Returns the new list.
 
-    The superseded location is NOT deleted: it joins the snapshot log, so
-    readers that resolved the old location keep working and `read_table_at`
-    can time-travel. Snapshots beyond SNAPSHOT_RETENTION are expired
-    (deleted) automatically; pass drop_old=True for the old eager behavior.
+    The superseded list joins the snapshot log, so readers that resolved it
+    keep working and `read_table_at` can time-travel; snapshots beyond
+    SNAPSHOT_RETENTION expire at the commit.
     """
-    loc = catalog.new_location(schema, table)
     out = df.repartition(n_files) if n_files else df
-    _with_field_ids(out).write.mode("overwrite").parquet(loc)
+    _, files = _write_files(catalog, schema, table, _with_field_ids(out))
     # the files written here are NOT bucket-partitioned, so a stale
     # bucket-layout prop must not survive the swap (a later "pruned" MERGE
-    # would look for a _kb partition column that no longer exists); every
-    # other prop (incremental-matview specs, sync watermarks) is kept
+    # would look for buckets the files no longer carry); every other prop
+    # (incremental-matview specs, sync watermarks) is kept
     props = {
         k: v for k, v in catalog.table_props(schema, table).items()
         if k not in ("bucket_keys", "n_buckets")
     }
-    old = catalog.commit_table(schema, table, loc, _columns_meta(df), props=props)
-    if old and drop_old:
-        for expired in catalog.prune_snapshots(schema, table, keep=0):
-            fs.remove_tree(expired)
-    else:
-        expire_snapshots(catalog, schema, table, keep=SNAPSHOT_RETENTION)
-    return loc
+    catalog.commit_table(
+        schema, table, files, columns=_columns_meta(df), props=props)
+    return files
 
 
 def read_table_at(
     spark: SparkSession, catalog: Catalog, schema: str, table: str, age: int = 1
 ) -> DataFrame:
-    """Time-travel read: ``age`` swaps ago (1 = the snapshot just replaced)."""
+    """Time-travel read: ``age`` commits ago (1 = the snapshot just replaced)."""
     snaps = catalog.snapshots(schema, table)
     if age < 1 or age > len(snaps):
-        raise KeyError(f"no snapshot {age} swaps back for {schema}.{table}")
-    df = spark.read.parquet(snaps[-age]["location"])
-    return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
-
-
-def expire_snapshots(
-    catalog: Catalog, schema: str, table: str, keep: int = 0
-) -> int:
-    """Delete snapshot locations beyond ``keep`` (Iceberg expire_snapshots)."""
-    expired = catalog.prune_snapshots(schema, table, keep)
-    for loc in expired:
-        fs.remove_tree(loc)
-    return len(expired)
-
-
-def drop_table_files(catalog: Catalog, schema: str, table: str) -> None:
-    """Drop a table and delete its live + snapshot locations."""
-    for loc in catalog.drop_table_locations(schema, table):
-        fs.remove_tree(loc)
+        raise KeyError(f"no snapshot {age} commits back for {schema}.{table}")
+    return read_files(
+        spark, catalog.columns(schema, table), snaps[-age]["files"])
 
 
 def append_with_cursor(
@@ -317,11 +304,11 @@ def append_with_cursor(
     """Append source rows with cursor > current max(cursor). Returns row count.
 
     Mirrors the reference's cursor append (amplitude syncer.go:35-75): the
-    cursor read is one tiny aggregation on the live table; the append adds new
-    parquet files without touching existing ones.
+    cursor read is a footer probe of the listed files (or one tiny
+    aggregation); the append adds new parquet files without touching
+    existing ones.
     """
-    loc = catalog.location(schema, table)
-    paths = _local_parquet_paths(loc)
+    paths = _os_paths(catalog.files(schema, table))
     ok, max_cursor = (False, None) if paths is None else footer_column_max(paths, cursor_col)
     if not ok:  # remote files or non-exact stats: one tiny Spark aggregate
         current = read_table(spark, catalog, schema, table)
@@ -349,6 +336,37 @@ def _affected_buckets(updates: DataFrame, key_cols: list[str], n_buckets: int) -
     return sorted(r[0] for r in rows)
 
 
+def bucket_slice(
+    spark: SparkSession, catalog: Catalog, schema: str, table: str,
+    buckets: list[int],
+) -> tuple[list[str], DataFrame]:
+    """The touched buckets' listed files, and their rows."""
+    entry = catalog.entry(schema, table)
+    touched = [f for f in entry["files"] if bucket_of(f) in set(buckets)]
+    return touched, read_files(spark, entry["columns"], touched)
+
+
+def rewrite_buckets(
+    catalog: Catalog,
+    schema: str,
+    table: str,
+    touched: list[str],
+    rows: DataFrame,
+    key_cols: list[str],
+    n_buckets: int,
+) -> None:
+    """Copy-on-write bucket rewrite: write ``rows`` (the touched buckets'
+    surviving and new rows, cast to the declared columns) as one file per
+    bucket into a fresh directory, and commit: the ``touched`` files out,
+    the new files in. A row that lands in an untouched bucket adds a file
+    to it without rewriting it."""
+    declared = table_schema(catalog.columns(schema, table))
+    rows = rows.select(*[F.col(f.name).cast(f.dataType) for f in declared.fields])
+    _, files = _write_files(
+        catalog, schema, table, _with_field_ids(rows), (key_cols, n_buckets))
+    catalog.commit_table(schema, table, files, removed=touched)
+
+
 def upsert_by_key(
     spark: SparkSession,
     catalog: Catalog,
@@ -357,13 +375,13 @@ def upsert_by_key(
     updates: DataFrame,
     key_cols: list[str],
     buckets: list[int] | None = None,
-) -> str:
+) -> None:
     """MERGE: matched rows replaced by updates, unmatched inserted.
 
-    On a key-bucketed table only the partitions containing affected keys are
-    rewritten (dynamic partition overwrite); every other partition's files
-    are untouched bytes — mirroring the reference's key-overlapping-file
-    rewrite (iceberg_table_writer.go:304-378). Falls back to a full
+    On a key-bucketed table only the buckets containing affected keys are
+    rewritten (`rewrite_buckets`); every other bucket's files stay in the
+    list untouched — mirroring the reference's key-overlapping-file rewrite
+    (iceberg_table_writer.go:304-378). Falls back to a full
     rewrite-and-swap for unbucketed tables.
 
     ``buckets``: the affected-bucket list when the caller already computed
@@ -374,29 +392,14 @@ def upsert_by_key(
     if n_buckets is None:
         current = read_table(spark, catalog, schema, table)
         kept = current.join(updates.select(*key_cols), on=key_cols, how="left_anti")
-        merged = kept.unionByName(updates)
-        return replace_table(catalog, schema, table, merged)
-    loc = catalog.location(schema, table)
+        replace_table(catalog, schema, table, kept.unionByName(updates))
+        return
     if buckets is None:
         buckets = _affected_buckets(updates, key_cols, n_buckets)
-    current = spark.read.parquet(loc).filter(F.col(BUCKET_COL).isin(buckets))
-    kept = current.drop(BUCKET_COL).join(
-        updates.select(*key_cols), on=key_cols, how="left_anti"
-    )
-    merged = _with_field_ids(kept.unionByName(updates)).withColumn(
-        BUCKET_COL, _bucket_expr(key_cols, n_buckets)
-    )
-    # dynamic mode replaces ONLY the partitions present in `merged`
-    merged.write.mode("overwrite") \
-        .option("partitionOverwriteMode", "dynamic") \
-        .partitionBy(BUCKET_COL).parquet(loc)
-    # re-commit (same location): advances the table's version, so sessions
-    # rebind it and drop the plans that captured the old file listing. The
-    # declared columns stand — a merge cannot change them, and recomputing
-    # them from the merged rows (whose nullability follows the proposed
-    # rows) would turn every first upsert into a schema change.
-    catalog.commit_table(schema, table, loc, catalog.columns(schema, table))
-    return loc
+    touched, current = bucket_slice(spark, catalog, schema, table, buckets)
+    kept = current.join(updates.select(*key_cols), on=key_cols, how="left_anti")
+    rewrite_buckets(catalog, schema, table, touched,
+                    kept.unionByName(updates), key_cols, n_buckets)
 
 
 def delete_by_key(
@@ -407,70 +410,25 @@ def delete_by_key(
     keys: DataFrame,
     key_cols: list[str],
     buckets: list[int] | None = None,
-    emptied_buckets: set[int] | None = None,
-) -> str:
-    """MERGE ... WHEN MATCHED THEN DELETE (partition-pruned when bucketed).
+) -> None:
+    """MERGE ... WHEN MATCHED THEN DELETE (bucket-pruned when bucketed).
 
-    ``buckets`` / ``emptied_buckets``: affected buckets and the subset whose
-    rows ALL die, when the caller already knows them (the DML routes fuse
-    both with the deleted-row count in one per-bucket aggregation); None
-    derives them here with two extra passes (one over ``keys``, one over
-    the surviving rows)."""
+    ``buckets``: the affected buckets when the caller already knows them
+    (the DML routes fuse them with the deleted-row count in one per-bucket
+    aggregation); None derives them here with one extra pass over
+    ``keys``. A bucket whose rows all die is left with no files."""
     n_buckets = _bucketed_layout(catalog, schema, table, key_cols)
     if n_buckets is None:
         current = read_table(spark, catalog, schema, table)
         remaining = current.join(keys.select(*key_cols), on=key_cols, how="left_anti")
-        return replace_table(catalog, schema, table, remaining)
-    loc = catalog.location(schema, table)
+        replace_table(catalog, schema, table, remaining)
+        return
     if buckets is None:
         buckets = _affected_buckets(keys, key_cols, n_buckets)
-    all_rows = spark.read.parquet(loc)
-    row_schema = all_rows.drop(BUCKET_COL).schema
-    current = all_rows.filter(F.col(BUCKET_COL).isin(buckets))
-    remaining = _with_field_ids(
-        current.drop(BUCKET_COL).join(
-            keys.select(*key_cols), on=key_cols, how="left_anti"
-        )
-    ).withColumn(BUCKET_COL, _bucket_expr(key_cols, n_buckets))
-    if emptied_buckets is None:
-        remaining_buckets = {
-            r[0] for r in remaining.select(BUCKET_COL).distinct().collect()
-        }
-    else:
-        remaining_buckets = set(buckets) - emptied_buckets
-    remaining.write.mode("overwrite") \
-        .option("partitionOverwriteMode", "dynamic") \
-        .partitionBy(BUCKET_COL).parquet(loc)
-    # dynamic overwrite can't emit an EMPTY partition: buckets whose rows were
-    # all deleted keep their old files — remove those directories explicitly
-    for b in buckets:
-        if b not in remaining_buckets:
-            fs.remove_tree(fs.join(loc, f"{BUCKET_COL}={b}"))
-    # a delete that empties EVERY bucket leaves a file-less location that
-    # Spark can't infer a schema from — pg keeps an empty table readable, so
-    # re-point the catalog at a schema-bearing empty table. The bucket
-    # layout is dropped with the data (an empty partitioned write emits no
-    # files at all); the next write re-establishes whatever layout it wants.
-    # Found by the DML sequence fuzzer: delete-evens / delete-odds to empty.
-    if not any(f.endswith(".parquet") for f in fs.walk_files(loc)):
-        empty = _with_field_ids(spark.createDataFrame([], row_schema))
-        new_loc = catalog.new_location(schema, table)
-        empty.write.mode("overwrite").parquet(new_loc)
-        # keep every non-layout prop (incremental-matview specs, sync
-        # watermarks); only the bucket layout dies with the data files
-        props = {
-            k: v for k, v in catalog.table_props(schema, table).items()
-            if k not in ("bucket_keys", "n_buckets")
-        }
-        catalog.commit_table(
-            schema, table, new_loc, catalog.columns(schema, table), props=props,
-        )
-        # the superseded location joined the snapshot log above — expire via
-        # the log (as replace_table does) so time travel stays consistent
-        expire_snapshots(catalog, schema, table, keep=SNAPSHOT_RETENTION)
-        return new_loc
-    catalog.commit_table(schema, table, loc, catalog.columns(schema, table))
-    return loc
+    touched, current = bucket_slice(spark, catalog, schema, table, buckets)
+    remaining = current.join(keys.select(*key_cols), on=key_cols, how="left_anti")
+    rewrite_buckets(catalog, schema, table, touched, remaining,
+                    key_cols, n_buckets)
 
 
 def compact_table(
@@ -479,10 +437,11 @@ def compact_table(
     schema: str,
     table: str,
     target_rows_per_file: int = 1_000_000,
-) -> str:
+) -> list[str]:
     """Rewrite a table's small files into right-sized ones (rewrite_data_files)."""
-    df = read_table(spark, catalog, schema, table)
-    n_rows = footer_total_rows(catalog.location(schema, table))
+    entry = catalog.entry(schema, table)
+    df = read_files(spark, entry["columns"], entry["files"])
+    n_rows = footer_total_rows(entry["files"])
     if n_rows is None:
         n_rows = df.count()
     n_files = max(1, -(-n_rows // target_rows_per_file))

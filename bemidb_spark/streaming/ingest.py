@@ -7,39 +7,38 @@ replacement a 100 TB pipeline actually runs: a Structured Streaming source
 exactly-once semantics.
 
 Exactly-once story:
-- ``foreachBatch`` routes every micro-batch through the same plain-parquet
-  append path batch writes use, so the table location never grows a
-  ``_spark_metadata`` sink log. (A direct parquet *sink* would write one —
-  and a location with a sink log is read through it EXCLUSIVELY, silently
-  hiding pre-existing table files and later batch appends; mixed
-  stream/batch ingest would lose data. ADVICE r2 high.)
-- Idempotent replay: each micro-batch lands as deterministically-named
-  files (``sb{batch_id}-{i}.parquet``) moved in from a staging directory,
-  and a ``{batch_id}.done`` marker under the checkpoint records the commit.
-  A batch replayed after a crash first clears its own partial files, then
-  re-moves a fresh set — convergent, so at-least-once retries become
-  exactly-once file state.
+- ``foreachBatch`` writes every micro-batch as plain parquet files into a
+  fresh commit directory and adds them to the table's list, like a batch
+  append, so no ``_spark_metadata`` sink log is ever written. (A direct
+  parquet *sink* would write one — and a directory with a sink log is read
+  through it EXCLUSIVELY, silently hiding other files; mixed stream/batch
+  ingest would lose data. ADVICE r2 high.)
+- Idempotent replay: each micro-batch's files are deterministically named
+  (``sb{batch_id}-{tag}-{i}.parquet``, ``tag`` naming the checkpoint), and
+  a ``{batch_id}.done`` marker under the checkpoint records the commit. A
+  batch replayed after a crash commits its new files in place of its own
+  earlier copy — convergent, so at-least-once retries become exactly-once
+  table state.
 - ``Trigger.AvailableNow`` drains everything available then stops — the
   incremental-batch operating mode (run from cron, process only NEW source
   files since the last checkpoint, exit). The same query with a processing-
   time trigger is the always-on mode; the plan is identical.
-- The catalog commit happens after the stream drains; the table location is
-  stable across runs (append-only), so readers never see a half-written
-  batch directory swap.
+- Each batch is one catalog commit, so readers never see a half-written
+  batch.
 
 At scale: the file source lists only unseen files (checkpointed), each
-micro-batch is partition-parallel, and the staging write is one distributed
-parquet job per batch — the file moves are metadata-only renames on the
-same filesystem (O(#files), driver-side, no data movement), the same append
-shape as `sources/writer.append_with_cursor` with offset tracking moved
-into Spark's checkpoint instead of a cursor column.
+micro-batch is partition-parallel, and the write is one distributed parquet
+job per batch — the renames are metadata-only (O(#files), driver-side, no
+data movement), the same append shape as
+`sources/writer.append_with_cursor` with offset tracking moved into Spark's
+checkpoint instead of a cursor column.
 """
 
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -65,37 +64,31 @@ def stream_append(
     """
     if not stream_df.isStreaming:
         raise ValueError("stream_append needs a streaming DataFrame")
-    try:
-        location = catalog.location(schema, table)
-    except KeyError:
-        location = catalog.new_location(schema, table)
-    os.makedirs(location, exist_ok=True)
+    columns = _columns_meta(stream_df)
+    tag = hashlib.sha1(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
     marker_dir = os.path.join(checkpoint_dir, "committed_batches")
     os.makedirs(marker_dir, exist_ok=True)
-    staging_root = os.path.join(checkpoint_dir, "staging")
     done = {"batches": 0}
 
     def _commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         marker = os.path.join(marker_dir, f"{batch_id}.done")
         if os.path.exists(marker):
             return  # checkpoint replayed a batch we fully committed
-        staging = os.path.join(staging_root, str(batch_id))
-        shutil.rmtree(staging, ignore_errors=True)
-        batch_df.write.mode("overwrite").parquet(staging)
-        parts = sorted(glob.glob(os.path.join(staging, "part-*")))
-        # clear partial files from an earlier crashed attempt of THIS batch,
-        # then move the fresh set in under deterministic names
-        for stale in glob.glob(os.path.join(location, f"sb{batch_id}-*.parquet")):
-            os.remove(stale)
-        for i, src in enumerate(parts):
-            dst = os.path.join(location, f"sb{batch_id}-{i:05d}.parquet")
-            try:
-                os.replace(src, dst)  # same-FS: atomic metadata rename
-            except OSError:  # cross-device staging (EXDEV): copy+delete
-                shutil.move(src, dst)
+        prefix = f"sb{batch_id}-{tag}-"
+        loc = catalog.new_location(schema, table)
+        batch_df.write.parquet(loc)
+        files = []
+        for i, src in enumerate(sorted(glob.glob(os.path.join(loc, "part-*")))):
+            files.append(os.path.join(loc, f"{prefix}{i:05d}.parquet"))
+            os.replace(src, files[-1])
+        # a replay replaces the copy an earlier crashed attempt committed
+        entry = catalog.tables().get(f"{schema}.{table}")
+        stale = [f for f in (entry or {}).get("files", [])
+                 if os.path.basename(f).startswith(prefix)]
+        catalog.commit_table(schema, table, files, removed=stale,
+                             columns=columns)
         with open(marker, "w") as f:
             f.write("ok")
-        shutil.rmtree(staging, ignore_errors=True)
         done["batches"] += 1
 
     query = (
@@ -106,8 +99,6 @@ def stream_append(
         .start()
     )
     query.awaitTermination()
-    spark.catalog.refreshByPath(location)
-    catalog.commit_table(schema, table, location, _columns_meta(stream_df))
     return done["batches"]
 
 
@@ -167,9 +158,7 @@ def stream_apply_cdc(
         )
         # pin the reduced batch before multiple passes (ops read it twice)
         last = last.localCheckpoint(eager=True)
-        try:
-            catalog.location(schema, table)
-        except KeyError:
+        if f"{schema}.{table}" not in catalog.tables():
             from bemidb_spark.sources.writer import replace_table
 
             empty = spark.createDataFrame(

@@ -181,8 +181,6 @@ def test_dml_over_wire(spark, tmp_path):
 
 
 def test_vacuum_and_analyze(spark, cat):
-    import glob
-
     replace_table(cat, "public", "vt", spark.range(1000).repartition(8))
     pg = PgSession(spark, cat)
     # a rewrite leaves a superseded snapshot behind
@@ -192,9 +190,7 @@ def test_vacuum_and_analyze(spark, cat):
     pg.execute("VACUUM vt")
     assert cat.snapshots("public", "vt") == []
     pg.execute("VACUUM FULL vt")
-    loc = cat.location("public", "vt")
-    files = glob.glob(f"{loc}/*.parquet")
-    assert len(files) == 1  # 2000 rows -> one right-sized file
+    assert len(cat.files("public", "vt")) == 1  # 2000 rows -> one right-sized file
     assert pg.execute("SELECT count(*) AS n FROM vt").collect()[0].n == 2000
 
 
@@ -616,17 +612,14 @@ def test_incremental_matview_delta_counts(spark, cat):
     assert got == want
 
 
-def _merge_digests(loc):
+def _merge_digests(cat, table):
+    """path -> content digest of every file in public.<table>'s live list."""
     import hashlib
-    import os
 
     out = {}
-    for root, _, files in os.walk(loc):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(root, f)
-                with open(p, "rb") as fh:
-                    out[os.path.relpath(p, loc)] = hashlib.md5(fh.read()).hexdigest()
+    for p in cat.files("public", table):
+        with open(p, "rb") as fh:
+            out[p] = hashlib.md5(fh.read()).hexdigest()
     return out
 
 
@@ -634,14 +627,14 @@ def test_merge_bucketed_rewrites_only_affected_buckets(spark, cat):
     """VERDICT r7 #2: a k-row MERGE on a key-bucketed target (equi-ON over
     the bucket keys) must leave untouched buckets' parquet files
     byte-identical — only buckets the source keys hash into are
-    dynamic-partition-overwritten."""
+    rewritten."""
+    from bemidb_spark.sources.catalog import bucket_of
     from bemidb_spark.sources.writer import _bucket_expr
 
     base = spark.range(200).selectExpr("id AS k", "id * 10 AS n")
     write_bucketed_table(spark, cat, "public", "mb", base, ["k"], n_buckets=8)
-    loc = cat.location("public", "mb")
-    before = _merge_digests(loc)
-    assert len({p.split("/")[0] for p in before}) == 8
+    before = _merge_digests(cat, "mb")
+    assert sorted(bucket_of(p) for p in before) == list(range(8))
 
     pg = PgSession(spark, cat)
     pg.execute("CREATE TABLE mdelta AS SELECT * FROM (VALUES "
@@ -653,15 +646,14 @@ def test_merge_bucketed_rewrites_only_affected_buckets(spark, cat):
         "WHEN NOT MATCHED THEN INSERT VALUES (d.k, d.n)"
     )._pg_tag == "MERGE 3"
 
-    after = _merge_digests(loc)
+    after = _merge_digests(cat, "mb")
     touched = {
         r[0] for r in spark.createDataFrame([(3,), (11,), (1003,)], "k bigint")
         .select(_bucket_expr(["k"], 8).alias("b")).distinct().collect()
     }
-    untouched = {f"_kb={b}" for b in range(8)} - {f"_kb={b}" for b in touched}
-    changed = [p for p, d in before.items()
-               if p.split("/")[0] in untouched and after.get(p) != d]
-    assert not changed, f"untouched buckets rewritten: {changed}"
+    # untouched buckets: the same paths in the list, the same bytes on disk
+    assert {p: d for p, d in after.items() if bucket_of(p) not in touched} \
+        == {p: d for p, d in before.items() if bucket_of(p) not in touched}
     # bucket layout survives the pruned write (later pruned upserts work)
     assert cat.table_props("public", "mb").get("bucket_keys") == ["k"]
     rows = {r.k: r.n for r in read_table(spark, cat, "public", "mb").collect()}
@@ -765,8 +757,7 @@ def test_merge_empty_source_bucketed_is_noop(spark, cat):
     aggregate)."""
     base = spark.range(50).selectExpr("id AS k", "id * 2 AS n")
     write_bucketed_table(spark, cat, "public", "mes", base, ["k"], n_buckets=4)
-    loc = cat.location("public", "mes")
-    before = _merge_digests(loc)
+    before = _merge_digests(cat, "mes")
     pg = PgSession(spark, cat)
     pg.execute("CREATE TABLE mes_src AS SELECT CAST(1 AS BIGINT) AS k, "
                "CAST(1 AS BIGINT) AS n WHERE 1 = 0")
@@ -775,7 +766,7 @@ def test_merge_empty_source_bucketed_is_noop(spark, cat):
         "WHEN MATCHED THEN UPDATE SET n = d.n "
         "WHEN NOT MATCHED THEN INSERT VALUES (d.k, d.n)")
     assert df._pg_tag == "MERGE 0"
-    assert _merge_digests(loc) == before
+    assert _merge_digests(cat, "mes") == before
     # RETURNING over an empty merge: zero rows, schema intact
     df2 = pg.execute(
         "MERGE INTO mes USING mes_src d ON mes.k = d.k "
@@ -836,17 +827,13 @@ def test_merge_disjunctive_on_executes_unpruned(spark, cat):
 
 def test_bucket_stats_matches_brute_force(spark, cat):
     """The fused per-bucket aggregation (dml._bucket_stats: matched count +
-    affected buckets + fully-emptied buckets in ONE job, r10) must agree
-    with the three separate derivations it replaced, including the
-    bucket-fully-emptied and nothing-matched edges."""
+    affected buckets in ONE job, r10) must agree with the separate
+    derivations it replaced, including the bucket-fully-emptied and
+    nothing-matched edges."""
     from pyspark.sql import functions as F
 
     from bemidb_spark.pgcompat.dml import _bucket_stats
-    from bemidb_spark.sources.writer import (
-        _affected_buckets,
-        _bucket_expr,
-        read_table,
-    )
+    from bemidb_spark.sources.writer import _affected_buckets, read_table
 
     rows = [(i, "even" if i % 2 == 0 else "odd") for i in range(40)]
     write_bucketed_table(
@@ -861,24 +848,10 @@ def test_bucket_stats_matches_brute_force(spark, cat):
         cond = F.expr(cond_sql)
         stats = _bucket_stats(cat, "public", "bs", ["k"], current, cond)
         assert stats is not None
-        n, buckets, emptied = stats
+        n, buckets = stats
         matched = current.filter(cond)
         assert n == matched.count(), cond_sql
         assert buckets == _affected_buckets(matched, ["k"], 4), cond_sql
-        per_bucket_all = {
-            r["_kb"]: r["c"]
-            for r in current.select(_bucket_expr(["k"], 4).alias("_kb"))
-            .groupBy("_kb").agg(F.count(F.lit(1)).alias("c")).collect()
-        }
-        per_bucket_hit = {
-            r["_kb"]: r["c"]
-            for r in matched.select(_bucket_expr(["k"], 4).alias("_kb"))
-            .groupBy("_kb").agg(F.count(F.lit(1)).alias("c")).collect()
-        }
-        want_emptied = {
-            b for b, c in per_bucket_hit.items() if c == per_bucket_all[b]
-        }
-        assert emptied == want_emptied, cond_sql
     # unbucketed table -> None (callers fall back to the separate actions)
     replace_table(cat, "public", "flat", spark.createDataFrame(
         [(1,)], "k bigint"))

@@ -149,27 +149,19 @@ def _duck_apply_merge(duck, uniq, del_t, ins_t, variant, key_off) -> None:
                  f"WHERE x >= {ins_t} AND k NOT IN (SELECT k FROM _matched)")
 
 
-def _bucket_digests(loc: str) -> dict[int, str]:
-    """content digest per bucket-partition (``_kb=N``) directory."""
+def _listed_digests(cat) -> dict[str, str]:
+    """path -> content digest of every file in public.t's live list."""
     import hashlib
-    import os
 
-    from bemidb_spark.sources.writer import BUCKET_COL
+    return {p: hashlib.sha256(open(p, "rb").read()).hexdigest()
+            for p in cat.files("public", "t")}
 
-    out: dict[int, list] = {}
-    for root, _dirs, files in os.walk(loc):
-        part = next((p for p in root.split(os.sep)
-                     if p.startswith(f"{BUCKET_COL}=")), None)
-        if part is None:
-            continue
-        b = int(part.split("=", 1)[1])
-        for f in sorted(files):
-            if f.endswith(".parquet"):
-                h = hashlib.sha256(
-                    open(os.path.join(root, f), "rb").read()).hexdigest()
-                out.setdefault(b, []).append((f, h))
-    return {b: hashlib.sha256(repr(sorted(v)).encode()).hexdigest()
-            for b, v in out.items()}
+
+def _outside(digests: dict[str, str], buckets: set[int]) -> dict[str, str]:
+    """The listed files (path -> digest) of the buckets NOT in ``buckets``."""
+    from bemidb_spark.sources.catalog import bucket_of
+
+    return {p: d for p, d in digests.items() if bucket_of(p) not in buckets}
 
 
 @pytest.fixture()
@@ -199,26 +191,25 @@ def test_dml_sequences_match_duckdb(spark, tmp_path_factory, duck, ops):
         if isinstance(op, tuple):  # ("merge", src_rows, del_t, ins_t, var)
             _, uniq, del_t, ins_t, variant = op
             key_off = next(key_offs)
-            before = _bucket_digests(cat.location("public", "t"))
+            before = _listed_digests(cat)
             pg.execute(_merge_sql(uniq, del_t, ins_t, variant, key_off))
             _duck_apply_merge(duck, uniq, del_t, ins_t, variant, key_off)
             regime = dml_mod.LAST_MERGE_REGIME
             # assert the REGIME TAKEN, not just the result (VERDICT r8 #6)
             if variant == "theta":
                 assert regime == "full", (regime, op)
-            elif variant == "equi":
+            else:
                 assert regime in ("pruned", "pruned_empty_source"), \
                     (regime, op)
-                # byte-identity: buckets outside the source set untouched
-                after = _bucket_digests(cat.location("public", "t"))
+                # buckets outside the source set keep the same listed paths
+                # with the same bytes; a key-mutating MERGE may only ADD
+                # files there (the rows it moved)
+                after = _listed_digests(cat)
                 touched = set(dml_mod.LAST_MERGE_B_SRC)
-                for b, digest in before.items():
-                    if b not in touched:
-                        assert after.get(b) == digest, (b, op)
-            else:  # keymut: fallback unless every matched row was DELETEd
-                # or the moved keys landed in already-read buckets
-                assert regime in ("fallback_rewrite", "pruned",
-                                  "pruned_empty_source"), (regime, op)
+                kept = _outside(before, touched)
+                assert {p: after.get(p) for p in kept} == kept, op
+                if variant == "equi":
+                    assert _outside(after, touched) == kept, op
         else:
             pg.execute(op)
             duck.execute(op)
@@ -287,10 +278,12 @@ def test_incremental_matview_any_batching_matches_full(
 
 
 def test_merge_regimes_deterministic(spark, tmp_path_factory, duck):
-    """One merge per variant, pinned: equi → pruned (+ untouched-bucket
-    byte identity), theta-ON → full path, key-mutating SET → fallback
-    rewrite. Deterministic companion to the fuzzer (which samples
-    variants): every regime is exercised on every suite run."""
+    """One merge per variant, pinned: equi → pruned (+ untouched buckets
+    keep the same listed paths with the same bytes), theta-ON → full path,
+    key-mutating SET → pruned, with the moved row's file ADDED to its new
+    bucket and that bucket's listed files kept. Deterministic companion to
+    the fuzzer (which samples variants): every regime is exercised on every
+    suite run."""
     from bemidb_spark.pgcompat import dml as dml_mod
 
     cat = Catalog(str(tmp_path_factory.mktemp("mergereg")))
@@ -301,15 +294,13 @@ def test_merge_regimes_deterministic(spark, tmp_path_factory, duck):
     )
     pg = PgSession(spark, cat)
 
-    before = _bucket_digests(cat.location("public", "t"))
+    before = _listed_digests(cat)
     pg.execute(_merge_sql([(3, 50)], 0, 0, "equi", 1000))
     assert dml_mod.LAST_MERGE_REGIME == "pruned"
     touched = set(dml_mod.LAST_MERGE_B_SRC)
-    after = _bucket_digests(cat.location("public", "t"))
-    assert any(b not in touched for b in before), "need an untouched bucket"
-    for b, digest in before.items():
-        if b not in touched:
-            assert after.get(b) == digest
+    after = _listed_digests(cat)
+    assert _outside(before, touched), "need an untouched bucket"
+    assert _outside(after, touched) == _outside(before, touched)
 
     pg.execute(_merge_sql([(4, 50)], 0, 0, "theta", 2000))
     assert dml_mod.LAST_MERGE_REGIME == "full"
@@ -326,6 +317,18 @@ def test_merge_regimes_deterministic(spark, tmp_path_factory, duck):
         for k in (5, 5 + 3000)
     ]
     assert src_b != moved_b, "pick a different offset for this assertion"
+    from bemidb_spark.sources.catalog import bucket_of
+
+    before = _listed_digests(cat)
     pg.execute(_merge_sql([(5, 50)], 0, 0, "keymut", 3000))
-    assert dml_mod.LAST_MERGE_REGIME == "fallback_rewrite"
+    assert dml_mod.LAST_MERGE_REGIME == "pruned"
+    assert dml_mod.LAST_MERGE_B_SRC == [src_b]
+    after = _listed_digests(cat)
+    kept = _outside(before, {src_b})
+    assert {p: after.get(p) for p in kept} == kept
+    added = set(after) - set(before)
+    assert {bucket_of(p) for p in added} - {src_b} == {moved_b}
+    assert len([p for p in added if bucket_of(p) == moved_b]) == 1
+    assert [r.k for r in pg.execute(
+        "SELECT k FROM t WHERE k IN (5, 3005)").collect()] == [3005]
     pg.dispose()

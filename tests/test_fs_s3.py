@@ -112,10 +112,8 @@ def test_walk_and_remove_tree_paginate(s3):
         fs.write_json_atomic(f"s3://bkt/data/t/part-{i}.json", {"i": i})
     rels = sorted(fs.walk_files("s3://bkt/data/t"))
     assert rels == [f"part-{i}.json" for i in range(5)]
-    assert fs.isdir("s3://bkt/data/t")
     fs.remove_tree("s3://bkt/data/t")
     assert list(fs.walk_files("s3://bkt/data/t")) == []
-    assert not fs.isdir("s3://bkt/data/t")
 
 
 def test_move_file_is_copy_delete(s3):
@@ -134,14 +132,20 @@ def test_catalog_crud_over_s3_root(s3):
     cols = [{"name": "id", "type": "bigint", "nullable": False}]
     loc1 = cat.new_location("s", "t")
     assert loc1.startswith("s3://bkt/wh/data/s/")
-    cat.commit_table("s", "t", loc1, cols)
-    assert cat.location("s", "t") == loc1
+    f1 = fs.join(loc1, "part-0.parquet")
+    fs._BACKENDS["s3"].write_bytes(f1, b"x")
+    cat.commit_table("s", "t", [f1], columns=cols)
+    assert cat.files("s", "t") == [f1]
+    assert cat.location("s", "t").startswith("s3://bkt/wh/data/s/t")
     assert cat.columns("s", "t") == cols
 
     loc2 = cat.new_location("s", "t")
-    old = cat.commit_table("s", "t", loc2, cols)
-    assert old == loc1
-    assert [sn["location"] for sn in cat.snapshots("s", "t")] == [loc1]
+    f2 = fs.join(loc2, "part-0.parquet")
+    fs._BACKENDS["s3"].write_bytes(f2, b"y")
+    cat.commit_table("s", "t", [f2], removed=[f1])
+    assert cat.files("s", "t") == [f2]
+    assert [sn["files"] for sn in cat.snapshots("s", "t")] == [[f1]]
+    assert fs.exists(f1)  # retained snapshot
 
     # catalog version advances across commits (plan-cache invalidation key)
     assert cat.version() > 0
@@ -149,10 +153,11 @@ def test_catalog_crud_over_s3_root(s3):
     cat.put_view("s", "v", "SELECT 1")
     assert "s.v" in cat.views()
 
-    expired = cat.prune_snapshots("s", "t", keep=0)
-    assert expired == [loc1]
+    assert cat.expire_snapshots("s", "t", keep=0) == 1
+    assert not fs.exists(f1) and fs.exists(f2)
     cat.drop_table("s", "t")
     assert cat.tables() == {}
+    assert not fs.exists(f2)
 
 
 def test_unregistered_scheme_still_raises():

@@ -19,7 +19,6 @@ from bemidb_spark.sources import fs
 from bemidb_spark.sources.catalog import Catalog
 from bemidb_spark.sources.iceberg_meta import (
     import_rest_table,
-    metadata_dir,
     rest_load_table,
     rest_namespaces,
     rest_table_identifiers,
@@ -58,7 +57,7 @@ V2_REQUIRED = {
 def test_commit_emits_spec_complete_metadata(spark, cat):
     replace_table(cat, "analytics", "ev", spark.createDataFrame(
         [(1, "a", 1.5)], "id bigint, name string, score double"))
-    mdir = metadata_dir(cat, "analytics", "ev")
+    mdir = cat.metadata_dir("analytics.ev")
     v1 = fs.join(mdir, "v1.metadata.json")
     assert fs.exists(v1)
     meta = json.load(open(v1.replace("file://", "")))
@@ -108,7 +107,7 @@ def test_metadata_json_validates_against_public_rest_schema(spark, cat):
         [(2, "b", [3.0], {"k": 2}, [["y"]])],
         "id bigint, name string, emb array<double>, "
         "attrs map<string,int>, grid array<array<string>>"))
-    mdir = metadata_dir(cat, "analytics", "typed")
+    mdir = cat.metadata_dir("analytics.typed")
     for version in (1, 2):
         meta = json.load(open(os.path.join(mdir, f"v{version}.metadata.json")))
         jsonschema.validate(meta, rest_schema,
@@ -316,10 +315,8 @@ def test_rest_catalog_round_trip(spark, cat, tmp_path):
 
 
 def test_drop_table_cleans_metadata_dir(spark, cat):
-    from bemidb_spark.sources.writer import drop_table_files
-
     replace_table(cat, "s", "gone", spark.range(3))
-    mdir = metadata_dir(cat, "s", "gone")
+    mdir = cat.metadata_dir("s.gone")
     assert fs.exists(mdir)
-    drop_table_files(cat, "s", "gone")
+    cat.drop_table("s", "gone")
     assert not fs.exists(mdir)

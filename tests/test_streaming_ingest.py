@@ -58,11 +58,13 @@ def test_stream_append_incremental_exactly_once(spark, cat, tmp_path):
 
 def test_stream_append_coexists_with_batch_appends(spark, cat, tmp_path):
     """ADVICE r2 (high): the streaming path must not write a _spark_metadata
-    sink log into the table location — a location with one is read through
-    it exclusively, hiding pre-existing files and later batch appends.
+    sink log beside the table's files — a directory with one is read through
+    it exclusively, hiding other files and later batch appends.
     Sequence: batch-create -> stream-append -> batch-append -> stream-append;
     every row from every path must stay visible."""
-    from bemidb_spark.sources.writer import replace_table
+    import glob
+
+    from bemidb_spark.sources.writer import append_rows, replace_table
 
     inbox = str(tmp_path / "inbox2")
     ckpt = str(tmp_path / "ckpt2")
@@ -74,12 +76,11 @@ def test_stream_append_coexists_with_batch_appends(spark, cat, tmp_path):
     stream_append(
         spark, cat, "public", "mixed_t",
         spark.readStream.schema("id bigint, v string").json(inbox), ckpt)
-    loc = cat.location("public", "mixed_t")
-    assert not os.path.exists(os.path.join(loc, "_spark_metadata"))
-    # 3. direct batch append into the live location (append_with_cursor shape)
-    spark.createDataFrame([(3, "batch1")], "id bigint, v string") \
-        .write.mode("append").parquet(loc)
-    spark.catalog.refreshByPath(loc)
+    assert not glob.glob(f"{cat.location('public', 'mixed_t')}/**/_spark_metadata",
+                         recursive=True)
+    # 3. batch append (append_with_cursor shape)
+    append_rows(spark, cat, "public", "mixed_t", spark.createDataFrame(
+        [(3, "batch1")], "id bigint, v string"))
     # 4. second streaming run
     _drop(inbox, "b.json", [{"id": 4, "v": "stream2"}])
     stream_append(
@@ -92,8 +93,6 @@ def test_stream_append_coexists_with_batch_appends(spark, cat, tmp_path):
 def test_stream_append_replay_is_idempotent(spark, cat, tmp_path):
     """A batch replayed after a simulated crash (marker missing, partial
     files present) converges to exactly one copy of the batch's rows."""
-    import glob as _glob
-
     from bemidb_spark.streaming.ingest import stream_append as _sa
 
     inbox = str(tmp_path / "inbox3")
@@ -101,8 +100,8 @@ def test_stream_append_replay_is_idempotent(spark, cat, tmp_path):
     _drop(inbox, "a.json", [{"id": i, "v": "x"} for i in range(10)])
     _sa(spark, cat, "public", "replay_t",
         spark.readStream.schema("id bigint, v string").json(inbox), ckpt)
-    loc = cat.location("public", "replay_t")
-    files = sorted(_glob.glob(os.path.join(loc, "sb0-*.parquet")))
+    files = [f for f in cat.files("public", "replay_t")
+             if os.path.basename(f).startswith("sb0-")]
     assert files, "streamed files should use deterministic sb{batch} names"
     # simulate a crash AFTER files moved but BEFORE the marker was written:
     # delete the marker and checkpoint commit log entry -> re-run replays it

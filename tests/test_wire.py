@@ -1411,3 +1411,42 @@ def test_arrow_fetch_bytes_identical_to_collect(spark):
         assert not _is_fetched(streamed)
         assert frames(df_struct, streamed, fmt) == frames(
             df_struct, df_struct.collect(), fmt)
+
+
+def test_select_star_on_bucketed_table_over_wire(spark, tmp_path_factory):
+    """The bucket of a key-bucketed table lives in its file paths only:
+    ``SELECT *`` returns exactly the declared columns, as pg_catalog lists."""
+    from bemidb_spark.sources.catalog import Catalog
+    from bemidb_spark.sources.writer import write_bucketed_table
+
+    cat = Catalog(str(tmp_path_factory.mktemp("star_wh")))
+    write_bucketed_table(spark, cat, "public", "kvw", spark.range(40).selectExpr(
+        "id AS k", "id % 7 AS n"), ["k"], n_buckets=4)
+    srv = WireServer(spark, cat)
+    srv.start()
+    c = MiniPgClient(srv.host, srv.port)
+    try:
+        r = c.query("SELECT * FROM kvw ORDER BY k")
+        assert r["errors"] == [] and r["columns"] == ["k", "n"]
+        assert len(r["rows"]) == 40
+        listed = c.query("SELECT column_name FROM information_schema.columns "
+                         "WHERE table_name = 'kvw' ORDER BY ordinal_position")
+        assert [row[0] for row in listed["rows"]] == ["k", "n"]
+    finally:
+        c.close()
+        srv.stop()
+
+
+@pytest.mark.parametrize("sql", [
+    # a struct result streams (Arrow cannot carry it byte-identically)
+    "SELECT named_struct('a', CASE WHEN id > 5 THEN raise_error('boom') END) "
+    "AS s FROM range(10)",
+    # COPY OUT always streams
+    "COPY (SELECT raise_error('boom') AS x FROM range(10)) TO STDOUT",
+])
+def test_streamed_error_keeps_its_sqlstate(client, sql):
+    errors = client.query(sql)["errors"]
+    assert len(errors) == 1
+    assert errors[0]["C"] == "P0001" and "boom" in errors[0]["M"]
+    # the connection stays usable
+    assert client.query("SELECT 1 AS one")["rows"] == [["1"]]

@@ -111,42 +111,44 @@ def test_matview_lifecycle(spark, catalog, sf_dir):
         matview.read_materialized_view(spark, catalog, "mv_orders_flat")
 
 
-def _file_digests(loc):
+def _listed_digests(catalog, schema, table):
+    """path -> content digest of every file in the table's live list."""
     import hashlib
-    import os
 
     out = {}
-    for root, _, files in os.walk(loc):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(root, f)
-                with open(p, "rb") as fh:
-                    out[os.path.relpath(p, loc)] = hashlib.md5(fh.read()).hexdigest()
+    for p in catalog.files(schema, table):
+        with open(p.replace("file://", ""), "rb") as fh:
+            out[p] = hashlib.md5(fh.read()).hexdigest()
     return out
 
 
 def test_bucketed_upsert_rewrites_only_affected_partitions(spark, catalog):
+    from bemidb_spark.sources.catalog import bucket_of
     from bemidb_spark.sources.writer import write_bucketed_table
 
     base = spark.range(200).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    loc = write_bucketed_table(spark, catalog, "s", "b", base, ["k"], n_buckets=8)
-    before = _file_digests(loc)
-    assert len({p.split("/")[0] for p in before}) == 8  # all 8 bucket dirs
+    write_bucketed_table(spark, catalog, "s", "b", base, ["k"], n_buckets=8)
+    before = _listed_digests(catalog, "s", "b")
+    # all 8 buckets, one file each
+    assert sorted(bucket_of(p) for p in before) == list(range(8))
 
     updates = spark.createDataFrame([(3, 999), (3 + 8, 888)], "k bigint, v bigint")
     upsert_by_key(spark, catalog, "s", "b", updates, ["k"])
-    after = _file_digests(loc)
+    after = _listed_digests(catalog, "s", "b")
 
     from bemidb_spark.sources.writer import _bucket_expr
     touched = {
         r[0] for r in updates.select(_bucket_expr(["k"], 8).alias("b")).distinct().collect()
     }
-    untouched_dirs = {f"_kb={b}" for b in range(8)} - {f"_kb={b}" for b in touched}
     for path, digest in before.items():
-        if path.split("/")[0] in untouched_dirs:
-            assert after.get(path) == digest, f"untouched partition changed: {path}"
+        if bucket_of(path) in touched:
+            assert path not in after, f"touched bucket not rewritten: {path}"
+        else:
+            # untouched bucket: same path in the list, same bytes on disk
+            assert after.get(path) == digest, f"untouched bucket changed: {path}"
+    assert sorted(bucket_of(p) for p in after) == list(range(8))
     # content correct
     rows = {r.k: r.v for r in read_table(spark, catalog, "s", "b").collect()}
     assert rows[3] == 999 and rows[11] == 888 and rows[0] == 0 and len(rows) == 200
@@ -155,9 +157,11 @@ def test_bucketed_upsert_rewrites_only_affected_partitions(spark, catalog):
 def test_bucketed_delete_prunes_and_handles_emptied_bucket(spark, catalog):
     from bemidb_spark.sources.writer import write_bucketed_table, _bucket_expr
 
+    from bemidb_spark.sources.catalog import bucket_of
+
     base = spark.range(40).select(F.col("id").alias("k"), F.lit("x").alias("v"))
-    loc = write_bucketed_table(spark, catalog, "s", "d", base, ["k"], n_buckets=4)
-    before = _file_digests(loc)
+    write_bucketed_table(spark, catalog, "s", "d", base, ["k"], n_buckets=4)
+    before = _listed_digests(catalog, "s", "d")
 
     # delete every key in bucket 2 plus one key from another bucket
     all_rows = base.withColumn("b", _bucket_expr(["k"], 4)).collect()
@@ -166,15 +170,17 @@ def test_bucketed_delete_prunes_and_handles_emptied_bucket(spark, catalog):
     keys = spark.createDataFrame([(k,) for k in bucket2_keys + [other_key]], "k bigint")
     delete_by_key(spark, catalog, "s", "d", keys, ["k"])
 
-    after = _file_digests(loc)
+    after = _listed_digests(catalog, "s", "d")
     touched = {2, next(r.b for r in all_rows if r.k == other_key)}
     for path, digest in before.items():
-        bucket = int(path.split("/")[0].split("=")[1])
-        if bucket not in touched:
+        if bucket_of(path) not in touched:
+            # same path in the list, same bytes on disk
             assert after.get(path) == digest
+        else:
+            assert path not in after
     remaining = {r.k for r in read_table(spark, catalog, "s", "d").collect()}
     assert remaining == {r.k for r in all_rows} - set(bucket2_keys) - {other_key}
-    assert not any(p.startswith("_kb=2/") for p in after)  # emptied dir removed
+    assert not any(bucket_of(p) == 2 for p in after)  # emptied: no files
 
 
 def test_crash_mid_rewrite_leaves_committed_state_intact(spark, tmp_path_factory):
@@ -214,7 +220,7 @@ def test_crash_mid_rewrite_leaves_committed_state_intact(spark, tmp_path_factory
 
 
 def test_snapshot_history_time_travel_and_inflight_readers(spark, catalog):
-    from bemidb_spark.sources.writer import expire_snapshots, read_table_at
+    from bemidb_spark.sources.writer import read_table_at
 
     v1 = spark.range(5).withColumn("v", F.lit("one"))
     replace_table(catalog, "s", "h", v1)
@@ -233,21 +239,28 @@ def test_snapshot_history_time_travel_and_inflight_readers(spark, catalog):
     assert read_table_at(spark, catalog, "s", "h", age=2).count() == 5
     assert len(catalog.snapshots("s", "h")) == 2
 
-    # expiry deletes files and trims the log
+    # expiry deletes files, their commit directory, and trims the log
     import os
-    old_loc = catalog.snapshots("s", "h")[0]["location"]
-    assert os.path.exists(old_loc)
-    assert expire_snapshots(catalog, "s", "h", keep=1) == 1
-    assert not os.path.exists(old_loc)
+    old_files = catalog.snapshots("s", "h")[0]["files"]
+    assert old_files and all(os.path.exists(f) for f in old_files)
+    assert catalog.expire_snapshots("s", "h", keep=1) == 1
+    assert not any(os.path.exists(os.path.dirname(f)) for f in old_files)
     assert len(catalog.snapshots("s", "h")) == 1
 
 
 def test_snapshot_retention_bounds_disk(spark, catalog):
     from bemidb_spark.sources.writer import SNAPSHOT_RETENTION
 
+    import glob
+
     for i in range(SNAPSHOT_RETENTION + 3):
         replace_table(catalog, "s", "r", spark.range(i + 1))
     assert len(catalog.snapshots("s", "r")) == SNAPSHOT_RETENTION
+    # on disk: exactly the live list and the retained snapshots' files
+    referenced = set(catalog.files("s", "r")).union(
+        *(s["files"] for s in catalog.snapshots("s", "r")))
+    on_disk = set(glob.glob(f"{catalog.root}/data/**/*.parquet", recursive=True))
+    assert on_disk == referenced
 
 
 def test_fs_adapter_uri_handling():
@@ -273,25 +286,22 @@ def test_catalog_and_writer_over_file_uri_root(spark, tmp_path):
     file:// URI root — locations flow into Spark as URIs, driver-side
     maintenance goes through the fs adapter."""
     from bemidb_spark.sources import fs
-    from bemidb_spark.sources.writer import (
-        drop_table_files,
-        expire_snapshots,
-        upsert_by_key,
-        write_bucketed_table,
-    )
+    from bemidb_spark.sources.writer import upsert_by_key, write_bucketed_table
 
     cat = Catalog(f"file://{tmp_path}/wh_uri")
     replace_table(cat, "s", "u", spark.createDataFrame(
         [(1, "a"), (2, "b")], "k bigint, v string"))
-    loc = cat.location("s", "u")
-    assert loc.startswith("file://")
+    first = cat.files("s", "u")
+    assert first and all(f.startswith("file://") for f in first)
+    assert cat.location("s", "u").startswith("file://")
     assert read_table(spark, cat, "s", "u").count() == 2
     # versioned swap + snapshot expiry through the adapter
     replace_table(cat, "s", "u", spark.createDataFrame(
         [(3, "c")], "k bigint, v string"))
     assert read_table(spark, cat, "s", "u").count() == 1
-    expire_snapshots(cat, "s", "u", keep=0)
-    assert not fs.exists(loc)
+    assert all(fs.exists(f) for f in first)  # retained snapshot
+    cat.expire_snapshots("s", "u", keep=0)
+    assert not any(fs.exists(f.rsplit("/", 1)[0]) for f in first)
     # bucketed layout + pruned upsert over the URI root
     write_bucketed_table(spark, cat, "s", "bu", spark.createDataFrame(
         [(1, "a"), (2, "b")], "k bigint, v string"), ["k"], n_buckets=4)
@@ -299,7 +309,9 @@ def test_catalog_and_writer_over_file_uri_root(spark, tmp_path):
         [(2, "B"), (9, "Z")], "k bigint, v string"), ["k"])
     got = {r.k: r.v for r in read_table(spark, cat, "s", "bu").collect()}
     assert got == {1: "a", 2: "B", 9: "Z"}
-    drop_table_files(cat, "s", "bu")
+    bucketed = cat.files("s", "bu")
+    cat.drop_table("s", "bu")
+    assert not any(fs.exists(f) for f in bucketed)
     with pytest.raises(KeyError):
         cat.location("s", "bu")
 
@@ -308,8 +320,6 @@ def test_parquet_footers_carry_iceberg_field_ids(spark, catalog):
     """Every data file's footer carries PARQUET:field_id matching the ids
     the Iceberg v2 metadata assigns (ordinal-from-1) — id-based column
     resolution, the part of C7 the r2 verdict called out as missing."""
-    import glob
-
     import pyarrow.parquet as pq
 
     from bemidb_spark.sources.iceberg_meta import table_metadata
@@ -319,13 +329,14 @@ def test_parquet_footers_carry_iceberg_field_ids(spark, catalog):
         F.lit("x").alias("b"),
         (F.col("id") * 2).alias("c"),
     )
-    loc = replace_table(catalog, "s", "fid", df)
+    files = replace_table(catalog, "s", "fid", df)
     meta = table_metadata(catalog, "s", "fid")
     want = {
         f["name"]: f["id"] for f in meta["schemas"][0]["fields"]
     }
     assert want == {"a": 1, "b": 2, "c": 3}
-    for path in glob.glob(loc.replace("file://", "") + "/*.parquet"):
+    assert files
+    for path in files:
         sch = pq.read_schema(path)
         got = {
             sch.field(i).name: int(sch.field(i).metadata[b"PARQUET:field_id"])
@@ -383,11 +394,10 @@ def test_incremental_matview_delta_merge(spark, catalog, sf_dir):
     assert n == 300
     assert got() == expect(800)
     # empty delta: no-op, nothing rewritten
-    before = _file_digests(catalog.location(matview.MATVIEW_SCHEMA, "mv_inc"))
+    before = _listed_digests(catalog, matview.MATVIEW_SCHEMA, "mv_inc")
     assert matview.refresh_incremental_matview(
         spark, catalog, "mv_inc", snapshot(800)) == 0
-    assert _file_digests(
-        catalog.location(matview.MATVIEW_SCHEMA, "mv_inc")) == before
+    assert _listed_digests(catalog, matview.MATVIEW_SCHEMA, "mv_inc") == before
     # second delta stacks on the first
     assert matview.refresh_incremental_matview(
         spark, catalog, "mv_inc", snapshot(1000)) == 200
@@ -430,7 +440,6 @@ def test_catalog_versions_are_stored_counters(tmp_path, monkeypatch):
     from bemidb_spark.sources.catalog import versions
 
     monkeypatch.setattr(fs, "mtime_ns", lambda path: 42)  # a frozen clock
-    monkeypatch.setattr(Catalog, "EMIT_ICEBERG_METADATA", False)
     cat = Catalog(str(tmp_path / "counters"))
     cols = [{"name": "id", "type": "bigint", "nullable": True}]
 
@@ -438,14 +447,14 @@ def test_catalog_versions_are_stored_counters(tmp_path, monkeypatch):
         return versions(cat.snapshot_state())["tables"].get(key, 0)
 
     v0, s0 = cat.version(), cat.schema_version()
-    cat.commit_table("public", "t", str(tmp_path / "t1"), cols)
+    cat.commit_table("public", "t", [str(tmp_path / "t1.parquet")], columns=cols)
     v1, s1 = cat.version(), cat.schema_version()
     assert v1 > v0 and s1 > s0  # a new table is DDL
-    cat.commit_table("public", "t", str(tmp_path / "t2"), cols)
+    cat.commit_table("public", "t", [str(tmp_path / "t2.parquet")], columns=cols)
     assert cat.version() > v1
     assert cat.schema_version() == s1  # same columns: a data commit
     assert table_version("public.t") == 2
-    cat.commit_table("public", "u", str(tmp_path / "u1"), cols)
+    cat.commit_table("public", "u", [str(tmp_path / "u1.parquet")], columns=cols)
     assert table_version("public.t") == 2  # another table's commit
 
     pinned = cat.snapshot_state()
