@@ -38,7 +38,7 @@ from bemidb_spark.pgcompat.catalog_views import (
 from bemidb_spark.pgcompat.permissions import extract_permissions, shadowed_permissions
 from bemidb_spark.pgcompat.transpiler import transpile
 from bemidb_spark.sources import matview
-from bemidb_spark.sources.catalog import Catalog, versions
+from bemidb_spark.sources.catalog import Catalog, CommitConflict, Transaction, versions
 
 # Byte-for-byte the reference's version() banner
 # (query_remapper_function.go:37) — clients parse this string, and a drop-in
@@ -54,7 +54,9 @@ _KNOWN_NOOP_SETS = {
 
 
 class UnsupportedQueryError(Exception):
-    pass
+    def __init__(self, message: str, sqlstate: str | None = None) -> None:
+        super().__init__(message)
+        self.sqlstate = sqlstate  # pg's SQLSTATE, when the rejection has one
 
 
 # Spark auto-generates names like `1`, `(a + b)`, `lower(x)` for unnamed
@@ -207,16 +209,14 @@ _LITERAL_RE = re.compile(
     re.VERBOSE,
 )
 
-# Process-global transaction write lock. ROLLBACK undoes by restoring the
-# BEGIN-pinned catalog state — the whole state, every table's file list —
-# which is only sound when no OTHER session commits writes between the pin
-# and the restore (otherwise their committed INSERT/DDL would be clobbered —
-# all wire connections share one Catalog). So a session with an open
-# transaction holds this lock for the transaction's duration, and autocommit
-# writes take it transiently — concurrent write transactions serialize
-# (coarse-grained analog of pg's table locks; readers are never blocked).
-_TXN_WRITE_LOCK = __import__("threading").Lock()
-_TXN_LOCK_TIMEOUT = 60.0  # seconds; analogous to pg's lock_timeout
+# Serializes pg writers: held for one autocommit write statement or one
+# COMMIT's publish, never across a transaction block.
+_WRITE_LOCK = threading.Lock()
+
+# BEGIN / START TRANSACTION [modes], COMMIT / END / ROLLBACK / ABORT [WORK | TRANSACTION]
+_TXN_CONTROL_RE = re.compile(
+    r"(BEGIN)\b.*|(START)\s+TRANSACTION\b.*"
+    r"|(COMMIT|END|ROLLBACK|ABORT)(?:\s+(?:WORK|TRANSACTION))?", re.DOTALL)
 
 
 def normalize_statement(sql: str) -> str:
@@ -329,7 +329,7 @@ class PgSession:
         # bound into the fork when a statement first names it
         # (_bind_embedder), so building a fork costs ~3 ms.
         self.spark = spark.newSession() if isolate else spark
-        self.catalog = catalog
+        self._catalog = catalog
         self._isolated = isolate
         if isolate:
             # newSession() forks a FRESH SQLConf from SparkConf defaults, so
@@ -357,11 +357,10 @@ class PgSession:
         self._sql_prepared: dict[str, str] = {}  # SQL-level PREPARE bodies
         self._cursors: dict[str, _Cursor] = {}  # DECLARE'd server-side cursors
         self._ivf_indexes: dict[str, tuple[str, str]] = {}  # ivfflat: name -> (table, col)
-        self._txn: dict | None = None  # BEGIN's catalog pin (Catalog.pin)
-        self._txn_open = False  # BEGIN seen (independent of catalog pinning)
-        self._txn_local_restore: dict[str, str | None] = {}  # SET LOCAL undo
-        self._holds_txn_lock = False  # this session owns _TXN_WRITE_LOCK
-        self._savepoints: dict[str, dict] = {}  # insertion-ordered pins
+        # the open transaction block: its settings snapshot, what SET LOCAL
+        # overrode and its Transaction overlay (None without a catalog)
+        self._txn: dict | None = None
+        self._savepoints: dict[str, dict] = {}  # insertion-ordered
         # Catalog binding (_sync_catalog): the state as of the last sync,
         # each bound table's key -> the table version bound, the plain-view
         # names bound, and the name maps of the synced schema_version.
@@ -405,6 +404,12 @@ class PgSession:
         self._sync_catalog()
         if not isolate:
             self._bind_emulation(CATALOG_RELATIONS)
+
+    @property
+    def catalog(self) -> Catalog | None:
+        """The catalog statements read and write: the open block's
+        Transaction overlay, else the committed catalog."""
+        return self._txn["catalog"] if self._txn is not None else self._catalog
 
     def _bind_emulation(self, names: set[str]) -> None:
         """Bind these pg_catalog emulation relations at the catalog's
@@ -589,10 +594,9 @@ class PgSession:
                 # pg: SET LOCAL lasts until COMMIT/ROLLBACK; outside a
                 # transaction block it takes no effect (pg issues a WARNING
                 # and discards it)
-                if not self._txn_open:
+                if self._txn is None:
                     return self._ok("SET")
-                self._txn_local_restore.setdefault(
-                    name, self.settings.get(name))
+                self._txn["local"].setdefault(name, self.settings.get(name))
             self._apply_setting(name, value)
         return self._ok("SET")
 
@@ -608,13 +612,6 @@ class PgSession:
             self.settings.pop(name, None)
         else:
             self.settings[name] = value
-
-    def _restore_local_sets(self) -> None:
-        """Transaction end: revert every SET LOCAL to its pre-SET value."""
-        for name, old in self._txn_local_restore.items():
-            self._apply_setting(name, old)
-        self._txn_local_restore = {}
-        self._txn_open = False
 
     def _restore_settings(self, snapshot: dict[str, str]) -> None:
         """Revert the whole settings dict to a pinned snapshot (transactional
@@ -661,9 +658,9 @@ class PgSession:
             name = m.group(2).split(".")[-1]
             self._bind_statement(self.catalog.matview_definition(
                 matview.MATVIEW_SCHEMA, name))
-            matview.refresh_materialized_view(
+            matview.refresh_materialized_view(  # a block stages it before COMMIT
                 self.spark, self.catalog, name,
-                concurrently=m.group(1) is not None,
+                concurrently=m.group(1) is not None and self._txn is None,
             )
             return self._ok("REFRESH MATERIALIZED VIEW")
         m = re.match(
@@ -691,9 +688,7 @@ class PgSession:
         tables on every catalog rebind (pg's view expansion; no data is
         materialized, so at any scale this is metadata-only)."""
         if self.catalog is None:
-            err = UnsupportedQueryError("views require a table catalog")
-            err.sqlstate = "42601"
-            raise err
+            raise UnsupportedQueryError("views require a table catalog", "42601")
         m = re.match(
             r"CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+([\w.\"]+)\s+AS\s+(.+)$",
             sql, re.IGNORECASE | re.DOTALL,
@@ -713,10 +708,8 @@ class PgSession:
         if m:
             schema, _, name = m.group(2).replace('"', "").rpartition(".")
             if not self.catalog.drop_view(schema or "public", name) and not m.group(1):
-                err = UnsupportedQueryError(
-                    f'view "{schema or "public"}.{name}" does not exist')
-                err.sqlstate = "42P01"
-                raise err
+                raise UnsupportedQueryError(
+                    f'view "{schema or "public"}.{name}" does not exist', "42P01")
             out = self._ok("DROP VIEW")
             out._pg_tag = "DROP VIEW"
             return out
@@ -740,9 +733,7 @@ class PgSession:
         reference only creates tables from its sync paths; clients expect
         CTAS for scratch tables)."""
         if self.catalog is None:
-            err = UnsupportedQueryError("table DDL requires a table catalog")
-            err.sqlstate = "42601"
-            raise err
+            raise UnsupportedQueryError("table DDL requires a table catalog", "42601")
         from bemidb_spark.pgcompat.types import spark_field
         from bemidb_spark.sources.writer import replace_table
 
@@ -797,10 +788,8 @@ class PgSession:
             schema = schema or "public"
             if f"{schema}.{table}" not in self.catalog.tables():
                 if not m.group(1):  # no IF EXISTS
-                    err = UnsupportedQueryError(
-                        f'table "{schema}.{table}" does not exist')
-                    err.sqlstate = "42P01"
-                    raise err
+                    raise UnsupportedQueryError(
+                        f'table "{schema}.{table}" does not exist', "42P01")
             else:
                 self.catalog.drop_table(schema, table)
             out = self._ok("DROP TABLE")
@@ -832,10 +821,8 @@ class PgSession:
             name = m.group(1).lower()
             body = self._sql_prepared.get(name)
             if body is None:
-                err = UnsupportedQueryError(
-                    f'prepared statement "{name}" does not exist')
-                err.sqlstate = "26000"
-                raise err
+                raise UnsupportedQueryError(
+                    f'prepared statement "{name}" does not exist', "26000")
             if m.group(2):
                 from bemidb_spark.pgcompat.dml import _split_top_level
 
@@ -873,152 +860,107 @@ class PgSession:
         ).createOrReplaceTempView("pg_stat_statements")
 
     # --------------------------------------------------------- transactions
-    def _close_txn_cursors(self) -> None:
-        """pg closes non-HOLD cursors at transaction end."""
-        self._cursors = {k: c for k, c in self._cursors.items() if c.hold}
-
     def _begin_txn(self) -> None:
-        """Pin the catalog state (``Catalog.pin``).
+        """Open a transaction block. Its writes stage in a private overlay on
+        the catalog (``Transaction``) until COMMIT publishes them, so nobody
+        sees them before and an open block blocks no one. pg GUCs are
+        transactional, so the block keeps a settings snapshot. A nested
+        BEGIN keeps the open block (pg only warns)."""
+        if self._txn is None:
+            self._txn = {"settings": dict(self.settings), "local": {}, "catalog": (
+                Transaction(self._catalog) if self._catalog is not None else None)}
 
-        ROLLBACK = restore the pinned state pointer (metadata-only, like an
-        Iceberg snapshot rollback): no write changes a file that a pinned
-        list names, and the pin keeps each such file from being deleted, so
-        the restore alone undoes the transaction. Nested BEGIN keeps the
-        outer pin, matching pg's 'there is already a transaction in
-        progress' warning.
-        """
-        if self.catalog is None or self._txn is not None:
-            return
-        # Hold the process-global write lock for the whole transaction so no
-        # other session can commit writes between our pin and a ROLLBACK
-        # (whose pin-restore would otherwise clobber them — ADVICE r2 high).
-        if not _TXN_WRITE_LOCK.acquire(timeout=_TXN_LOCK_TIMEOUT):
-            raise UnsupportedQueryError(
-                "canceling statement due to lock timeout: another session "
-                "holds an open write transaction"
-            )
-        self._holds_txn_lock = True
-        self._txn = self._pin_catalog()
-
-    def _pin_catalog(self) -> dict:
-        token, state = self.catalog.pin()
-        # pg GUCs are transactional: plain SET inside a rolled-back
-        # transaction reverts too, and ROLLBACK TO SAVEPOINT reverts to the
-        # savepoint's settings — so every pin carries a settings snapshot
-        return {"token": token, "state": state,
-                "settings": dict(self.settings)}
-
-    def _restore_pin(self, pinned: dict) -> None:
-        """Restore a pinned state (ROLLBACK / ROLLBACK TO): one catalog
-        commit, which deletes the files only the aborted state named."""
-        self.catalog.restore_state(pinned["state"])
-        # the restore advanced every table's version: rebind and evict
-        self._sync_catalog()
-
-    def _unpin(self, pins) -> None:
-        for pin in pins:
-            self.catalog.unpin(pin["token"])
-
-    def _end_txn(self) -> None:
-        """Close the transaction: release its pin and its savepoints'."""
-        if self._txn is not None:
-            self._unpin([self._txn, *self._savepoints.values()])
-        self._txn = None
-        self._savepoints = {}
-
-    def _release_txn_lock(self) -> None:
-        if self._holds_txn_lock:
-            self._holds_txn_lock = False
-            _TXN_WRITE_LOCK.release()
-
-    def _write_guard(self):
-        """Serialize an autocommit write against other sessions' open txns.
-
-        Returns a context manager. If this session itself holds the txn lock
-        (inside BEGIN..COMMIT) the guard is a no-op — its writes are already
-        serialized; otherwise the global lock is taken for the statement.
-        """
-        import contextlib
-
-        if self._holds_txn_lock or self.catalog is None:
-            return contextlib.nullcontext()
-
-        @contextlib.contextmanager
-        def _guard():
-            if not _TXN_WRITE_LOCK.acquire(timeout=_TXN_LOCK_TIMEOUT):
-                raise UnsupportedQueryError(
-                    "canceling statement due to lock timeout: another "
-                    "session holds an open write transaction"
-                )
-            try:
-                yield
-            finally:
-                _TXN_WRITE_LOCK.release()
-
-        return _guard()
-
-    def _rollback_txn(self) -> None:
-        if self.catalog is None or self._txn is None:
-            self._txn = None
-            self._release_txn_lock()
+    def _end_txn(self, commit: bool) -> None:
+        """COMMIT publishes the overlay, ROLLBACK forgets it and its files. A
+        conflicting publish raises 40001 and ends the block as a ROLLBACK,
+        as pg ends a transaction whose COMMIT fails."""
+        txn, self._txn, self._savepoints = self._txn, None, {}
+        # pg closes non-HOLD cursors at transaction end
+        self._cursors = {k: c for k, c in self._cursors.items() if c.hold}
+        if txn is None:
             return  # pg: 'no transaction in progress' warning, then no-op
         try:
-            self._restore_pin(self._txn)
-            self._restore_settings(self._txn["settings"])
+            if txn["catalog"] is not None and commit:
+                with _WRITE_LOCK:
+                    self._catalog.publish(txn["catalog"])
+            elif txn["catalog"] is not None:
+                txn["catalog"].abort()
+        except CommitConflict:
+            commit = False
+            raise
         finally:
-            self._end_txn()
-            self._release_txn_lock()
+            if commit:  # SET LOCAL ends with the block
+                for name, old in txn["local"].items():
+                    self._apply_setting(name, old)
+            else:
+                self._restore_settings(txn["settings"])
+            self._sync_catalog()  # staged tables were bound at private versions
+
+    def _outside_block(self, statement: str) -> None:
+        """pg runs some statements only outside a transaction block."""
+        if self._txn is not None:
+            raise UnsupportedQueryError(
+                f"{statement} cannot run inside a transaction block", "25001")
+
+    def _write_guard(self):
+        """The lock an autocommit write statement holds. Statements inside a
+        block stage privately and take none."""
+        import contextlib
+
+        if self._txn is not None or self._catalog is None:
+            return contextlib.nullcontext()
+        return _WRITE_LOCK
 
     def dispose(self) -> None:
         """Connection teardown: pg aborts an open transaction on disconnect."""
         try:
-            self._rollback_txn()
+            self._end_txn(commit=False)
         finally:
-            self._release_txn_lock()
             self._cursors.clear()
 
     def _handle_savepoint(self, sql: str, upper: str) -> DataFrame | None:
-        """SAVEPOINT / ROLLBACK TO [SAVEPOINT] / RELEASE — nested pins inside
-        an open transaction, same metadata-restore machinery as ROLLBACK.
+        """SAVEPOINT / ROLLBACK TO [SAVEPOINT] / RELEASE inside an open
+        block: a savepoint copies the staged entries and the settings.
         pg keeps a savepoint alive across ROLLBACK TO (repeatable) and drops
         later savepoints on both ROLLBACK TO and RELEASE."""
         m = re.match(r"SAVEPOINT\s+([\w]+)\s*$", sql, re.IGNORECASE)
         if m:
-            if self.catalog is None or self._txn is None:
-                err = UnsupportedQueryError("SAVEPOINT can only be used in transaction blocks")
-                err.sqlstate = "25P01"
-                raise err
+            if self._txn is None:
+                raise UnsupportedQueryError(
+                    "SAVEPOINT can only be used in transaction blocks", "25P01")
             name = m.group(1).lower()
-            if name in self._savepoints:
-                self._unpin([self._savepoints.pop(name)])
-            self._savepoints[name] = self._pin_catalog()
+            self._savepoints.pop(name, None)
+            txn = self._txn["catalog"]
+            self._savepoints[name] = {
+                "settings": dict(self.settings),
+                "catalog": txn.savepoint() if txn is not None else None}
             return self._ok("SAVEPOINT")
 
         def _drop_later(name: str, inclusive: bool) -> None:
             names = list(self._savepoints)
             keep = names[: names.index(name) + (0 if inclusive else 1)]
-            self._unpin([self._savepoints[k] for k in names if k not in keep])
             self._savepoints = {k: self._savepoints[k] for k in keep}
 
-        m = re.match(r"ROLLBACK\s+TO\s+(?:SAVEPOINT\s+)?([\w]+)\s*$", sql, re.IGNORECASE)
+        m = re.match(r"ROLLBACK\s+(?:WORK\s+|TRANSACTION\s+)?TO\s+(?:SAVEPOINT\s+)?([\w]+)\s*$",
+                     sql, re.IGNORECASE)
         if m:
             name = m.group(1).lower()
-            pin = self._savepoints.get(name)
-            if pin is None:
-                err = UnsupportedQueryError(f'savepoint "{m.group(1)}" does not exist')
-                err.sqlstate = "3B001"
-                raise err
-            self._restore_pin(pin)
-            self._restore_settings(pin["settings"])
+            saved = self._savepoints.get(name)
+            if saved is None:
+                raise UnsupportedQueryError(
+                    f'savepoint "{m.group(1)}" does not exist', "3B001")
+            if saved["catalog"] is not None:
+                self._txn["catalog"].rollback_to(saved["catalog"])
+                self._sync_catalog()
+            self._restore_settings(saved["settings"])
             _drop_later(name, inclusive=False)
             return self._ok("ROLLBACK")
         m = re.match(r"RELEASE\s+(?:SAVEPOINT\s+)?([\w]+)\s*$", sql, re.IGNORECASE)
         if m:
             name = m.group(1).lower()
             if name not in self._savepoints:
-                err = UnsupportedQueryError(f'savepoint "{m.group(1)}" does not exist')
-                err.sqlstate = "3B001"
-                raise err
+                raise UnsupportedQueryError(
+                    f'savepoint "{m.group(1)}" does not exist', "3B001")
             _drop_later(name, inclusive=True)
             return self._ok("RELEASE")
         return None
@@ -1052,10 +994,8 @@ class PgSession:
             verb = m.group(1).upper()
             cur = self._cursors.get(m.group(4).lower())
             if cur is None:
-                err = UnsupportedQueryError(
-                    f'cursor "{m.group(4)}" does not exist')
-                err.sqlstate = "34000"
-                raise err
+                raise UnsupportedQueryError(
+                    f'cursor "{m.group(4)}" does not exist', "34000")
             words = [w for w in (m.group(2), m.group(3)) if w]
             n: int | None = 1
             for w in words:
@@ -1078,10 +1018,8 @@ class PgSession:
             if m.group(1).upper() == "ALL":
                 self._cursors.clear()
             elif self._cursors.pop(m.group(1).lower(), None) is None:
-                err = UnsupportedQueryError(
-                    f'cursor "{m.group(1)}" does not exist')
-                err.sqlstate = "34000"
-                raise err
+                raise UnsupportedQueryError(
+                    f'cursor "{m.group(1)}" does not exist', "34000")
             out = self._ok("CLOSE CURSOR")
             out._pg_tag = "CLOSE CURSOR"
             return out
@@ -1096,9 +1034,7 @@ class PgSession:
         files for in-flight readers). RENAME and TRUNCATE are metadata-only
         here too."""
         if self.catalog is None:
-            err = UnsupportedQueryError("table DDL requires a table catalog")
-            err.sqlstate = "42601"
-            raise err
+            raise UnsupportedQueryError("table DDL requires a table catalog", "42601")
         from bemidb_spark.pgcompat.types import spark_field
         from bemidb_spark.sources.writer import read_table, replace_table
 
@@ -1194,6 +1130,7 @@ class PgSession:
         """
         if upper.startswith("ANALYZE"):
             return self._ok("ANALYZE")
+        self._outside_block("VACUUM")
         if self.catalog is None:
             return self._ok("VACUUM")
         from bemidb_spark.sources.writer import compact_table
@@ -1298,29 +1235,21 @@ class PgSession:
             return self._handle_set(sql)
         if upper.startswith("SHOW "):
             return self._handle_show(sql)
-        if upper in ("BEGIN", "COMMIT", "ROLLBACK", "END", "DISCARD ALL") or upper.startswith(
-            ("BEGIN ", "START TRANSACTION")
-        ):
-            word = upper.split()[0]
-            if word in ("BEGIN", "START"):
+        m = _TXN_CONTROL_RE.fullmatch(upper)
+        if m:
+            if m.group(1) or m.group(2):
                 self._begin_txn()
-                self._txn_open = True
                 return self._ok("BEGIN")
-            if word == "ROLLBACK":
-                self._rollback_txn()
-                self._close_txn_cursors()
-                self._restore_local_sets()
-                return self._ok("ROLLBACK")
-            self._restore_local_sets()
-            self._end_txn()  # COMMIT / END / DISCARD ALL: writes are durable
-            self._release_txn_lock()
-            self._close_txn_cursors()
-            if word == "DISCARD":  # DISCARD ALL resets the whole session
-                self._cursors.clear()
-                self._sql_prepared.clear()
-                self.invalidate_plans()
-            return self._ok(word)
-        if upper.startswith(("SAVEPOINT ", "RELEASE ", "ROLLBACK TO ")):
+            commit = m.group(3) in ("COMMIT", "END")
+            self._end_txn(commit)
+            return self._ok("COMMIT" if commit else "ROLLBACK")
+        if upper == "DISCARD ALL":  # resets the whole session
+            self._outside_block("DISCARD ALL")
+            self._cursors.clear()
+            self._sql_prepared.clear()
+            self.invalidate_plans()
+            return self._ok("DISCARD")
+        if upper.startswith(("SAVEPOINT ", "RELEASE ", "ROLLBACK ")):
             out = self._handle_savepoint(stripped, upper)
             if out is not None:
                 return out
@@ -1486,9 +1415,7 @@ class PgSession:
                 with self._write_guard():
                     res = handle_dml(self.spark, self.catalog, stripped)
             except DmlError as exc:
-                err = UnsupportedQueryError(str(exc))
-                err.sqlstate = exc.sqlstate
-                raise err from exc
+                raise UnsupportedQueryError(str(exc), exc.sqlstate) from exc
             if res is not None:
                 head, n, returning = res
                 # the write committed a new version of its table: rebind it

@@ -201,6 +201,8 @@ class MiniPgClient:
                 out["rows"].append(row)
             elif t == b"C":
                 out["tags"].append(body.rstrip(b"\x00").decode())
+            elif t == b"Z":  # ReadyForQuery: the transaction status
+                out["status"] = body.decode()
             elif t == b"E":
                 fields = {}
                 for part in body.split(b"\x00"):

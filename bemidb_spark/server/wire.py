@@ -546,7 +546,8 @@ class _Conn:
         self.sock.sendall(msg_type + struct.pack("!I", len(payload) + 4) + payload)
 
     def _send_ready(self) -> None:
-        self._send(b"Z", b"I")
+        # transaction status: T inside a transaction block, I outside
+        self._send(b"Z", b"T" if self.session._txn is not None else b"I")
 
     # Spark error class -> pg SQLSTATE (clients branch on these; the
     # reference maps common errors the same way, SURVEY known-hard list)
@@ -862,10 +863,8 @@ class _Conn:
 
     @staticmethod
     def _timeout_error() -> UnsupportedQueryError:
-        err = UnsupportedQueryError(
-            "canceling statement due to statement timeout")
-        err.sqlstate = "57014"
-        return err
+        return UnsupportedQueryError(
+            "canceling statement due to statement timeout", "57014")
 
     def _run_statement(self, sql: str) -> None:
         with self._statement_deadline():
@@ -984,10 +983,8 @@ class _Conn:
                 if m.group(2) else [f.name for f in target.schema.fields])
         unknown = [c for c in cols if c not in fields]
         if unknown:
-            err = UnsupportedQueryError(
-                f'column "{unknown[0]}" of relation "{table}" does not exist')
-            err.sqlstate = "42703"
-            raise err
+            raise UnsupportedQueryError(
+                f'column "{unknown[0]}" of relation "{table}" does not exist', "42703")
         opts = m.group(3) or ""
         csv = re.search(r"\bCSV\b|FORMAT\s+CSV", opts, re.IGNORECASE) is not None
         binary = re.search(r"\bBINARY\b|FORMAT\s+BINARY", opts, re.IGNORECASE) is not None
@@ -1003,10 +1000,8 @@ class _Conn:
             elif t == b"c":  # CopyDone
                 break
             elif t == b"f":  # CopyFail
-                err = UnsupportedQueryError(
-                    "COPY from stdin failed: " + body.rstrip(b"\x00").decode())
-                err.sqlstate = "57014"
-                raise err
+                raise UnsupportedQueryError(
+                    "COPY from stdin failed: " + body.rstrip(b"\x00").decode(), "57014")
             elif t in (b"H", b"S"):  # Flush/Sync mid-copy: ignore
                 continue
             else:
@@ -1031,10 +1026,8 @@ class _Conn:
                                 for v in line.split("\t")])
         bad = next((r for r in records if len(r) != n), None)
         if bad is not None:
-            err = UnsupportedQueryError(
-                f"row contains {len(bad)} columns, expected {n}")
-            err.sqlstate = "22P04"
-            raise err
+            raise UnsupportedQueryError(
+                f"row contains {len(bad)} columns, expected {n}", "22P04")
         str_schema = T.StructType([T.StructField(c, T.StringType()) for c in cols])
         raw = self.spark.createDataFrame(records, str_schema)
         typed = raw.select(*[
@@ -1063,9 +1056,7 @@ class _Conn:
         through _decode_binary into pg text form so all three COPY formats
         share the text→column-type ingestion path."""
         if not data.startswith(_COPY_BIN_SIG):
-            err = UnsupportedQueryError("COPY file signature not recognized")
-            err.sqlstate = "22P04"
-            raise err
+            raise UnsupportedQueryError("COPY file signature not recognized", "22P04")
         pos = len(_COPY_BIN_SIG)
         records: list[list[str | None]] = []
         def _bad(msg: str) -> UnsupportedQueryError:
@@ -1073,9 +1064,7 @@ class _Conn:
             # validating here closes the nf/ln-driven infinite-loop / memory
             # blowup a hostile frame could otherwise cause (a cell length of
             # -6 advances pos by a net 0 per tuple — the loop never ends).
-            err = UnsupportedQueryError(msg)
-            err.sqlstate = "22P04"
-            return err
+            return UnsupportedQueryError(msg, "22P04")
 
         # Header: int32 flags + int32 extension length (skipped). Every
         # header field is length-checked BEFORE use so a truncated or
@@ -1313,11 +1302,8 @@ class _Conn:
             rfmts = list(struct.unpack_from(f"!{n_rfmt}H", body, off + 2))
             prep = self.prepared.get(stmt_name)
             if prep is None:
-                err = UnsupportedQueryError(
-                    f'prepared statement "{stmt_name}" does not exist'
-                )
-                err.sqlstate = "26000"
-                raise err
+                raise UnsupportedQueryError(
+                    f'prepared statement "{stmt_name}" does not exist', "26000")
             self.portals[portal] = _Prepared(
                 sql=self._substitute_params(prep.sql, params),
                 result_formats=rfmts,
@@ -1331,11 +1317,8 @@ class _Conn:
                 # like the reference (query_handler.go:201-202); clients
                 # (psycopg3) re-describe the bound portal.
                 if name not in self.prepared:
-                    err = UnsupportedQueryError(
-                        f'prepared statement "{name}" does not exist'
-                    )
-                    err.sqlstate = "26000"
-                    raise err
+                    raise UnsupportedQueryError(
+                        f'prepared statement "{name}" does not exist', "26000")
                 # ParameterDescription first (psycopg3 reads it to plan its
                 # Bind); OID 0 = unspecified, as pg sends for un-inferred
                 # params — clients then bind text-format values.
@@ -1345,9 +1328,7 @@ class _Conn:
                 return
             target = self.portals.get(name)
             if target is None:
-                err = UnsupportedQueryError(f'portal "{name}" does not exist')
-                err.sqlstate = "34000"
-                raise err
+                raise UnsupportedQueryError(f'portal "{name}" does not exist', "34000")
             # Describe executes and caches — reference query_handler.go:205-209
             # (DML runs here for its tag; a SELECT's rows are fetched here,
             # or its stream started). Under the statement deadline: the
@@ -1389,9 +1370,7 @@ class _Conn:
         (max_rows,) = struct.unpack_from("!i", body, name_end + 1)
         portal = self.portals.get(name)
         if portal is None:
-            err = UnsupportedQueryError(f'portal "{name}" does not exist')
-            err.sqlstate = "34000"
-            raise err
+            raise UnsupportedQueryError(f'portal "{name}" does not exist', "34000")
         if not portal.sql.strip():
             self._send(b"I", b"")  # EmptyQueryResponse
             return
@@ -1590,9 +1569,7 @@ class WireServer:
             if conn is not None:
                 self.unregister_backend(conn.backend_pid)
                 try:
-                    # pg aborts an open transaction when the connection dies;
-                    # this also releases the global txn write lock so a
-                    # crashed client can't wedge other sessions' writes.
+                    # pg aborts an open transaction when the connection dies
                     conn.session.dispose()
                 except Exception:  # noqa: BLE001 — teardown must not raise
                     pass

@@ -11,11 +11,17 @@ runtime in this environment, the catalog is a JSON file beside the data.
 (``new_location``) and commits a new list (``commit_table``): the live list
 minus the files it replaces plus the files it wrote — the reference's
 per-file rewrite (iceberg_table_writer.go:304-378), done copy-on-write. A
-reader that resolved a list keeps reading it while writers commit, and
-ROLLBACK is a pointer restore. A file is deleted once no live list, no
-retained snapshot (the snapshot log, storage_utils.go:371-496) and no open
-transaction pin (``pin``, held in this process) references it; its commit
-directory goes with its last file.
+reader that resolved a list keeps reading it while writers commit. A file
+is deleted once no live list, no retained snapshot (the snapshot log,
+storage_utils.go:371-496) and no open transaction pin (held in this
+process) references it; its commit directory goes with its last file.
+
+**Transactions.** A transaction block writes into a ``Transaction``, a
+private overlay that stages the entries its writes change; nobody else
+sees them. COMMIT publishes them as one optimistic commit
+(``Catalog.publish``): it fails with 40001 when a staged table moved since
+the block first wrote it. ROLLBACK forgets the overlay and deletes the
+block's files; it commits nothing.
 
 **Versions.** The state carries monotonic counters next to the tables
 (``versions``): one per table, advanced by every commit that touches it,
@@ -24,10 +30,9 @@ renaming a table, view or materialized view, or changing a table's columns.
 Sessions key their caches on these: a data commit to one table rebinds and
 re-plans only what reads that table, and the pg_catalog emulation is rebuilt
 only when the schema counter moves (pg's per-relation relcache
-invalidation). Counters are stored, never derived from file times, and a
-restore (ROLLBACK) advances them like any other commit, so no two states a
-reader can observe share a version. A snapshot's ``id`` is its table's
-counter at the commit that made it.
+invalidation). Counters are stored, never derived from file times, and
+never rewound, so no two states a reader can observe share a version. A
+snapshot's ``id`` is its table's counter at the commit that made it.
 
 On a cluster this module is replaced 1:1 by an Iceberg JDBC/REST catalog;
 every write goes through ``commit_table`` so the swap is the only thing that
@@ -36,6 +41,7 @@ changes.
 
 from __future__ import annotations
 
+import copy
 import itertools
 import threading
 import time
@@ -47,15 +53,19 @@ _LOCK = threading.Lock()
 # superseded snapshots kept per table (time travel + in-flight readers)
 SNAPSHOT_RETENTION = 3
 
-# open transaction and savepoint pins: catalog file -> token -> what the
-# pinned state references (files, (table, snapshot id) pairs)
-_PINS: dict[str, dict[int, tuple[frozenset, frozenset]]] = {}
+# open transaction blocks' pins: catalog file -> token -> (files, (table,
+# snapshot id) pairs), see Transaction
+_PINS: dict[str, dict[int, tuple[set, set]]] = {}
 _PIN_TOKENS = itertools.count(1)
+# private versions a Transaction reads at: negative, unlike any counter
+_PRIVATE = itertools.count(1)
+_SECTIONS = ("tables", "views", "matviews")
 
 
 class CommitConflict(Exception):
-    """A commit removes a file that is no longer live: another writer
-    replaced it first (pg's serialization_failure)."""
+    """A commit removes a file that is no longer live, or publishes a key
+    that another writer committed since the block staged it (pg's
+    serialization_failure)."""
 
     sqlstate = "40001"
 
@@ -74,8 +84,7 @@ class Catalog:
     # -- storage ------------------------------------------------------------
     def version(self) -> int:
         """The commit counter: advanced by every commit that changes what a
-        read can see (data or schema), never rewound — not even by a
-        restore of identical content."""
+        read can see (data or schema), never rewound."""
         return versions(self._read())["seq"]
 
     def schema_version(self) -> int:
@@ -155,43 +164,34 @@ class Catalog:
         with _LOCK:
             return self._read()
 
-    def pin(self) -> tuple[int, dict]:
-        """(token, current state); until ``unpin``, nothing the state
-        references is deleted (BEGIN / SAVEPOINT)."""
+    def publish(self, txn: Transaction) -> None:
+        """COMMIT a transaction block as one catalog commit. Every staged key
+        must still be at the committed version it was first staged against
+        (an absent key counts as a version), else the block's files are
+        deleted and CommitConflict (40001) is raised. A staged table gets one
+        new snapshot, built against its committed entry."""
         with _LOCK:
             state = self._read()
-            token = next(_PIN_TOKENS)
-            _PINS.setdefault(self._path, {})[token] = tuple(
-                frozenset(r) for r in _refs(state["tables"]))
-        return token, state
-
-    def unpin(self, token: int) -> None:
-        """Release a pin, deleting what only it kept alive."""
-        with _LOCK:
-            refs = _PINS.get(self._path, {}).pop(token, None)
-            if refs is not None:
-                self._collect(refs, self._read())
-
-    def restore_state(self, state: dict) -> None:
-        """Atomically restore a pinned state (ROLLBACK) and delete the files
-        that only the aborted state referenced.
-
-        The pinned counters are NOT restored: the restore is a new commit
-        that advances the counter of every table in either state and, when
-        the table set, a table's columns, or the view definitions differ,
-        the schema counter."""
-        with _LOCK:
-            current = self._read()
-            restored = {k: v for k, v in state.items() if k != "versions"}
-            restored["versions"] = versions(current)
-            self._commit(
-                restored,
-                touched=tuple(set(current["tables"]) | set(state["tables"])),
-                ddl=_schema_of(current) != _schema_of(state),
-            )
-            self._collect(_refs(current["tables"]), restored)
-        for key, entry in restored["tables"].items():
-            if current["tables"].get(key) != entry:
+            moved = [key for (section, key) in txn.staged
+                     if _stamp(state, section, key) != txn.bases[section, key]]
+            if moved:
+                txn.end(state)
+                raise CommitConflict(
+                    f"could not serialize access to {moved[0]} due to a "
+                    "concurrent update")
+            for (section, key), (entry, _) in txn.staged.items():
+                prev = state.setdefault(section, {}).pop(key, None)
+                if section == "tables" and entry is not None:
+                    entry = dict(entry)
+                    _succeed(state, key, entry, prev)
+                if entry is not None:
+                    state[section][key] = entry
+            tables = [key for section, key in txn.staged if section == "tables"]
+            if txn.staged:  # a block that wrote nothing commits nothing
+                self._commit(state, touched=tuple(tables), ddl=txn.schema_at is not None)
+            txn.end(state)  # what the new state no longer names goes
+        for key in tables:
+            if key in state["tables"]:
                 self._emit(*key.split(".", 1))
 
     # -- tables -------------------------------------------------------------
@@ -234,8 +234,8 @@ class Catalog:
         key = self._key(schema, table)
         with _LOCK:
             state = self._read()
-            prev = state["tables"].get(key) or {"files": [], "snapshots": []}
-            live = prev["files"]
+            prev = state["tables"].get(key)
+            live = prev["files"] if prev else []
             gone = set(live) if removed is None else set(removed)
             if not gone <= set(live):
                 for cdir in {_commit_dir(p) for p in added}:
@@ -243,21 +243,15 @@ class Catalog:
                 raise CommitConflict(
                     f"could not serialize access to {key} due to a "
                     "concurrent update")
-            entry = {
-                "id": versions(state)["tables"].get(key, 0) + 1,
-                "files": [f for f in live if f not in gone] + list(added),
-                "columns": columns or prev["columns"],
-                "snapshots": prev["snapshots"] + (
-                    [{"id": prev["id"], "files": live, "at": time.time()}]
-                    if "id" in prev else []),
-            }
-            carried = props if props is not None else prev.get("props")
+            entry = {"files": [f for f in live if f not in gone] + list(added),
+                     "columns": columns or prev["columns"]}
+            carried = props if props is not None else (prev or {}).get("props")
             if carried:
                 entry["props"] = carried
+            expired = _succeed(state, key, entry, prev)
             state["tables"][key] = entry
-            expired = _trim(entry, SNAPSHOT_RETENTION)
             self._commit(state, touched=(key,),
-                         ddl=prev.get("columns") != entry["columns"])
+                         ddl=(prev or {}).get("columns") != entry["columns"])
             self._collect(_snap_refs((key, s) for s in expired), state)
         self._emit(schema, table)
 
@@ -362,6 +356,95 @@ class Catalog:
                 self._commit(state, ddl=True)
 
 
+class Transaction(Catalog):
+    """A transaction block's private overlay on a catalog.
+
+    Reads see the committed state with the block's staged entries laid over
+    it (``None`` is a drop): a table the block wrote reads as staged, at a
+    private version, every other table as latest committed. Writers take it
+    wherever they take a Catalog: ``_commit`` and ``_write`` stage what a
+    write changes instead of writing the catalog file. Until the block ends
+    nothing is collected or emitted, and its pin holds the files it wrote
+    and the committed files of every table it staged."""
+
+    def __init__(self, catalog: Catalog) -> None:
+        self.root, self._path, self.committed = catalog.root, catalog._path, catalog
+        # (section, key) -> (entry, private version); the committed version
+        # each key was first staged against; the private schema version
+        # once the block staged DDL
+        self.staged: dict[tuple[str, str], tuple[dict | None, int]] = {}
+        self.bases: dict[tuple[str, str], object] = {}
+        self.schema_at: int | None = None
+        self._token = next(_PIN_TOKENS)
+
+    def _read(self) -> dict:
+        state = fs.read_json(self._path)
+        state.setdefault("views", {})
+        v = versions(state)
+        for (section, key), (entry, at) in self.staged.items():
+            state[section].pop(key, None)
+            if entry is not None:  # callers edit the entries they read
+                state[section][key] = copy.deepcopy(entry)
+            if section == "tables":
+                v["tables"][key] = at
+        if self.schema_at is not None:  # still moves with committed DDL
+            v["schema"] = (v["schema"], self.schema_at)
+        state["versions"] = v
+        return state
+
+    def _commit(self, state: dict, touched: tuple[str, ...] = (),
+                ddl: bool = False) -> None:
+        self._write(state)
+        if ddl:
+            self.schema_at = -next(_PRIVATE)
+
+    def _write(self, state: dict) -> None:
+        """Stage every entry ``state`` changes against the overlay."""
+        committed, before = fs.read_json(self._path), self._read()
+        pinned = _PINS.setdefault(self._path, {}).setdefault(self._token, (set(), set()))
+        for section in _SECTIONS:
+            old, new = before[section], state.get(section, {})
+            for key in old.keys() | new.keys():
+                if old.get(key) == new.get(key):
+                    continue
+                if (section, key) not in self.bases:
+                    self.bases[section, key] = _stamp(committed, section, key)
+                    if section == "tables" and key in committed["tables"]:
+                        for mine, refs in zip(pinned, _refs(
+                                {key: committed["tables"][key]})):
+                            mine |= refs
+                self.staged[section, key] = (new.get(key), -next(_PRIVATE))
+                if section == "tables" and key in new:
+                    pinned[0].update(new[key]["files"])
+
+    def _collect(self, candidates: tuple, state: dict) -> None:
+        pass  # the block's end collects
+
+    def _emit(self, schema: str, table: str) -> None:
+        pass  # publish emits
+
+    def savepoint(self) -> tuple:
+        return dict(self.staged), dict(self.bases), self.schema_at
+
+    def rollback_to(self, saved: tuple) -> None:
+        """A key staged after the savepoint reads latest committed again, so
+        its next write stages against that version."""
+        staged, bases, self.schema_at = saved
+        self.staged, self.bases = dict(staged), dict(bases)
+
+    def abort(self) -> None:
+        """ROLLBACK: forget the staged entries and delete the block's files.
+        Nothing is committed, so no counter moves."""
+        with _LOCK:
+            self.end(fs.read_json(self._path))
+
+    def end(self, state: dict) -> None:
+        """Release the block's pin, deleting what it held that ``state`` and
+        other pins no longer reference. Callers hold _LOCK."""
+        pinned = _PINS.get(self._path, {}).pop(self._token, (set(), set()))
+        self.committed._collect(pinned, state)
+
+
 def versions(state: dict) -> dict:
     """A state's counters — ``seq`` (every commit), ``schema`` (DDL) and
     ``tables`` (per table) — as a fresh dict; zeros for a state written
@@ -393,6 +476,16 @@ def _snap_refs(snaps) -> tuple[set, set]:
     return files, ids
 
 
+def _succeed(state: dict, key: str, entry: dict, prev: dict | None) -> list[dict]:
+    """Make ``entry`` table ``key``'s next snapshot after ``prev`` (None: a
+    new table): its ``id`` and a snapshot log that prev's live list joins,
+    trimmed to SNAPSHOT_RETENTION. Returns the expired snapshots."""
+    entry["id"] = versions(state)["tables"].get(key, 0) + 1
+    entry["snapshots"] = prev["snapshots"] + [
+        {"id": prev["id"], "files": prev["files"], "at": time.time()}] if prev else []
+    return _trim(entry, SNAPSHOT_RETENTION)
+
+
 def _trim(entry: dict, keep: int) -> list[dict]:
     """Cut an entry's snapshot log to its newest ``keep``; return the rest."""
     snaps = entry.get("snapshots", [])
@@ -410,11 +503,9 @@ def _commit_dir(path: str) -> str:
     return d
 
 
-def _schema_of(state: dict) -> tuple:
-    """What the schema counter versions: table names and columns, view and
-    materialized-view definitions."""
-    return (
-        sorted((k, repr(e.get("columns"))) for k, e in state["tables"].items()),
-        sorted((k, repr(e)) for k, e in state.get("views", {}).items()),
-        sorted((k, repr(e)) for k, e in state.get("matviews", {}).items()),
-    )
+def _stamp(state: dict, section: str, key: str) -> object:
+    """A key's committed version: a table's counter (None before its first
+    commit), a view's or materialized view's entry."""
+    if section == "tables":
+        return versions(state)["tables"].get(key)
+    return state.get(section, {}).get(key)

@@ -187,6 +187,11 @@ def test_plan_cache_mode_reexecute(pg):
 
 def test_begin_discard_noop(pg):
     assert pg.execute("BEGIN").collect() == []
+    # pg runs DISCARD ALL only outside a transaction block
+    with pytest.raises(UnsupportedQueryError) as exc:
+        pg.execute("DISCARD ALL")
+    assert exc.value.sqlstate == "25001"
+    assert pg.execute("COMMIT").collect() == []
     assert pg.execute("DISCARD ALL").collect() == []
 
 

@@ -985,6 +985,31 @@ def test_transaction_rollback_over_wire(copy_server):
         c.close()
 
 
+def test_ready_for_query_reports_transaction_status(copy_server):
+    """ReadyForQuery carries T inside a transaction block and I outside it,
+    also after a COMMIT that fails with 40001 (it ends the block)."""
+    c = MiniPgClient(copy_server.host, copy_server.port)
+    other = MiniPgClient(copy_server.host, copy_server.port)
+    try:
+        c.query("CREATE TABLE wire_status (id bigint)")
+        assert c.query("SELECT 1")["status"] == "I"
+        assert c.query("BEGIN; INSERT INTO wire_status VALUES (1)")["status"] == "T"
+        assert c.query("COMMIT")["status"] == "I"
+        assert c.query("BEGIN")["status"] == "T"
+        assert c.query("ROLLBACK")["status"] == "I"
+        assert c.query("BEGIN; INSERT INTO wire_status VALUES (2)")["status"] == "T"
+        assert other.query("INSERT INTO wire_status VALUES (3)")["errors"] == []
+        r = c.query("COMMIT")
+        assert [e["C"] for e in r["errors"]] == ["40001"]
+        assert r["status"] == "I"
+        r = c.query("SELECT id FROM wire_status ORDER BY id")
+        assert r["rows"] == [["1"], ["3"]]
+        c.query("DROP TABLE wire_status")
+    finally:
+        other.close()
+        c.close()
+
+
 def test_large_result_streams_all_partitions(client):
     """A multi-partition result set arrives completely through the simple-
     query path (one capped fetch here; a result over the cap streams, see

@@ -433,9 +433,7 @@ def test_delete_emptying_all_buckets_keeps_table_readable(spark, catalog):
 def test_catalog_versions_are_stored_counters(tmp_path, monkeypatch):
     """version() is a stored counter, not the state file's mtime: commits
     inside one mtime tick still advance it, a per-table counter moves only
-    for the table a commit touches, schema_version only for DDL, and a
-    restore of byte-identical content (ROLLBACK) still advances the
-    counters instead of rewinding them."""
+    for the table a commit touches, and schema_version only for DDL."""
     from bemidb_spark.sources import fs
     from bemidb_spark.sources.catalog import versions
 
@@ -456,16 +454,6 @@ def test_catalog_versions_are_stored_counters(tmp_path, monkeypatch):
     assert table_version("public.t") == 2
     cat.commit_table("public", "u", [str(tmp_path / "u1.parquet")], columns=cols)
     assert table_version("public.t") == 2  # another table's commit
-
-    pinned = cat.snapshot_state()
-    v, s, t = cat.version(), cat.schema_version(), table_version("public.t")
-    cat.restore_state(pinned)  # byte-identical content
-    assert cat.version() > v and table_version("public.t") > t
-    assert cat.schema_version() == s
-    assert cat.snapshot_state()["tables"] == pinned["tables"]
-
+    s = cat.schema_version()
     cat.drop_table("public", "u")
-    s, u = cat.schema_version(), table_version("public.u")
-    cat.restore_state(pinned)  # brings u back: DDL, counters move forward
-    assert "public.u" in cat.tables()
-    assert cat.schema_version() > s and table_version("public.u") > u
+    assert cat.schema_version() > s  # a drop is DDL
